@@ -82,8 +82,7 @@ def main(argv: list[str] | None = None) -> int:
             n = idempotent_append_parquet(spark, out, args.parquet)
         else:
             path = args.output or f"bq_export_{date_from}_to_{date_to}"
-            export_csv(out, path, single_file=args.single_file)
-            n = out.count()
+            n = export_csv(out, path, single_file=args.single_file)
         log.info("extracted %d rows in %.1fs", n, time.time() - t0)
         return 0
     except Exception:

@@ -1,5 +1,5 @@
 """Environment configuration — parity with the reference's env-var
-surface (.env.example:1-27, extract_bq.py:37-49, flask_server.py:49,
+surface (.env.example:1-27, extract_bq.py:330, flask_server.py:49,
 64, 279-289).
 
 Every getter reads the environment at call time (not import time) so
@@ -54,28 +54,3 @@ def batch_size() -> int:
 def service_port() -> int:
     """FLASK_PORT — HTTP control-plane port (.env.example:24)."""
     return _int_env("FLASK_PORT", 5000)
-
-
-def pg_table() -> str:
-    return os.getenv("PG_TABLE", "application_events")
-
-
-def pg_dsn() -> str:
-    """PostgreSQL DSN from PG_* vars (extract_bq.py:37-43)."""
-    host = os.getenv("PG_HOST", "localhost")
-    port = os.getenv("PG_PORT", "5432")
-    db = os.getenv("PG_DATABASE", "")
-    user = os.getenv("PG_USER", "")
-    pw = os.getenv("PG_PASSWORD", "")
-    return f"host={host} port={port} dbname={db} user={user} password={pw}"
-
-
-def bq_source() -> dict:
-    """BigQuery source settings (extract_bq.py:44-49)."""
-    return {
-        "project": os.getenv("BQ_PROJECT_ID", ""),
-        "dataset": os.getenv("BQ_DATASET", ""),
-        "table_prefix": os.getenv("BQ_TABLE_PREFIX", "events_"),
-        "location": os.getenv("BQ_LOCATION", "US"),
-        "credentials_path": os.getenv("BQ_CREDENTIALS_PATH", ""),
-    }

@@ -115,10 +115,6 @@ def _ntz_to_session_tz(dt: T.DataType) -> T.DataType:
     return dt
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [load_table(spark, sf_dir, n) for n in names]
-
-
 def parallelize(df: DataFrame) -> DataFrame:
     """Ensure enough input partitions for CPU-bound row-expanding
     operators (shingle explode, per-token hashing).

@@ -60,69 +60,74 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
 
-    for _ in range(max_iter):
-        # hop step: take the min of own and neighbors' labels
-        nbr_min = (
-            edges.join(labels, edges.v == labels.node)
-            .groupBy("u")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        # prev rides along so convergence is a column compare on the
-        # materialized frame, not a second |V| join against the old
-        # labels (r15: one join + one dedicated job fewer per round)
-        stepped = labels.join(nbr_min, labels.node == nbr_min.u, "left").select(
-            "node",
-            F.col("comp").alias("prev"),
-            F.least(
-                F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
-            ).alias("comp"),
-        )
-        # pointer-jump step: comp ← label(comp). Combined with the hop
-        # this converges in O(log diameter) rounds instead of
-        # O(diameter) — the difference between 5 and 10^5 rounds on a
-        # pathological chain.
-        jumped = (
-            stepped.alias("s")
-            .join(
-                labels.select(
-                    F.col("node").alias("jnode"), F.col("comp").alias("jcomp")
-                ),
-                F.col("s.comp") == F.col("jnode"),
-                "left",
+    # labels are checkpointed every round, so the result does not
+    # depend on the edge cache: release it on either loop exit
+    try:
+        for _ in range(max_iter):
+            # hop step: take the min of own and neighbors' labels
+            nbr_min = (
+                edges.join(labels, edges.v == labels.node)
+                .groupBy("u")
+                .agg(F.min("comp").alias("nbr_comp"))
             )
-            .select(
-                F.col("s.node").alias("node"),
-                F.col("s.prev").alias("prev"),
+            # prev rides along so convergence is a column compare on the
+            # materialized frame, not a second |V| join against the old
+            # labels (r15: one join + one dedicated job fewer per round)
+            stepped = labels.join(nbr_min, labels.node == nbr_min.u, "left").select(
+                "node",
+                F.col("comp").alias("prev"),
                 F.least(
-                    F.col("s.comp"), F.coalesce(F.col("jcomp"), F.col("s.comp"))
+                    F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
                 ).alias("comp"),
             )
-            # lazy: the convergence count below is the first action and
-            # materializes the checkpoint inside its own job — an eager
-            # checkpoint here would add a dedicated per-round job that
-            # computes the identical frame (the r14 lazy-checkpoint
-            # discipline extended to this loop)
-            .localCheckpoint(eager=False)
-        )
-        # scalar convergence check — an aggregate over the checkpoint
-        # being materialized, not a data collect and (since r15) not a
-        # join: prev was carried through the step
-        changed = jumped.where(F.col("comp") != F.col("prev")).count()
-        labels = jumped.select("node", "comp")
-        if changed == 0:
-            break
-    else:
-        # exiting via the backstop means labels are NOT a fixpoint —
-        # silently returning would hand dup_clusters split clusters
-        # (several "canonical" survivors per true cluster) with no
-        # signal. Raise so callers can widen max_iter or switch to
-        # connected_components_star (O(log n) on adversarial chains).
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); the pair graph has a "
-            "pathological diameter — raise max_iter or use "
-            "connected_components_star"
-        )
+            # pointer-jump step: comp ← label(comp). Combined with the hop
+            # this converges in O(log diameter) rounds instead of
+            # O(diameter) — the difference between 5 and 10^5 rounds on a
+            # pathological chain.
+            jumped = (
+                stepped.alias("s")
+                .join(
+                    labels.select(
+                        F.col("node").alias("jnode"), F.col("comp").alias("jcomp")
+                    ),
+                    F.col("s.comp") == F.col("jnode"),
+                    "left",
+                )
+                .select(
+                    F.col("s.node").alias("node"),
+                    F.col("s.prev").alias("prev"),
+                    F.least(
+                        F.col("s.comp"), F.coalesce(F.col("jcomp"), F.col("s.comp"))
+                    ).alias("comp"),
+                )
+                # lazy: the convergence count below is the first action and
+                # materializes the checkpoint inside its own job — an eager
+                # checkpoint here would add a dedicated per-round job that
+                # computes the identical frame (the r14 lazy-checkpoint
+                # discipline extended to this loop)
+                .localCheckpoint(eager=False)
+            )
+            # scalar convergence check — an aggregate over the checkpoint
+            # being materialized, not a data collect and (since r15) not a
+            # join: prev was carried through the step
+            changed = jumped.where(F.col("comp") != F.col("prev")).count()
+            labels = jumped.select("node", "comp")
+            if changed == 0:
+                break
+        else:
+            # exiting via the backstop means labels are NOT a fixpoint —
+            # silently returning would hand dup_clusters split clusters
+            # (several "canonical" survivors per true cluster) with no
+            # signal. Raise so callers can widen max_iter or switch to
+            # connected_components_star (O(log n) on adversarial chains).
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds "
+                f"({changed} labels still changing); the pair graph has a "
+                "pathological diameter — raise max_iter or use "
+                "connected_components_star"
+            )
+    finally:
+        edges.unpersist()
     return labels
 
 

@@ -151,9 +151,9 @@ class EtlService:
             # contract); in this long-lived session that would
             # accumulate cached frames across daily runs — each run's
             # caches die with the run instead. Safe because the run is
-            # fully materialized (results written + counted) before
-            # the scope exits, and the service holds no cross-run
-            # caches of its own.
+            # fully materialized (results written, counts observed in
+            # the write job) before the scope exits, and the service
+            # holds no cross-run caches of its own.
             with scoped_cache(self.spark):
                 self.last_result = run_incremental_etl(
                     self.spark,

@@ -22,20 +22,24 @@ import os
 import time
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..schemas import APPLICATION_EVENTS_DEDUP_KEY, CSV_EXPORT_COLUMNS
 
 
-def export_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
+def export_csv(df: DataFrame, path: str, single_file: bool = False) -> int:
     """K1 — CSV export with the reference's exact column order
     (extract_bq.py:149). ``single_file`` coalesces to one part for
     byte-level golden-file parity; leave False at scale (parallel
-    part files)."""
+    part files). Returns the rows written, counted by the write job."""
     out = df.select(*[c for c in CSV_EXPORT_COLUMNS if c in df.columns] or df.columns)
     if single_file:
         out = out.coalesce(1)
+    written = Observation()
+    out = out.observe(written, F.count(F.lit(1)).alias("n"))
     out.write.mode("overwrite").option("header", True).csv(path)
+    return written.get["n"]
 
 
 class TargetLock:
@@ -124,7 +128,8 @@ def idempotent_append_parquet(
        streaming/incremental covers threads, not processes).
 
     Returns the number of rows actually inserted (A3, the reference's
-    ``records_inserted``). Re-running the same batch inserts 0.
+    ``records_inserted``), counted by the write job itself: the batch
+    is evaluated once. Re-running the same batch inserts 0.
     """
     keys = keys or APPLICATION_EVENTS_DEDUP_KEY
     with TargetLock(target_path) if lock else contextlib.nullcontext():
@@ -167,20 +172,19 @@ def idempotent_append_parquet(
             if "PATH_NOT_FOUND" not in str(e) and "UNABLE_TO_INFER_SCHEMA" not in str(e):
                 raise
             # first load — no target yet
-        # persist so count and write share one evaluation of the
-        # anti-join plan — otherwise records_inserted could disagree
-        # with the rows actually committed if the source moved between
-        # the two jobs
-        batch = batch.persist()
-        try:
-            inserted = batch.count()
-            writer = batch.write.mode("append")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(target_path)
-        finally:
-            batch.unpersist()
-        return inserted
+        # one evaluation of the anti-join plan both counts and writes,
+        # so records_inserted equals the rows committed even if the
+        # source moves. The observe point sits above the last exchange,
+        # in the write's result stage, where Spark applies each task's
+        # update once (a map-stage count could double on a re-run).
+        inserted = Observation()
+        writer = batch.observe(inserted, F.count(F.lit(1)).alias("n")).write.mode("append")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(target_path)
+        # read only after the write returned: a failed write raises
+        # above, before the observation is read
+        return inserted.get["n"]
 
 
 # ---------------------------------------------------------------------
@@ -560,8 +564,6 @@ def write_training_shards(
     Returns {rows, files, shards} for the run (counted from the
     committed output, not the plan).
     """
-    from pyspark.sql import functions as F
-
     (
         df.repartition(n_shards, F.col(shard_col))
         .sortWithinPartitions(*(order_cols or [shard_col]))
@@ -599,8 +601,6 @@ def write_daily_partitions(
     to this writer, not a session-level config flip). Returns the
     distinct days written.
     """
-    from pyspark.sql import functions as F
-
     out = df.withColumn("day", F.col(ts_col).cast("date"))
     (
         out.write.mode("overwrite")

@@ -15,6 +15,12 @@ Semantics preserved 1:1 (SURVEY §2.9):
   (the streaming variant adds an explicit lateness allowance instead);
 - ST8: the same progress-record shape the reference exposes at
   /status (flask_server.py:210-221).
+
+A parquet-sink run reads the source once, like the reference's single
+fetch-then-insert (flask_server.py:142-196): the batch's row count and
+max timestamp, and the sink's inserted count, are ``Observation``s on
+the sink's one write job — no stats job, no cache. The JDBC sink keeps
+a stats job first, so an idle run skips the database round trip.
 """
 
 from __future__ import annotations
@@ -22,7 +28,7 @@ from __future__ import annotations
 import threading
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
@@ -68,31 +74,41 @@ def run_incremental_etl(
         wm = read_watermark_us(state_path, lookback_hours, now_us=now_us)
         events = load_table(spark, source_sf_dir, "events")
         batch = flagship_pipeline(events, tracked=tracked, watermark_us=wm)
-        stats = batch.agg(
-            F.count(F.lit(1)).alias("n"), F.max("event_timestamp").alias("max_ts")
-        ).first()
-        fetched, max_ts = stats["n"], stats["max_ts"]
-        if jdbc_target is not None and fetched == 0:
+        stats = (F.count(F.lit(1)).alias("n"), F.max("event_timestamp").alias("max_ts"))
+        if jdbc_target is None:
+            # one pass: the batch stats ride on the sink's write job,
+            # read after it returns. This observe point sits upstream
+            # of the sink's dedup and anti-join; if the plan shuffles
+            # in between, it lands in a map stage that a failure can
+            # re-run. max_ts is a max, so a re-run cannot corrupt it;
+            # the count is only reported (records_inserted is counted
+            # in the write's result stage)
+            observed = Observation()
+            inserted = idempotent_append_parquet(
+                spark, batch.observe(observed, *stats), target_path
+            )
+            fetched, max_ts = observed.get["n"], observed.get["max_ts"]
+        else:
+            row = batch.agg(*stats).first()
+            fetched, max_ts = row["n"], row["max_ts"]
             # idle trigger (the common daily case): skip the sink —
             # the JDBC path would otherwise run staging DDL + a MERGE
             # against the live database to insert nothing
             inserted = 0
-        elif jdbc_target is not None:
-            from ..schemas import APPLICATION_EVENTS_DEDUP_KEY
-            from ..sources.sinks import write_jdbc_merge_append
+            if fetched:
+                from ..schemas import APPLICATION_EVENTS_DEDUP_KEY
+                from ..sources.sinks import write_jdbc_merge_append
 
-            inserted = write_jdbc_merge_append(
-                batch,
-                jdbc_target["url"],
-                jdbc_target["table"],
-                conflict_keys=jdbc_target.get(
-                    "conflict_keys", list(APPLICATION_EVENTS_DEDUP_KEY)
-                ),
-                driver=jdbc_target.get("driver"),
-                writer_options=jdbc_target.get("writer_options"),
-            )
-        else:
-            inserted = idempotent_append_parquet(spark, batch, target_path)
+                inserted = write_jdbc_merge_append(
+                    batch,
+                    jdbc_target["url"],
+                    jdbc_target["table"],
+                    conflict_keys=jdbc_target.get(
+                        "conflict_keys", list(APPLICATION_EVENTS_DEDUP_KEY)
+                    ),
+                    driver=jdbc_target.get("driver"),
+                    writer_options=jdbc_target.get("writer_options"),
+                )
         advanced = False
         if max_ts is not None and max_ts > wm:
             advanced = write_watermark_us(state_path, max_ts)  # ST4: after commit

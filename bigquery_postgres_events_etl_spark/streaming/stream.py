@@ -147,19 +147,6 @@ def streaming_tumbling_counts(
     )
 
 
-def streaming_session_counts(
-    events: DataFrame, gap: str = "30 minutes", lateness: str = "30 minutes"
-) -> DataFrame:
-    """Native session windows (gap-close semantics) — the streaming
-    twin of the batch sessionization operator."""
-    return (
-        events.withWatermark("ts", lateness)
-        .groupBy(F.session_window("ts", gap).alias("session"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", F.col("session.start").alias("session_start"), "n_events")
-    )
-
-
 def streaming_dedup_events(
     events: DataFrame,
     keys: list[str] | None = None,

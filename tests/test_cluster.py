@@ -114,3 +114,20 @@ def test_pointer_jumping_raises_on_nonconvergence(spark):
     df = spark.createDataFrame(chain, ["doc_a", "doc_b"])
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(df, max_iter=2)
+
+
+def test_connected_components_release_the_edge_cache(spark):
+    """The persisted edge frame is dropped on both loop exits; the
+    returned labels are checkpointed and stay readable without it."""
+    import pytest
+
+    from bigquery_postgres_events_etl_spark.cache import cached_dataframe_plans
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(0, 40)], ["doc_a", "doc_b"])
+    spark.catalog.clearCache()
+    labels = connected_components(chain)
+    assert not cached_dataframe_plans(spark)
+    assert {r.comp for r in labels.collect()} == {0}
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain, max_iter=2)
+    assert not cached_dataframe_plans(spark)

@@ -2,6 +2,14 @@
 
 from __future__ import annotations
 
+import os
+
+from pyspark.sql import functions as F
+
+from bigquery_postgres_events_etl_spark.io import load_table
+from bigquery_postgres_events_etl_spark.operators.etl import flagship_pipeline
+from bigquery_postgres_events_etl_spark.schemas import APPLICATION_EVENTS_DEDUP_KEY
+from bigquery_postgres_events_etl_spark.sources.sinks import idempotent_append_parquet
 from bigquery_postgres_events_etl_spark.sources.watermark import (
     read_watermark_us,
     write_watermark_us,
@@ -75,3 +83,121 @@ def test_error_lands_in_status(spark, tmp_path):
     )
     assert r["status"] == "error"
     assert "error" in r
+
+
+# -- one-pass contract --------------------------------------------------
+
+_SOURCE_SCAN = "events.parquet"  # load_table's file under the source dir
+
+
+def _source_scan_jobs(spark, group: str) -> int:
+    """Jobs of ``group`` that ran the events source scan.
+
+    A query runs each scan node in one stage of one of its jobs, so
+    this counts the group's SQL executions whose plan graph holds a
+    scan of the source that emitted rows. A scan inside a cached plan
+    counts only in the execution that materialized the cache."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    store = spark._jsparkSession.sharedState().statusStore()
+    executions = store.executionsList()
+    n = 0
+    for i in range(executions.size()):
+        e = executions.apply(i)
+        own = e.jobs()
+        if not any(own.contains(j) for j in jobs):
+            continue
+        values, it = {}, store.executionMetrics(e.executionId()).iterator()
+        while it.hasNext():
+            kv = it.next()
+            values[kv._1()] = kv._2()
+        nodes = store.planGraph(e.executionId()).allNodes()
+        for k in range(nodes.size()):
+            node = nodes.apply(k)
+            if not (node.name().startswith("Scan") and _SOURCE_SCAN in node.desc()):
+                continue
+            metrics = node.metrics()
+            rows = [
+                values.get(metrics.apply(m).accumulatorId(), "0")
+                for m in range(metrics.size())
+                if metrics.apply(m).name() == "number of output rows"
+            ]
+            n += any(r != "0" for r in rows)
+    return n
+
+
+def _batch(spark, sf_dir, wm):
+    return flagship_pipeline(load_table(spark, sf_dir, "events"), watermark_us=wm)
+
+
+def _two_pass(spark, sf_dir, wm, target):
+    """A trigger's record computed independently, one action per
+    figure: the batch's count and max timestamp, and the rows the
+    anti-join against the current target keeps."""
+    batch = _batch(spark, sf_dir, wm)
+    max_ts = batch.agg(F.max("event_timestamp")).first()[0]
+    new = batch
+    if os.path.exists(target):
+        keys = list(APPLICATION_EVENTS_DEDUP_KEY)
+        new = batch.join(spark.read.parquet(target).select(*keys), keys, "left_anti")
+    return {
+        "records_fetched": batch.count(),
+        "last_processed_timestamp": max_ts if max_ts is not None else wm,
+        "records_inserted": new.count(),
+    }
+
+
+def test_parquet_trigger_is_one_pass_and_matches_two_pass(spark, sf_dir, tmp_path):
+    """A parquet-sink trigger scans the source in one Spark job, and its
+    observed record equals a separate two-pass computation: a first
+    load, a new day (part new, part already loaded), an idle trigger
+    and a crash replay."""
+    state = str(tmp_path / "wm.txt")
+    target = str(tmp_path / "target")
+    late = EARLY_US + 25 * 24 * 3600 * 1_000_000
+    mid = EARLY_US + 15 * 24 * 3600 * 1_000_000
+    sc = spark.sparkContext
+    # (trigger, watermark written before it; None keeps the advanced one)
+    runs = [("first_load", late), ("new_day", mid), ("idle", None), ("replay", mid)]
+    records = {}
+    for kind, reset in runs:
+        if reset is not None:
+            with open(state, "w") as f:
+                f.write(str(reset))
+        wm = read_watermark_us(state, 1, now_us=NOW_US)
+        want = _two_pass(spark, sf_dir, wm, target)
+        group = f"one-pass-{kind}"
+        sc.setJobGroup(group, kind)
+        try:
+            got = run_incremental_etl(spark, sf_dir, state, target, now_us=NOW_US)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert got["status"] == "success", got
+        assert {k: got[k] for k in want} == want, kind
+        assert _source_scan_jobs(spark, group) == 1, kind
+        # commit-then-advance, to the observed max
+        assert read_watermark_us(state, 1, now_us=NOW_US) == max(wm, want["last_processed_timestamp"])
+        records[kind] = got
+    assert records["first_load"]["records_inserted"] > 0
+    assert 0 < records["new_day"]["records_inserted"] < records["new_day"]["records_fetched"]
+    assert records["idle"]["records_fetched"] == 0
+    assert records["replay"]["records_fetched"] > 0 == records["replay"]["records_inserted"]
+    committed = spark.read.parquet(target)
+    assert committed.count() == committed.dropDuplicates(list(APPLICATION_EVENTS_DEDUP_KEY)).count()
+
+
+def test_partitioned_append_counts_committed_rows(spark, sf_dir, tmp_path):
+    """``partition_by`` target: the inserted count equals the two-pass
+    anti-join count and the committed delta, on a first and a partly
+    overlapping second append."""
+    target = str(tmp_path / "target")
+    before = 0
+    for wm in (EARLY_US + 15 * 24 * 3600 * 1_000_000, EARLY_US):
+        want = _two_pass(spark, sf_dir, wm, target)["records_inserted"]
+        got = idempotent_append_parquet(
+            spark, _batch(spark, sf_dir, wm), target, partition_by=["event_date"]
+        )
+        after = spark.read.parquet(target).count()
+        assert got == want == after - before > 0
+        before = after

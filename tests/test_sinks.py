@@ -19,13 +19,16 @@ def test_csv_header_golden(spark, sf_dir, tmp_path):
     """K1 golden-file check: exact header line of extract_bq.py:149."""
     out = flagship_pipeline(load_table(spark, sf_dir, "events"))
     path = str(tmp_path / "export")
-    export_csv(out, path, single_file=True)
+    written = export_csv(out, path, single_file=True)
     parts = glob.glob(f"{path}/part-*.csv")
     assert len(parts) == 1
     with open(parts[0]) as f:
         header = f.readline().strip()
     assert header == "user_id,event_date,event_timestamp,event_name,event_id,event_name_detail"
     assert CSV_EXPORT_COLUMNS == header.split(",")
+    # the returned count comes from the write job and matches the file
+    back = spark.read.option("header", True).option("multiLine", True).csv(path)
+    assert written == back.count() == out.count() > 0
 
 
 def test_idempotent_append(spark, sf_dir, tmp_path):
