@@ -73,45 +73,77 @@ TIER2 = [
 ]
 
 
-def _shuffle_metrics(spark, names: list[str]) -> dict[str, dict]:
-    """Per-query shuffle bytes / task counts from the REST API — the
-    plan-health signal that grades rounds (wall clock on this shared
-    container has ±30% noise; shuffle bytes don't). Job groups tagged
-    ``{name}#r1`` (the steady-state second run) are aggregated over
-    non-skipped stages. Returns {} if the UI is unavailable."""
+def noop_run(spark, fn, sf_dir: str, group: str) -> float:
+    """Build ``fn(spark, sf_dir)`` and run it into the noop sink under
+    job group ``group``; return the wall seconds (build included). The
+    noop sink forces full plan execution with no driver collect —
+    results never leave the executors, as on a cluster. The one run
+    protocol the measurement tools share."""
+    spark.sparkContext.setJobGroup(group, group)
+    t0 = time.time()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.time() - t0
+
+
+def group_metrics(spark) -> dict[str, dict]:
+    """Per job group, from one read of the UI REST jobs and stages:
+    ``jobs``, ``job_s`` (summed submission → completion), and
+    ``tasks``, ``input_mb``, ``shuffle_read_mb`` and ``shuffle_mb``
+    (shuffle write) summed over non-skipped stages. Wall clock on a
+    shared machine swings ±30%; job counts and bytes don't, so these
+    are the plan-health signal. Callers strip their own group suffix.
+    Returns {} if the UI is unavailable or any read fails, so a caller
+    treats a failure as missing data; one that gates on these numbers
+    must assert its groups are present."""
     import urllib.request
 
+    sc = spark.sparkContext
+    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
+
+    def api(path: str):
+        with urllib.request.urlopen(f"{base}/{path}", timeout=30) as r:
+            return json.loads(r.read())
+
     try:
-        base = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
-
-        def api(path: str):
-            with urllib.request.urlopen(f"{base}/api/v1/{path}", timeout=30) as r:
-                return json.loads(r.read())
-
-        jobs = api(f"applications/{app_id}/jobs")
-        stages = {s["stageId"]: s for s in api(f"applications/{app_id}/stages")}
-        out: dict[str, dict] = {}
-        for job in jobs:
-            group = job.get("jobGroup") or ""
-            if not group.endswith("#r1"):
-                continue
-            name = group[: -len("#r1")]
-            if name not in names:
-                continue
-            m = out.setdefault(name, {"shuffle_mb": 0.0, "tasks": 0})
-            for sid in job.get("stageIds", []):
-                s = stages.get(sid)
-                if not s or s.get("status") == "SKIPPED":
-                    continue
-                m["shuffle_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
-                m["tasks"] += s.get("numCompleteTasks", 0)
-        return {
-            n: {"shuffle_mb": round(m["shuffle_mb"], 2), "tasks": m["tasks"]}
-            for n, m in out.items()
-        }
-    except Exception:
+        jobs = api("jobs")
+        stages = {s["stageId"]: s for s in api("stages")}
+        return _sum_by_group(jobs, stages)
+    except Exception:  # UI disabled or unreachable, or a malformed reply
         return {}
+
+
+def _sum_by_group(jobs: list[dict], stages: dict[int, dict]) -> dict[str, dict]:
+    from datetime import datetime
+
+    def ts(s: str) -> float:
+        return datetime.strptime(s[:23], "%Y-%m-%dT%H:%M:%S.%f").timestamp()
+
+    out: dict[str, dict] = {}
+    for job in jobs:
+        group = job.get("jobGroup")
+        if not group:
+            continue
+        m = out.setdefault(
+            group,
+            {"jobs": 0, "job_s": 0.0, "tasks": 0, "input_mb": 0.0,
+             "shuffle_read_mb": 0.0, "shuffle_mb": 0.0},
+        )
+        m["jobs"] += 1
+        if job.get("completionTime") and job.get("submissionTime"):
+            m["job_s"] += ts(job["completionTime"]) - ts(job["submissionTime"])
+        for sid in job.get("stageIds", []):
+            s = stages.get(sid)
+            if not s or s.get("status") == "SKIPPED":
+                continue
+            m["tasks"] += s.get("numCompleteTasks", 0)
+            m["input_mb"] += s.get("inputBytes", 0) / 1e6
+            m["shuffle_read_mb"] += s.get("shuffleReadBytes", 0) / 1e6
+            m["shuffle_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
+    for m in out.values():
+        m["job_s"] = round(m["job_s"], 3)
+        for k in ("input_mb", "shuffle_read_mb", "shuffle_mb"):
+            m[k] = round(m[k], 6)  # to the byte: callers gate on these
+    return out
 
 
 def _median(xs: list[float]) -> float:
@@ -145,11 +177,15 @@ def _flag_movers(
     return [n for _, n in sorted(flagged, reverse=True)[:cap]]
 
 
-def _previous_round(root: str) -> tuple[dict[str, float], dict[str, float]]:
+def _previous_round(
+    root: str, cpus: int
+) -> tuple[dict[str, float], dict[str, float]]:
     """(per-query official medians from the newest BENCH_r*.json,
     per-query spreads from the committed BENCH_DETAIL.json sidecar) —
     the reference the re-run trigger compares against. Missing or
-    unparseable files degrade to {} (first round: no re-run pass)."""
+    unparseable files degrade to {} (first round: no re-run pass), and
+    so does a newest record taken at a different core count than this
+    run's ``cpus``: its medians differ on core count alone."""
     import glob
 
     med: dict[str, float] = {}
@@ -167,6 +203,8 @@ def _previous_round(root: str) -> tuple[dict[str, float], dict[str, float]]:
         try:
             with open(rounds[-1]) as f:
                 data = json.load(f)
+            if data.get("cpus", cpus) != cpus:
+                return {}, {}
             parsed = data.get("parsed", data)  # driver wraps under "parsed"
             if isinstance(parsed, dict):
                 for key in ("queries", "queries2"):
@@ -189,8 +227,8 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    # the UI powers the per-query shuffle metrics; REST polling happens
-    # once after all timed runs, so it doesn't perturb the timings
+    # the UI powers the per-query job/shuffle metrics; REST polling
+    # happens between entries, never inside a timed run
     os.environ.setdefault("SPARK_GRAFT_UI", "true")
 
     from bigquery_postgres_events_etl_spark.registry import all_queries
@@ -217,16 +255,14 @@ def main() -> None:
     # sidecar; the final line carries the summed min alongside the
     # summed median so the driver record itself shows the noise floor.
     root = os.path.dirname(os.path.abspath(__file__))
-    prev_med, prev_spread = _previous_round(root)
+    cpus = spark.sparkContext.defaultParallelism
+    prev_med, prev_spread = _previous_round(root, cpus)
 
     all_runs: dict[str, list[float]] = {}
-    sc = spark.sparkContext
+    metrics: dict[str, dict] = {}
 
     def timed_run(name: str, i: int) -> None:
-        sc.setJobGroup(f"{name}#r{i}", name)
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        all_runs[name].append(time.time() - t0)
+        all_runs[name].append(noop_run(spark, qs[name], sf_dir, f"{name}#r{i}"))
 
     for name in HEADLINE + TIER2:
         # Cache hygiene: several operators persist() intermediate
@@ -242,6 +278,10 @@ def main() -> None:
         all_runs[name] = []
         for i in range(5):
             timed_run(name, i)
+        # read the steady-state run's metrics now: the UI store keeps
+        # only the newest 1000 jobs and stages, so one read after all
+        # 34 entries would find most #r1 groups evicted
+        metrics[name] = group_metrics(spark).get(f"{name}#r1", {})
 
     flagged = _flag_movers(all_runs, prev_med, prev_spread)
     # Interleaved A/B re-runs: 4 extra rounds, round-robin across the
@@ -254,10 +294,9 @@ def main() -> None:
     for i in range(5, 9):
         for name in flagged:
             spark.catalog.clearCache()
-            sc.setJobGroup(f"{name}#warm{i}", name)
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            noop_run(spark, qs[name], sf_dir, f"{name}#warm{i}")
             timed_run(name, i)
-    sc.setJobGroup("", "")
+    spark.sparkContext.setJobGroup("", "")
 
     timings: dict[str, float] = {}
     timings2: dict[str, float] = {}
@@ -283,8 +322,9 @@ def main() -> None:
     # file, BENCH_DETAIL.json, next to this script.
     sidecar = {
         "queries_detail": detail,
-        "shuffle": _shuffle_metrics(spark, HEADLINE + TIER2),
+        "shuffle": {n: m for n, m in metrics.items() if m},
         "sf": sf,
+        "cpus": cpus,
         "flagged_rerun": flagged,
         "protocol": (
             "median-of-5 + interleaved warm A/B re-runs (4) for queries "
@@ -292,10 +332,7 @@ def main() -> None:
             "vs the previous official round; noop sink, shared warm session"
         ),
     }
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"),
-        "w",
-    ) as f:
+    with open(os.path.join(root, "BENCH_DETAIL.json"), "w") as f:
         json.dump(sidecar, f, indent=1)
     line = json.dumps(
         {

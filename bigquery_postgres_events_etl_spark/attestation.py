@@ -54,76 +54,8 @@ import re
 # changes are instead verified by the full-registry oracle sweeps at
 # sf0.001/0.01/0.1 recorded in ORACLE_SF01_FULL_r*.md (0 failures),
 # which cover every entry at once rather than rotating 50 at a time.
-#
-# r7 flags (17 entries, shared-shingle / scan-tail campaigns) were all
-# re-attested green in CORRECTNESS_r07 and removed; likewise every r8
-# flag (11 entries) attested green in CORRECTNESS_r08, and every r9
-# flag (9 entries: LSH/MMR/recall/BPE oracle conversions, jaccard-est
-# + entity-resolve shared-frame rewrites, pagerank broadcast path) in
-# CORRECTNESS_r09. r10 flags (authored before the r10 driver gate):
 PLAN_CHANGED_REATTEST: dict[str, int] = {
     # name -> first round that must re-attest the new plan
-    # (r10 flags — LPA oracle conversion, pagerank adjacency rewrite,
-    # markov driver tail — attested green in CORRECTNESS_r10 and
-    # removed; the r11 flag graph_pagerank_copurchase attested in
-    # CORRECTNESS_r11; the r12 flags ml_logreg_train,
-    # dedup_lsh_recall_report, embedding_power_iteration attested in
-    # CORRECTNESS_r12 — all pruned; all eleven r13 flags — the r12
-    # narrowed-persist trio, the NULLIF hardenings, the fused-Viterbi
-    # pair, the BPE empty-token pair, the funnel zero-traffic pair —
-    # attested green in CORRECTNESS_r13 and pruned.)
-    # r14 fused-kernel rewrite (r13 verdict item 6 — the per-round
-    # N·k crossJoin/groupBy + N·d posexplode shuffles replaced by one
-    # Arrow mapInPandas pass emitting k·d partial sums; semantics
-    # bit-identical — Lloyd parity pytest + oracle green at sf0.001/
-    # sf0.01 — but the physical plan is new; AB interleave measured
-    # 5.91 → 2.25 s pooled median at sf0.1):
-    "ml_kmeans_train_q8": 14,
-    # r14 single-level-vocabulary NULLIF hardening (a one-event-type
-    # partition crashed Spark ANSI DIVIDE_BY_ZERO in all three —
-    # caught by the r14 sweep probes; values identical on
-    # non-degenerate data, re-attest once — the r13 funnel class):
-    "events_ks_test": 14,
-    "stats_mann_whitney": 14,
-    "stats_chi_square_independence": 14,
-    # r14 second sweep wave (one-user / constant-timestamp corpora —
-    # same class, same round, same NULLIF discipline; etl_flagship is
-    # the one VALUE bug: the dedup survivor tie-break ordered the
-    # VARCHAR projection of event_id while the oracle bound the
-    # source BIGINT — numeric order, the true first-arriving
-    # semantics, now pinned on both):
-    "etl_flagship": 14,
-    "events_ab_ttest": 14,
-    "events_ab_proportion_ztest": 14,
-    "events_power_analysis": 14,
-    "stats_spearman_rho": 14,
-    "events_cuped_adjustment": 14,
-    # r14 OPTIMIZATION-round plan rewrites (values identical — every
-    # one re-proved against the DuckDB oracle at sf0.001 and sf0.01
-    # in-round; see OPTIMIZATION_r14.md): tokenizer merge loops now
-    # fuse per-round aggregations and argmax on the driver below a
-    # cardinality gate; simhash expressions rebuilt as SQL strings
-    # (same plan, but flagged with its consumers for safety);
-    # markov-p4 constant-size tail runs driver-side below the channel
-    # gate; HITS half-steps de-shuffled via the pre-aggregated
-    # two-direction adjacency; pagerank/PPR preludes lost the deg
-    # checkpoint and loop checkpoints went lazy:
-    "text_wordpiece_train": 14,
-    "text_wordpiece_encode_trained": 14,
-    "text_bpe_train_merges": 14,
-    "text_bpe_encode_trained": 14,
-    "dedup_simhash": 14,
-    "dedup_simhash_pairs": 14,
-    "dedup_simhash_fast": 14,
-    "dedup_edit_distance_banded": 14,
-    "events_markov_attribution": 14,
-    # r15 re-touches on r14-flagged entries: markov-p4 gained the
-    # single-evaluation checkpoint + scenario dedup; the three rank
-    # loops gained the hub-degree sub-gate (occ in the head aggregate)
-    "events_markov_removal_p4": 15,
-    "graph_pagerank_copurchase": 15,
-    "graph_ppr_seeded": 15,
-    "graph_hits_copurchase": 15,
     # r15 driver hash-parity fix (the r14 CORRECTNESS gate failure):
     # conformal nonconformity now reads the NB score's EXACT decimal
     # (nb_quality_score_dec) instead of re-rounding the double through
@@ -131,28 +63,6 @@ PLAN_CHANGED_REATTEST: dict[str, int] = {
     # Values are identical wherever the old round-trip was lossless;
     # the plan changed (one fewer cast pair), so re-attest:
     "ml_eval_conformal": 15,
-    # r15 iterative-loop treatment (verdict items 3/7): CC loops lost
-    # the per-round convergence join (prev rides the checkpoint) and
-    # gained a pre-partitioned persisted edge frame; kcore/LPA/MMR
-    # checkpoints went lazy (plan text unchanged — LogicalRDD either
-    # way — but flagged with their consumers per the r14 discipline):
-    "dedup_dup_clusters": 15,
-    "dedup_cluster_star": 15,
-    "multimodal_phash_clusters": 15,
-    "graph_kcore": 15,
-    "graph_label_propagation": 15,
-    "graph_modularity": 15,
-    "similarity_mmr_topk": 15,
-    # r15 expression-build fix (the r14 dedup_simhash class): minhash
-    # signature/band/agreement expressions rebuilt as SQL strings —
-    # plans verified bit-identical (plans/r15 diffs), flagged with
-    # consumers for safety exactly as the r14 simhash flags were:
-    "dedup_minhash_signatures": 15,
-    "dedup_minhash_lsh": 15,
-    "dedup_minhash_jaccard_est": 15,
-    "dedup_entity_resolve": 15,
-    "dedup_minhash_incremental": 15,
-    "dedup_lsh_recall_report": 15,
 }
 
 

@@ -809,7 +809,8 @@ def hits_fixed(
         # (Generate and the broadcast join preserve the pinned
         # hashpartitioning(node)). Replaces the per-half |E|-row
         # e⨝side shuffle (guide §2.4: 8 shuffles per run removed;
-        # job_profile: ~8 jobs per half-step → ~3). Array rows are
+        # per-entry job count, bench sidecar BENCH_DETAIL.json: ~8
+        # jobs per half-step → ~3). Array rows are
         # gate-bounded exactly as in pagerank — above the gate a
         # skewed web-scale node would OOM a collect_list, so the flat
         # edge path below remains the super-gate branch.
@@ -1425,8 +1426,9 @@ def markov_removal_p4(
     # (graph.py:989) extended to the hash tier. Everything downstream
     # of ``p`` is constant-size ((c+3)² entries × (c+1) scenarios),
     # yet the distributed squaring spent ~40 micro-jobs of pure
-    # scheduling per run (tools/job_profile.py: 55 jobs, most 1-task,
-    # assembling sub-KB frames). Below the channel gate the whole
+    # scheduling per run (55 jobs, most 1-task, assembling sub-KB
+    # frames — the per-entry job count the bench sidecar
+    # BENCH_DETAIL.json records). Below the channel gate the whole
     # tail runs off ONE bounded fetch of p (≤ (c+2)(c+3) rows), in
     # exact Python ints replicating the DataFrame semantics
     # join-for-join: sparse entries exist iff the join matched (v=0

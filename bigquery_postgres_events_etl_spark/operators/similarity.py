@@ -1561,8 +1561,9 @@ def kmeans_q8(
     # kernel runs as one ~0.26 s task — fanning it out with
     # io.parallelize() to defaultParallelism made rounds ~2× SLOWER
     # (0.26 → 0.5-0.7 s: 32 × per-task Python/Arrow fixed cost
-    # dwarfs the ~3 MB of vectorized work; tools/job_profile.py
-    # capture in OPTIMIZATION_r14.md). At cluster scale the source
+    # dwarfs the ~3 MB of vectorized work; per-job capture in
+    # OPTIMIZATION_r14.md, job counts and job-seconds per entry in the
+    # bench sidecar BENCH_DETAIL.json). At cluster scale the source
     # has many splits and per-task overhead amortizes naturally.
     q = quantize_embeddings_int8(vectors, id_col, emb_col).select(
         id_col, F.expr("transform(q8, x -> CAST(x AS BIGINT))").alias("q8")

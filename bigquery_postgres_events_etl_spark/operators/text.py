@@ -1213,8 +1213,9 @@ def _wordpiece_train_impl(
 
     r14 optimization: per round the pick rule needs the pair counts
     AND the symbol counts — previously two aggregations, two joins and
-    a global sort (~5 tiny AQE-materialized jobs per round; the
-    job_profile evidence shows the entry's wall dominated by the
+    a global sort (~5 tiny AQE-materialized jobs per round; the job
+    counts and job-seconds in the bench sidecar BENCH_DETAIL.json show
+    the entry's wall dominated by the
     driver gaps BETWEEN those jobs, not by compute). Now ONE tagged
     aggregation (:func:`_wp_tagged_counts`) is collected per round
     (gated on TOKENIZER_DRIVER_COUNTS_MAX_ROWS — charset²-bounded,

@@ -119,154 +119,13 @@ def register(name: str, oracle: str | None):
 # so each round's CORRECTNESS file attests what has the weakest hard
 # signal instead of re-checking the same 50.
 #
-# Through r5 this was the hand-maintained _DRIVER_PRIORITY list below
-# (kept as _LEGACY_PRIORITY: the deterministic fallback when no
-# CORRECTNESS history is on disk, e.g. a fresh checkout). Since r6 the
-# order is DERIVED from the recorded CORRECTNESS_r*.json files at
-# first use (attestation.driver_priority), and the invariants that
-# used to live in comments here are pytest-pinned in
-# tests/test_rotation.py: the front 50 IS the staleness frontier, no
-# green entry precedes a never-attested one, and the order is
+# The order is DERIVED from the recorded CORRECTNESS_r*.json files at
+# first use (attestation.driver_priority; with no history on disk
+# every entry ties as never-attested, so hash-checked entries lead,
+# each group in registration order). The invariants are pytest-pinned
+# in tests/test_rotation.py: the front 50 IS the staleness frontier,
+# no green entry precedes a never-attested one, and the order is
 # deterministic.
-_LEGACY_PRIORITY = [
-    # -- r1-stale refresh (verdict #1: all 14 in the r5 sample)
-    "distinct_segments",
-    "string_functions",
-    "case_when_bucketing",
-    "window_topk_per_group",
-    "window_running_sum",
-    "window_moving_avg",
-    "window_lag_lead",
-    "window_dedup_survivor",
-    "mode_per_group",
-    "asof_join_last_click",
-    "range_join_recent_lineitems",
-    "tumbling_window_hourly",
-    "sliding_window_counts",
-    "dedup_minhash_signatures",
-    # -- plan changed (two-pass ranking boundary fix): re-attest
-    "rfm_segmentation",
-    "text_ccnet_buckets",
-    # -- first-time attestations (34 slots): verdict-item op first
-    "dedup_entity_resolve",
-    # this session's hash-oracle additions
-    "events_ab_ttest",
-    "events_mergeable_quantile_rollup",
-    "ivm_join_delta_orders",
-    "text_nb_quality_train",
-    "text_nb_quality_score",
-    "pipeline_weighted_sample",
-    "similarity_rrf_fusion",
-    "events_trend_seasonal_decompose",
-    "dedup_minhash_jaccard_est",
-    "text_token_entropy",
-    # earlier-wave flagships
-    "funnel_ordered_steps",
-    "join_cardinality_estimate",
-    "attribution_position_credit",
-    "lineitem_equidepth_histogram",
-    "text_bm25_topk",
-    "events_zorder_index",
-    "events_mergeable_daily_rollup",
-    "dq_expectations_report",
-    "etl_scd2_user_state",
-    "etl_snapshot_diff",
-    "pipeline_paragraph_dedup",
-    "pipeline_cdc_chunks",
-    "dedup_cdc_chunk_spans",
-    "text_bigram_coherence",
-    "pipeline_source_caps",
-    "similarity_hybrid_topk",
-    "stats_robust_zscore",
-    "pipeline_importance_weight",
-    "events_burst_detection",
-    "asof_join_next_purchase",
-    "interval_overlap_sessions",
-    "multimodal_content_dedup",
-    "dedup_stats_report",
-    # ---------------- position 50 boundary ----------------
-    # r6 front, in order: deferred hash-oracle first-timers (the
-    # newest wave first: the stat-test/lifecycle suite) ...
-    "events_ks_test",
-    "stats_mann_whitney",
-    "stats_chi_square_independence",
-    "orders_benford_first_digit",
-    "events_psi_drift",
-    "customer_survival_km",
-    "cohort_ltv_curves",
-    "events_ewma_halflife",
-    "pipeline_epoch_repeat",
-    "stats_logrank_test",
-    "funnel_time_to_convert",
-    "events_ab_proportion_ztest",
-    "events_seasonal_residual_anomalies",
-    "part_similarity_topk",
-    "ml_quantile_transform",
-    "stats_median_ci",
-    "stats_groupwise_ols",
-    "text_nb_calibration",
-    "pipeline_quality_ensemble",
-    "events_lag_features",
-    "events_forecast_baseline_eval",
-    "events_dau_mau_stickiness",
-    "orders_interarrival_stats",
-    "events_user_gini",
-    "orders_pareto_customers",
-    "stats_weighted_median",
-    "dedup_exact_normalized",
-    "event_second_order_transitions",
-    "pipeline_stratified_sample",
-    "text_feature_hashing",
-    "ml_linear_score_users",
-    "pipeline_temperature_mixture",
-    "part_association_rules",
-    "embedding_label_centroids",
-    "similarity_hard_negatives",
-    "pipeline_negative_sampling",
-    "events_json_key_stats",
-    "lineitem_correlation_matrix",
-    "events_cusum_changepoints",
-    # ... rows-only first-timers (pytest-pinned; driver row is
-    # rows-only for these, so they defer cheapest) ...
-    "events_segment_overlap_hll",
-    "events_markov_attribution",
-    "similarity_mmr_topk",
-    "graph_pagerank_copurchase",
-    "text_bpe_train_merges",
-    "text_bpe_encode_trained",
-    "events_approx_topk_rollup",
-    "events_hll_rolling_users",
-    "ml_logreg_train",
-    "pipeline_decontaminate_bloom",
-    "text_compression_ratio",
-    "multimodal_phash_near_dup",
-    "multimodal_phash_clusters",
-    "similarity_ann_recall_report",
-    # ... then the r2-freshest tail, oldest first
-    "sessionization",
-    "similarity_topk_bruteforce",
-    "similarity_near_pairs",
-    "text_stats",
-    "text_token_frequencies",
-    "text_language_id",
-    "text_quality_score",
-    "multimodal_binary_stats",
-    "multimodal_feature_extract",
-    "multimodal_frame_sample",
-    "sql_scalar_subquery",
-    "sql_in_subquery",
-    "sql_correlated_exists",
-    "sql_not_exists",
-    "sql_grouping_sets",
-    "sql_having",
-    "sql_window_over_derived",
-    "math_functions",
-    "null_handling",
-    "agg_variance_from_sums",
-    "agg_correlation_from_sums",
-    "date_parts",
-]
-
 
 _PRIORITY_CACHE: list[str] | None = None
 
@@ -275,19 +134,12 @@ def _ordered() -> dict[str, QuerySpec]:
     global _PRIORITY_CACHE
     names = list(_REGISTRY)
     if _PRIORITY_CACHE is None or set(_PRIORITY_CACHE) != set(names):
-        from .attestation import driver_priority, load_attestations
+        from .attestation import driver_priority
 
-        freshest, newest = load_attestations()
-        if newest == 0:
-            # no CORRECTNESS history on disk — deterministic fallback
-            front = [n for n in _LEGACY_PRIORITY if n in _REGISTRY]
-            rest = [n for n in names if n not in _LEGACY_PRIORITY]
-            _PRIORITY_CACHE = front + rest
-        else:
-            oracle_names = frozenset(
-                n for n, spec in _REGISTRY.items() if spec[1] is not None
-            )
-            _PRIORITY_CACHE = driver_priority(names, has_oracle=oracle_names)
+        oracle_names = frozenset(
+            n for n, spec in _REGISTRY.items() if spec[1] is not None
+        )
+        _PRIORITY_CACHE = driver_priority(names, has_oracle=oracle_names)
     return {n: _REGISTRY[n] for n in _PRIORITY_CACHE}
 
 

@@ -5,8 +5,8 @@ the round's official perf record (it happened in r5 — 2,971-byte line
 truncated by the driver's ~2,000-byte stdout tail — and nearly again
 in r6 via an assert placed before the print). These tests pin the
 protocol pieces that do not need a SparkSession: the previous-round
-reference loader, the mover-flagging trigger, and the final-line size
-budget under worst-case numbers.
+reference loader, the mover-flagging trigger, the REST job-group
+reader, and the final-line size budget under worst-case numbers.
 """
 
 from __future__ import annotations
@@ -35,8 +35,20 @@ def test_previous_round_parses_committed_reference_files():
     r11 composition change); a newcomer legitimately has no previous
     median — _flag_movers skips it — so tier-2 coverage is asserted
     only for the majority that predates the newest record."""
+    import glob as _glob
+    import re as _re
+
     root = os.path.dirname(os.path.abspath(bench.__file__))
-    med, spread = bench._previous_round(root)
+    numbered = sorted(
+        (int(m.group(1)), p)
+        for p in _glob.glob(os.path.join(root, "BENCH_r*.json"))
+        if (m := _re.search(r"r(\d+)\.json$", os.path.basename(p)))
+    )
+    with open(numbered[-1][1]) as f:
+        raw = f.read()
+    # read at the record's own core count (a different one degrades to
+    # empty — test_previous_round_ignores_a_different_core_count)
+    med, spread = bench._previous_round(root, json.loads(raw)["cpus"])
     for name in bench.HEADLINE:
         assert name in med, name
         assert med[name] > 0
@@ -46,16 +58,6 @@ def test_previous_round_parses_committed_reference_files():
     # genuinely absent from the newest record's raw text (a newcomer).
     # A name present in the file but not in the parsed medians means
     # the parser dropped it — that IS drift, fail loudly.
-    import glob as _glob
-    import re as _re
-
-    numbered = sorted(
-        (int(m.group(1)), p)
-        for p in _glob.glob(os.path.join(root, "BENCH_r*.json"))
-        if (m := _re.search(r"r(\d+)\.json$", os.path.basename(p)))
-    )
-    with open(numbered[-1][1]) as f:
-        raw = f.read()
     dropped = [n for n in bench.TIER2 if n not in med and f'"{n}"' in raw]
     assert not dropped, (
         f"parser drift: {dropped} present in {numbered[-1][1]} but "
@@ -68,8 +70,20 @@ def test_previous_round_parses_committed_reference_files():
 
 
 def test_previous_round_degrades_to_empty_on_missing_files(tmp_path):
-    med, spread = bench._previous_round(str(tmp_path))
+    med, spread = bench._previous_round(str(tmp_path), 4)
     assert med == {} and spread == {}
+
+
+def test_previous_round_ignores_a_different_core_count(tmp_path):
+    """A 32-core record's medians are no reference for a 4-core run:
+    comparing them would flag entries on core count alone."""
+    record = {"cpus": 32, "parsed": {"queries": {"q1_pricing_summary": 1.0}}}
+    (tmp_path / "BENCH_r99.json").write_text(json.dumps(record))
+    (tmp_path / "BENCH_DETAIL.json").write_text(
+        json.dumps({"queries_detail": {"q1_pricing_summary": {"spread": 0.1}}})
+    )
+    assert bench._previous_round(str(tmp_path), 32)[0] == {"q1_pricing_summary": 1.0}
+    assert bench._previous_round(str(tmp_path), 4) == ({}, {})
 
 
 def test_flag_movers_triggers_only_past_noise():
@@ -120,3 +134,75 @@ def test_final_line_fits_driver_tail_window_worst_case():
         }
     )
     assert len(line) < 1500, len(line)
+
+
+def test_group_metrics_sums_non_skipped_stages_per_group(monkeypatch):
+    """One read of the REST jobs + stages, summed per job group over
+    non-skipped stages; job-seconds run submission → completion."""
+    import io
+    import types
+    import urllib.request
+
+    jobs = [
+        {"jobGroup": "q#r1", "stageIds": [1, 2],
+         "submissionTime": "2026-01-01T00:00:00.000GMT",
+         "completionTime": "2026-01-01T00:00:01.500GMT"},
+        {"jobGroup": "q#r1", "stageIds": [3],
+         "submissionTime": "2026-01-01T00:00:02.000GMT",
+         "completionTime": "2026-01-01T00:00:02.250GMT"},
+        {"jobGroup": "q#r0", "stageIds": [4]},
+        {"stageIds": [4]},  # no group: not reported
+    ]
+    stage = {"numCompleteTasks": 2, "inputBytes": 1_000_000,
+             "shuffleReadBytes": 500_000, "shuffleWriteBytes": 250_000}
+    stages = [
+        {"stageId": 1, "status": "COMPLETE", **stage},
+        {"stageId": 2, "status": "SKIPPED", **stage},
+        {"stageId": 3, "status": "COMPLETE", **stage},
+        {"stageId": 4, "status": "COMPLETE", **stage},
+    ]
+
+    def urlopen(url, timeout):
+        body = jobs if url.endswith("/jobs") else stages
+        return io.BytesIO(json.dumps(body).encode())
+
+    monkeypatch.setattr(urllib.request, "urlopen", urlopen)
+    sc = types.SimpleNamespace(uiWebUrl="http://localhost:4040", applicationId="app")
+    got = bench.group_metrics(types.SimpleNamespace(sparkContext=sc))
+    assert got["q#r1"] == {"jobs": 2, "job_s": 1.75, "tasks": 4, "input_mb": 2.0,
+                           "shuffle_read_mb": 1.0, "shuffle_mb": 0.5}
+    assert got["q#r0"]["jobs"] == 1 and got["q#r0"]["job_s"] == 0.0
+    assert set(got) == {"q#r1", "q#r0"}
+
+
+def test_group_metrics_degrades_to_empty_without_ui():
+    import types
+
+    sc = types.SimpleNamespace(uiWebUrl=None, applicationId="app")
+    assert bench.group_metrics(types.SimpleNamespace(sparkContext=sc)) == {}
+
+
+def test_group_metrics_degrades_to_empty_on_a_broken_reply(monkeypatch):
+    """A read that fails mid-way (truncated HTTP body, or a record
+    missing a field) is missing data, not an error that would abort
+    bench.main before its final line."""
+    import http.client
+    import io
+    import types
+    import urllib.request
+
+    sc = types.SimpleNamespace(uiWebUrl="http://localhost:4040", applicationId="app")
+    spark = types.SimpleNamespace(sparkContext=sc)
+
+    def truncated(url, timeout):
+        raise http.client.IncompleteRead(b"")
+
+    monkeypatch.setattr(urllib.request, "urlopen", truncated)
+    assert bench.group_metrics(spark) == {}
+
+    def malformed(url, timeout):
+        body = [{"jobGroup": "q#r1"}] if url.endswith("/jobs") else [{}]
+        return io.BytesIO(json.dumps(body).encode())
+
+    monkeypatch.setattr(urllib.request, "urlopen", malformed)
+    assert bench.group_metrics(spark) == {}

@@ -4,6 +4,8 @@ silently loses one fails CI."""
 
 from __future__ import annotations
 
+import pytest
+
 from bigquery_postgres_events_etl_spark.plans.audit import (
     has_pushed_filter,
     plan_summary,
@@ -184,7 +186,24 @@ def test_date_partitioned_lake_prunes_partitions(spark, sf_dir, tmp_path):
     assert n_part_dirs > 3
 
 
-def test_no_registered_query_outputs_array_or_map_columns(spark, sf_dir):
+@pytest.fixture(scope="module")
+def every_entry_plan(spark, sf_dir):
+    """Build every registry entry ONCE and record what the full-registry
+    walks below assert on: ``{name: (output schema, unpartitioned
+    window specs of the executed plan)}``. Building all entries takes
+    minutes on a few cores, so the walks share one build."""
+    from bigquery_postgres_events_etl_spark.plans.audit import (
+        unpartitioned_window_specs,
+    )
+
+    out = {}
+    for name, fn in all_queries().items():
+        df = fn(spark, sf_dir)
+        out[name] = (df.schema, unpartitioned_window_specs(df))
+    return out
+
+
+def test_no_registered_query_outputs_array_or_map_columns(every_entry_plan):
     """The driver's canonicalizer sorts results through pandas, which
     cannot hash list cells — a top-level array/map output column is a
     guaranteed red CORRECTNESS row (r2: array_functions,
@@ -194,11 +213,10 @@ def test_no_registered_query_outputs_array_or_map_columns(spark, sf_dir):
     from pyspark.sql.types import ArrayType, MapType
 
     offenders = {}
-    for name, fn in all_queries().items():
-        df = fn(spark, sf_dir)
+    for name, (schema, _) in every_entry_plan.items():
         bad = [
             f.name
-            for f in df.schema.fields
+            for f in schema.fields
             if isinstance(f.dataType, (ArrayType, MapType))
         ]
         if bad:
@@ -346,19 +364,14 @@ def _spec_head(spec: str) -> str:
     return re.sub(r"#\d+L?$", "", tok).split("(")[0]
 
 
-def test_global_windows_only_in_documented_exact_tiers(spark, sf_dir):
+def test_global_windows_only_in_documented_exact_tiers(every_entry_plan):
     """Walk EVERY registry entry's executed plan: an unpartitioned
     WindowExec funnels the whole input through one reducer, so any
     query outside the documented allowlist that plans one is a silent
     100×-scale regression (the r4 verdict's hardening gap: the
     allowlist existed in prose, nothing asserted it)."""
     offenders = {}
-    for name, fn in all_queries().items():
-        from bigquery_postgres_events_etl_spark.plans.audit import (
-            unpartitioned_window_specs,
-        )
-
-        specs = unpartitioned_window_specs(fn(spark, sf_dir))
+    for name, (_, specs) in every_entry_plan.items():
         if not specs:
             continue
         allowed = GLOBAL_WINDOW_ALLOWLIST.get(name, set())
@@ -694,18 +707,14 @@ def test_runtime_shuffle_bytes_match_inventory(spark, sf_dir):
     """SCALE.md's shuffle inventory asserted from the EVENT LOG, not
     the static plan: run three inventory queries under tagged job
     groups and read actual shuffle-write bytes from the REST status
-    API (the channel bench.py scrapes). Map-side ops must move ~zero
-    shuffle bytes; single-exchange ops must stay within a sliver
-    envelope at sf0.001 — a plan regression that adds a real exchange
-    shows up as bytes here even if static node counts stay equal
-    (ReusedExchange, cached subtrees)."""
-    import json
-    import urllib.request
+    API (bench.group_metrics, the channel bench.py reads). Map-side
+    ops must move ~zero shuffle bytes; single-exchange ops must stay
+    within a sliver envelope at sf0.001 — a plan regression that adds
+    a real exchange shows up as bytes here even if static node counts
+    stay equal (ReusedExchange, cached subtrees)."""
+    from bench import group_metrics, noop_run
 
-    base = spark.sparkContext.uiWebUrl
-    if not base:
-        import pytest
-
+    if not spark.sparkContext.uiWebUrl:
         pytest.skip("Spark UI disabled in this session")
 
     qs = all_queries()
@@ -729,31 +738,14 @@ def test_runtime_shuffle_bytes_match_inventory(spark, sf_dir):
         "stats_bootstrap_mean_ci": 0.3,
         "dedup_edit_distance_pairs": 0.5,
     }
-    sc = spark.sparkContext
     for name in cases:
-        sc.setJobGroup(f"rtshuf-{name}", name)
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    sc.setJobGroup("", "")
+        noop_run(spark, qs[name], sf_dir, f"rtshuf-{name}")
+    spark.sparkContext.setJobGroup("", "")
 
-    app_id = sc.applicationId
-
-    def api(path):
-        with urllib.request.urlopen(f"{base}/api/v1/{path}", timeout=30) as r:
-            return json.loads(r.read())
-
-    stages = {s["stageId"]: s for s in api(f"applications/{app_id}/stages")}
-    written = {n: 0.0 for n in cases}
-    for job in api(f"applications/{app_id}/jobs"):
-        group = job.get("jobGroup") or ""
-        if not group.startswith("rtshuf-"):
-            continue
-        name = group[len("rtshuf-"):]
-        if name not in written:
-            continue
-        for sid in job.get("stageIds", []):
-            s = stages.get(sid)
-            if s and s.get("status") != "SKIPPED":
-                written[name] += s.get("shuffleWriteBytes", 0) / 1e6
+    metrics = group_metrics(spark)
+    missing = [n for n in cases if f"rtshuf-{n}" not in metrics]
+    assert not missing, f"no REST job-group metrics for {missing}"
+    written = {n: metrics[f"rtshuf-{n}"]["shuffle_mb"] for n in cases}
     over = {
         n: (round(mb, 3), cases[n]) for n, mb in written.items() if mb > cases[n]
     }

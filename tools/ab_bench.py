@@ -13,7 +13,7 @@ Mechanics per measurement: purge the package from sys.modules, point
 sys.path at the target tree, re-import its registry, clearCache, one
 UNTIMED warm run (repopulates the query's own persisted slivers —
 same steady-state protocol as bench.py's interleaved re-runs), one
-timed run through the noop sink.
+timed run through the noop sink — both via ``bench.noop_run``.
 
 Usage:
     python tools/ab_bench.py r9=/path/to/r9tree r11=. -- q1 dedup_exact
@@ -26,7 +26,6 @@ import json
 import os
 import statistics
 import sys
-import time
 
 MOVERS = [
     "graph_pagerank_copurchase",
@@ -88,6 +87,7 @@ def main() -> None:
     # the CURRENT tree builds the shared session; worktree imports
     # reuse it via getOrCreate
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from bench import noop_run
     from bigquery_postgres_events_etl_spark.session import get_spark
 
     spark = get_spark(app_name="ab_bench")
@@ -101,16 +101,10 @@ def main() -> None:
                 if name not in qs:
                     continue  # entry doesn't exist at this commit
                 spark.catalog.clearCache()
-                spark.sparkContext.setJobGroup(f"{label}:{name}#w{rnd}", name)
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()  # warm (untimed)
-                spark.sparkContext.setJobGroup(f"{label}:{name}#t{rnd}", name)
-                t0 = time.time()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.setdefault((label, name), []).append(time.time() - t0)
+                noop_run(spark, qs[name], sf_dir, f"{label}:{name}#w{rnd}")
+                runs.setdefault((label, name), []).append(
+                    noop_run(spark, qs[name], sf_dir, f"{label}:{name}#t{rnd}")
+                )
                 print(
                     f"  round {rnd} {label:>4} {name}: "
                     f"{runs[(label, name)][-1]:.3f}s",

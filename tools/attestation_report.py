@@ -1,11 +1,10 @@
 """Attestation freshness report — the rotation bookkeeping tool.
 
 The driver's correctness gate samples the first 50 registry entries
-per round; `_DRIVER_PRIORITY` (registry.py) must re-front the
-staleness frontier each round or entries quietly age (the r3
-`text_fingerprints` gap, the r4 'comment arithmetic is stale' ADVICE).
-This tool computes the frontier FROM the recorded CORRECTNESS files
-instead of hand-maintained comments:
+per round; `attestation.driver_priority` fronts the staleness frontier
+so entries don't quietly age. This tool reports that frontier FROM the
+recorded CORRECTNESS files, plus any PLAN_CHANGED_REATTEST flags a
+newer green row has superseded (prune those):
 
   python tools/attestation_report.py            # summary + next-50 plan
   python tools/attestation_report.py --check    # exit 1 if any entry's

@@ -381,6 +381,7 @@ def _link_dims() -> None:
 
 
 def main() -> None:
+    from bench import group_metrics, noop_run
     from bigquery_postgres_events_etl_spark.registry import all_queries
     from bigquery_postgres_events_etl_spark.session import get_spark
 
@@ -396,12 +397,8 @@ def main() -> None:
         _link_dims()
 
     qs = all_queries()
-    sc = spark.sparkContext
     out: dict[str, dict] = {}
-    # positional args filter the query list (substring match) — run the
-    # newest entries in their own app so their REST rows can't be
-    # evicted from the UI store by 15 earlier queries' stages (the r6
-    # capture lost rows exactly this way)
+    # positional args filter the query list (substring match)
     name_filters = [a for a in sys.argv[1:] if not a.startswith("--")]
     queries = (
         [q for q in QUERIES if any(f in q for f in name_filters)]
@@ -410,16 +407,20 @@ def main() -> None:
     )
     skip_streaming = "--no-streaming" in sys.argv
     for name in queries:
-        fn = qs[name]
         walls = {}
         for label, d in (("sf01", SF01_DIR), ("sf1", SF1_DIR)):
-            best = float("inf")
-            for i in range(2):
-                sc.setJobGroup(f"{name}@{label}#r{i}", name)
-                t0 = time.time()
-                fn(spark, d).write.format("noop").mode("overwrite").save()
-                best = min(best, time.time() - t0)
+            best = min(
+                noop_run(spark, qs[name], d, f"{name}@{label}#r{i}")
+                for i in range(2)
+            )
             walls[f"{label}_s"] = round(best, 2)
+        # steady-state (#r1) shuffle bytes per scale, read before later
+        # entries' jobs evict these groups from the UI store — bytes
+        # scale with data even when wall clock is overhead-bound at
+        # these sizes, so the bytes RATIO is the honest slope signal
+        m = group_metrics(spark)
+        a = m.get(f"{name}@sf01#r1", {}).get("shuffle_mb")
+        b = m.get(f"{name}@sf1#r1", {}).get("shuffle_mb")
         # persisted intermediates (vocab gates etc.) accumulate across
         # 15 queries × 2 scales × 2 runs in one JVM — drop them so the
         # curve measures the queries, not heap pressure
@@ -430,12 +431,13 @@ def main() -> None:
             "ratio": round(ratio, 2),
             "linear_x": round(ratio / AMPLIFY, 2),
         }
+        if a is not None and b is not None:
+            out[name]["sf01_shuffle_mb"] = a
+            out[name]["sf1_shuffle_mb"] = b
+            out[name]["shuffle_ratio"] = round(b / a, 2) if a else None
         print(f"# {name}: {out[name]}", file=sys.stderr)
-    sc.setJobGroup("", "")
+    spark.sparkContext.setJobGroup("", "")
 
-    # steady-state (#r1) shuffle bytes per (query, scale) from the REST
-    # API — bytes scale with data even when wall clock is overhead-bound
-    # at these sizes, so the bytes RATIO is the honest slope signal
     # streaming PSI monitor throughput at both scales: rows/s through
     # the epoch-idempotent foreachBatch sink (reference histogram
     # frozen from the same scale's events; fresh monitor/checkpoint
@@ -477,44 +479,7 @@ def main() -> None:
         print(f"# streaming_psi_monitor@{label}: {out[f'streaming_psi_monitor@{label}']}", file=sys.stderr)
         shutil.rmtree(work, ignore_errors=True)
 
-    shuffle = _shuffle_mb(spark)
-    for name in queries:
-        a = shuffle.get(f"{name}@sf01")
-        b = shuffle.get(f"{name}@sf1")
-        if a is not None and b is not None:
-            out[name]["sf01_shuffle_mb"] = a
-            out[name]["sf1_shuffle_mb"] = b
-            out[name]["shuffle_ratio"] = round(b / a, 2) if a else None
     print(json.dumps(out))
-
-
-def _shuffle_mb(spark) -> dict[str, float]:
-    import urllib.request
-
-    try:
-        base = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
-
-        def api(path: str):
-            with urllib.request.urlopen(f"{base}/api/v1/{path}", timeout=30) as r:
-                return json.loads(r.read())
-
-        stages = {s["stageId"]: s for s in api(f"applications/{app_id}/stages")}
-        out: dict[str, float] = {}
-        for job in api(f"applications/{app_id}/jobs"):
-            group = job.get("jobGroup") or ""
-            if not group.endswith("#r1"):
-                continue
-            key = group[: -len("#r1")]
-            mb = out.setdefault(key, 0.0)
-            for sid in job.get("stageIds", []):
-                s = stages.get(sid)
-                if s and s.get("status") != "SKIPPED":
-                    mb += s.get("shuffleWriteBytes", 0) / 1e6
-            out[key] = mb
-        return {k: round(v, 2) for k, v in out.items()}
-    except Exception:
-        return {}
 
 
 if __name__ == "__main__":
