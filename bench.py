@@ -88,7 +88,7 @@ def noop_run(spark, fn, sf_dir: str, group: str) -> float:
 def group_metrics(spark) -> dict[str, dict]:
     """Per job group, from one read of the UI REST jobs and stages:
     ``jobs``, ``job_s`` (summed submission → completion), and
-    ``tasks``, ``input_mb``, ``shuffle_read_mb`` and ``shuffle_mb``
+    ``tasks``, ``input_records``, ``shuffle_read_mb`` and ``shuffle_mb``
     (shuffle write) summed over non-skipped stages. Wall clock on a
     shared machine swings ±30%; job counts and bytes don't, so these
     are the plan-health signal. Callers strip their own group suffix.
@@ -125,7 +125,7 @@ def _sum_by_group(jobs: list[dict], stages: dict[int, dict]) -> dict[str, dict]:
             continue
         m = out.setdefault(
             group,
-            {"jobs": 0, "job_s": 0.0, "tasks": 0, "input_mb": 0.0,
+            {"jobs": 0, "job_s": 0.0, "tasks": 0, "input_records": 0,
              "shuffle_read_mb": 0.0, "shuffle_mb": 0.0},
         )
         m["jobs"] += 1
@@ -136,12 +136,14 @@ def _sum_by_group(jobs: list[dict], stages: dict[int, dict]) -> dict[str, dict]:
             if not s or s.get("status") == "SKIPPED":
                 continue
             m["tasks"] += s.get("numCompleteTasks", 0)
-            m["input_mb"] += s.get("inputBytes", 0) / 1e6
+            # records, not inputBytes: the status store's input bytes
+            # under-report a parquet scan about 100x
+            m["input_records"] += s.get("inputRecords", 0)
             m["shuffle_read_mb"] += s.get("shuffleReadBytes", 0) / 1e6
             m["shuffle_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
     for m in out.values():
         m["job_s"] = round(m["job_s"], 3)
-        for k in ("input_mb", "shuffle_read_mb", "shuffle_mb"):
+        for k in ("shuffle_read_mb", "shuffle_mb"):
             m[k] = round(m[k], 6)  # to the byte: callers gate on these
     return out
 

@@ -49,8 +49,9 @@ Conventions that make the hashes match:
   functions.scalars dsum/davg (and their oracle twins) to it is the
   scheduled r15 item (engine-side change → PLAN_CHANGED_REATTEST
   flags for the TPC-H tier, which needs a fresh rotation budget).
-  Until then tools/extreme_oracle.py pins the band: in-band corpora
-  must hash, and q1 at price×1e6 is the asserted-divergent marker.
+  Until then `tools/check_oracle.py --corpus extreme` pins the band:
+  in-band corpora must hash, and q1 at price×1e6 is the
+  asserted-divergent marker.
 - double→decimal cast hazard: even for NON-transcendental doubles,
   ``CAST(double AS DECIMAL(p,s))`` takes engine-specific paths (Spark
   converts exactly via BigDecimal; DuckDB scales in floats), which

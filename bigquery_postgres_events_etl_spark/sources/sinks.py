@@ -490,8 +490,8 @@ def write_jdbc_merge_append(
                 # reference's UNIQUE constraint gives it this index
                 # implicitly (extract_bq.py:204), and without one the
                 # MERGE's anti-probe is a nested-loop heap scan per
-                # staged row: O(|staged|·|target|). Measured
-                # (tools/jdbc_bench.py, jstack-confirmed
+                # staged row: O(|staged|·|target|). Measured in
+                # round 9 (jstack-confirmed
                 # NestedLoopLeftOuterJoinResultSet): the 80k×80k
                 # replay MERGE ran 10+ minutes unindexed vs seconds
                 # indexed. Plain (not UNIQUE) index: NULLs compare

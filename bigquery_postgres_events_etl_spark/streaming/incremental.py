@@ -51,11 +51,12 @@ def run_incremental_etl(
 ) -> dict:
     """One incremental run; returns the ST8 progress record.
 
-    At 100 TB the watermark predicate must prune partitions, not just
-    rows: flagship_pipeline filters on unix_micros(ts), and on a
-    date-partitioned lake the caller additionally passes
-    date_from=date(watermark) so the parquet source skips whole days
-    (the Spark twin of `_TABLE_SUFFIX BETWEEN`, SURVEY §7 risk 6).
+    The watermark bounds rows, not files: flagship_pipeline filters
+    on ``unix_micros(ts) > wm`` after the scan. Spark does not push
+    that predicate into the parquet scan (its PushedFilters hold only
+    the null checks and the tracked-event list), so every trigger
+    reads the whole source table; nothing here skips source files or
+    days the way the reference's ``_TABLE_SUFFIX BETWEEN`` does.
 
     ``jdbc_target``: when given ({"url": …, "table": …, optional
     "driver", "writer_options", "conflict_keys"}), the sink is the

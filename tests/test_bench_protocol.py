@@ -153,7 +153,7 @@ def test_group_metrics_sums_non_skipped_stages_per_group(monkeypatch):
         {"jobGroup": "q#r0", "stageIds": [4]},
         {"stageIds": [4]},  # no group: not reported
     ]
-    stage = {"numCompleteTasks": 2, "inputBytes": 1_000_000,
+    stage = {"numCompleteTasks": 2, "inputRecords": 1_000,
              "shuffleReadBytes": 500_000, "shuffleWriteBytes": 250_000}
     stages = [
         {"stageId": 1, "status": "COMPLETE", **stage},
@@ -169,7 +169,7 @@ def test_group_metrics_sums_non_skipped_stages_per_group(monkeypatch):
     monkeypatch.setattr(urllib.request, "urlopen", urlopen)
     sc = types.SimpleNamespace(uiWebUrl="http://localhost:4040", applicationId="app")
     got = bench.group_metrics(types.SimpleNamespace(sparkContext=sc))
-    assert got["q#r1"] == {"jobs": 2, "job_s": 1.75, "tasks": 4, "input_mb": 2.0,
+    assert got["q#r1"] == {"jobs": 2, "job_s": 1.75, "tasks": 4, "input_records": 2_000,
                            "shuffle_read_mb": 1.0, "shuffle_mb": 0.5}
     assert got["q#r0"]["jobs"] == 1 and got["q#r0"]["job_s"] == 0.0
     assert set(got) == {"q#r1", "q#r0"}

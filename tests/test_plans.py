@@ -752,6 +752,23 @@ def test_runtime_shuffle_bytes_match_inventory(spark, sf_dir):
     assert not over, f"runtime shuffle bytes over inventory envelope: {over}"
 
 
+def test_runtime_input_records_match_row_count(spark, sf_dir):
+    """bench.group_metrics reports a scan's exact input row count (the
+    stage input bytes under-report a parquet scan about 100x)."""
+    import pyarrow.parquet as pq
+
+    from bench import group_metrics, noop_run
+
+    if not spark.sparkContext.uiWebUrl:
+        pytest.skip("Spark UI disabled in this session")
+
+    path = f"{sf_dir}/lineitem.parquet"
+    noop_run(spark, lambda s, d: s.read.parquet(path), sf_dir, "inrec-lineitem")
+    spark.sparkContext.setJobGroup("", "")
+    got = group_metrics(spark).get("inrec-lineitem", {}).get("input_records")
+    assert got == pq.ParquetFile(path).metadata.num_rows
+
+
 # Column-pruning contracts: these queries output narrow slivers, so
 # their scans must never pay for the heavyweight columns — a silent
 # pruning regression (e.g. an expression rewrite that drags `text`

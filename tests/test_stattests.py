@@ -1156,8 +1156,8 @@ def test_funnel_rates_null_on_zero_traffic(spark, tmp_path):
     """Zero-traffic corpus: the funnel/overlap rate entries must
     return NULL rates (NULLIF discipline, both engines) instead of
     the ANSI DIVIDE_BY_ZERO the r13 degenerate-corpus sweep caught —
-    fast CI pin so the full tools/degenerate_oracle.py run stays a
-    round-close check, not a per-commit one."""
+    fast CI pin so the full `tools/check_oracle.py --corpus
+    degenerate` run stays a round-close check, not a per-commit one."""
     import shutil
 
     import pyarrow.parquet as pq

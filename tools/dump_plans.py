@@ -1,21 +1,54 @@
-"""Dump formatted physical plans for the bench headline queries to
-EXPLAINS.md — reviewable evidence that filters push into scans,
+"""Dump formatted physical plans (``explain("formatted")``).
+
+By default, the bench headline queries and the entries listed below go
+to EXPLAINS.md — reviewable evidence that filters push into scans,
 columns prune, dims broadcast, and aggregations run partial+final.
 
+With ``--tree``, each named entry goes to ``<out-dir>/<name>_<suffix>.txt``
+(before/after evidence for a plan change), built on a cleared cache
+from the registry of the checkout at ``--tree``, so a checkout of an
+older commit yields that commit's plans. The fixture scale comes from
+``SPARK_GRAFT_SF_DIR`` (default sf0.1).
+
 Usage: python tools/dump_plans.py [sf_dir]
+       python tools/dump_plans.py --tree DIR --out-dir DIR --suffix S NAME...
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+def dump_files(tree: str, out_dir: str, suffix: str, names: list[str]) -> None:
+    tree = os.path.abspath(tree)
+    os.makedirs(out_dir, exist_ok=True)
+    sys.path.insert(0, tree)
 
+    from bigquery_postgres_events_etl_spark.io import DEFAULT_SF_DIR as sf_dir
+    from bigquery_postgres_events_etl_spark.plans.audit import formatted_plan
+    from bigquery_postgres_events_etl_spark.registry import all_queries
+    from bigquery_postgres_events_etl_spark.session import get_spark
+
+    spark = get_spark(app_name=f"plans-{suffix}")
+    qs = all_queries()
+    for name in names:
+        spark.catalog.clearCache()
+        plan = formatted_plan(qs[name](spark, sf_dir))
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(
+                f"# {name} — explain('formatted') at {os.path.basename(sf_dir)}"
+                f" on tree {tree}\n\n{plan}\n"
+            )
+        print("wrote", path)
+
+
+def dump_explains(sf_dir: str) -> None:
     from bench import HEADLINE
     from bigquery_postgres_events_etl_spark.plans.audit import formatted_plan
     from bigquery_postgres_events_etl_spark.registry import all_queries
@@ -219,9 +252,26 @@ def main() -> None:
         plan = formatted_plan(qs[name](spark, sf_dir))
         out.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
 
-    with open("/root/repo/EXPLAINS.md", "w") as f:
+    with open(os.path.join(REPO, "EXPLAINS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote EXPLAINS.md ({len(HEADLINE) + len(extra)} plans)")
+
+
+def main() -> None:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("args", nargs="*", metavar="sf_dir | NAME")
+    p.add_argument("--tree")
+    p.add_argument("--out-dir")
+    p.add_argument("--suffix")
+    a = p.parse_args()
+    if a.tree is None:
+        if a.out_dir or a.suffix or len(a.args) > 1:
+            p.error("--out-dir, --suffix and entry names need --tree")
+        dump_explains(a.args[0] if a.args else "/root/testdata/sf0.1")
+    elif a.out_dir and a.suffix and a.args:
+        dump_files(a.tree, a.out_dir, a.suffix, a.args)
+    else:
+        p.error("--tree needs --out-dir, --suffix and at least one NAME")
 
 
 if __name__ == "__main__":

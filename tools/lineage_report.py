@@ -8,9 +8,11 @@ Usage: python tools/lineage_report.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # iterative ops EXECUTE jobs at plan-construction time; listing their
 # final-frame lineage would be misleading (the real scans happen in
@@ -85,7 +87,7 @@ def main() -> None:
             f"{t}({', '.join(cols)})" for t, cols in scans
         ) or "(no parquet scan — derived/driver frame)"
         out.append(f"| {name} | {desc} |")
-    with open("/root/repo/LINEAGE.md", "w") as f:
+    with open(os.path.join(REPO, "LINEAGE.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote LINEAGE.md ({len(qs)} entries)")
 
