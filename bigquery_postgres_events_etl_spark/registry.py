@@ -11,9 +11,12 @@ Conventions that make the hashes match:
   dsum/davg) — order-independent, bit-exact across engines;
 - window/dedup survivors are made deterministic with explicit
   tie-break ordering;
-- fixture ``events.ts`` is parquet TIMESTAMP(NANOS): Spark reads int64
-  nanos (io.load_table converts to µs TimestampType), the oracle uses
-  ``CAST(ts AS TIMESTAMP)`` — identical µs truncation.
+- fixture ``events.ts`` is parquet timestamp[us] (isAdjustedToUTC=false)
+  at every scale: Spark reads it with the declared TIMESTAMP type in the
+  UTC session zone (io.load_table), the oracle reads the same
+  wall-clock values — identical µs instants. A legacy TIMESTAMP(NANOS)
+  file is read as int64 nanos and truncated to µs, matching the
+  oracle's ``CAST(ts AS TIMESTAMP)``.
 - transcendental boundary safety: NO compared column may be a
   decimal-rounding of a transcendental (ln/exp/pow/sqrt-of-non-square)
   of row data. libm and the JVM may differ by 1 ulp, and "rounding to

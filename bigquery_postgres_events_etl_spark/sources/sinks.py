@@ -146,8 +146,10 @@ def idempotent_append_parquet(
             # only a missing target may be ignored; any other read
             # failure must abort — treating a corrupt/unreadable target
             # as "first load" would skip the anti-join and
-            # double-insert on replay
-            existing = spark.read.parquet(target_path)
+            # double-insert on replay. The target holds what earlier
+            # batches of this schema wrote: read it with the batch's
+            # schema instead of inferring it (no inference job)
+            existing = spark.read.schema(df.schema).parquet(target_path)
             if partition_by:
                 # prune the anti-join's right side to the partition
                 # values this batch can collide with — expressed as a
@@ -169,7 +171,7 @@ def idempotent_append_parquet(
                 *df.columns
             )
         except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e) and "UNABLE_TO_INFER_SCHEMA" not in str(e):
+            if "PATH_NOT_FOUND" not in str(e):
                 raise
             # first load — no target yet
         # one evaluation of the anti-join plan both counts and writes,
@@ -304,40 +306,6 @@ def write_dbapi_upsert(
             conn.close()
 
     out.foreachPartition(write_partition)
-
-
-def write_jdbc_upsert(
-    df: DataFrame,
-    dsn: str,
-    table: str,
-    columns: list[str] | None = None,
-    conflict_keys: list[str] | None = None,
-    batch_size: int | None = None,
-) -> None:
-    """PostgreSQL front-end for ``write_dbapi_upsert`` (import-gated:
-    no PG server in this container; the partition/commit/replay
-    mechanics are exercised end-to-end against SQLite in
-    tests/test_dbapi_sink.py, same conflict-skip semantics — and the
-    Spark-JDBC-writer flavor of the same contract runs for REAL
-    against embedded Derby via ``write_jdbc_merge_append``)."""
-    try:
-        import psycopg2  # noqa: F401
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError(
-            "write_jdbc_upsert requires psycopg2 (not in this container); "
-            "mechanics are proven via the SQLite DBAPI twin"
-        ) from e
-    from functools import partial
-
-    write_dbapi_upsert(
-        df,
-        partial(psycopg2.connect, dsn),
-        table,
-        columns,
-        conflict_keys,
-        batch_size,
-        dialect="postgres",
-    )
 
 
 def write_jdbc_merge_append(

@@ -18,77 +18,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..sources.sinks import idempotent_append_parquet
-
-# Legacy raw schema of the fixture events stream when the writer used
-# parquet TIMESTAMP(NANOS) (read as int64 under nanosAsLong). Current
-# fixtures use naive timestamp[us]; read_events_stream probes which
-# encoding is on disk and normalizes either to session-zoned (UTC)
-# TimestampType, exactly mirroring io.load_table's batch branch.
-RAW_EVENTS_SCHEMA_NANOS = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), True),
-        T.StructField("ts", T.LongType(), True),  # parquet TIMESTAMP(NANOS) as int64
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("props", T.StringType(), True),
-    ]
-)
-
-# Backwards-compat alias (older tests/docs referenced this name).
-RAW_EVENTS_SCHEMA = RAW_EVENTS_SCHEMA_NANOS
-
-
-def _ts_is_nanos_int64(source_dir: str) -> bool:
-    """Inspect parquet footers under ``source_dir`` for the events
-    ``ts`` encoding: True for the legacy TIMESTAMP(NANOS)/int64 layout
-    (Spark reads it as bigint under nanosAsLong and we must div 1000),
-    False for the current naive timestamp[us] layout (plain
-    TimestampType read). Footer-only — no data pages are touched.
-
-    The stream source may be a whole fixture dir holding several
-    tables' files; only files that actually carry a ``ts`` field vote,
-    and ALL of them are scanned: a dir mixing both encodings (a writer
-    flip mid-stream, combined with checkpointed-resume appends) would
-    read one encoding's files under the other's explicit schema and
-    silently corrupt event times, so a mixed dir raises instead of
-    guessing.
-    """
-    import glob
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    candidates = (
-        [source_dir]
-        if os.path.isfile(source_dir)
-        else sorted(glob.glob(os.path.join(source_dir, "**", "*.parquet"), recursive=True))
-    )
-    votes: set[bool] = set()
-    for path in candidates:
-        try:
-            sch = pq.read_schema(path)
-        except Exception:
-            continue
-        if "ts" not in sch.names:
-            continue
-        t = sch.field("ts").type
-        if pa.types.is_timestamp(t):
-            votes.add(t.unit == "ns")
-        elif pa.types.is_int64(t):
-            votes.add(True)
-    if len(votes) > 1:
-        raise ValueError(
-            f"mixed ts encodings under {source_dir!r}: some files carry "
-            "TIMESTAMP(NANOS)/int64 and others timestamp[us]; a single "
-            "explicit stream schema cannot read both — split the source "
-            "dir by encoding or rewrite to one layout"
-        )
-    return votes.pop() if votes else False  # no ts-bearing file: modern layout
-
 
 def read_events_stream(
     spark: SparkSession,
@@ -97,34 +28,23 @@ def read_events_stream(
 ) -> DataFrame:
     """Unbounded view of the events source (parquet-dir stand-in).
 
-    The fixture writer has flipped ``ts`` between TIMESTAMP(NANOS)-as-
-    int64 and naive timestamp[us] across driver rounds; a footer probe
-    tells us which encoding is on disk, and the stream applies the same
-    normalization as the batch reader (io.load_table) so batch and
-    streaming paths always see identical event-time instants. The
-    explicit schema (not inference) is deliberate: a source dir holding
-    other tables' files null-projects them, and flagship filters drop
-    the null rows — same semantics as a column-pruned production scan.
+    Read through the same declared schema and ``ts`` footer probe as
+    the batch reader (io.read_declared), so batch and streaming paths
+    always see identical event-time instants. The explicit schema (not
+    inference) is deliberate: a source dir holding other tables' files
+    null-projects them, and flagship filters drop the null rows — same
+    semantics as a column-pruned production scan.
     """
-    from ..io import _pin_session
+    from ..io import _pin_session, read_declared
 
     _pin_session(spark)
-    nanos = _ts_is_nanos_int64(source_dir)
-    fields = [
-        f if f.name != "ts"
-        else T.StructField("ts", T.LongType() if nanos else T.TimestampType(), True)
-        for f in RAW_EVENTS_SCHEMA_NANOS.fields
-    ]
-    reader = spark.readStream.schema(T.StructType(fields)).format("parquet")
+    reader = spark.readStream
     if max_files_per_trigger is not None:
         # bound each micro-batch's input (backpressure for backfills:
         # a month of files arrives as many small exactly-once batches,
         # not one giant one that OOMs the first trigger)
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.load(source_dir)
-    if nanos:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw
+    return read_declared(reader, source_dir, "events")
 
 
 def streaming_tumbling_counts(

@@ -386,7 +386,7 @@ def test_cluster_purity_planted_labels(spark):
     # cluster of seed 0: three label-5 members + planted tie pair
     rows += [(10, vec(0), 5), (11, vec(0), 5), (12, vec(0), 6), (13, vec(0), 6)]
     emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label long"
+        rows, "vec_id long, embedding array<float>, label int"
     )
     with tempfile.TemporaryDirectory() as tmp:
         emb.write.parquet(tmp + "/embeddings.parquet")

@@ -272,11 +272,6 @@ QUERIES = [
 def build_sf1(spark) -> None:
     from pyspark.sql import functions as F
 
-    # write timestamps as TIMESTAMP_MICROS: the default INT96 physical
-    # encoding reads as timestamp[ns] in pyarrow, which the streaming
-    # source's nanos-footer probe would mistake for the fixture's
-    # int64-nanos layout (and Spark cannot read INT96 as bigint)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     docs = spark.read.parquet(os.path.join(SF01_DIR, "documents.parquet"))
     n_docs = docs.count()
     copies = []
