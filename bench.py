@@ -112,6 +112,42 @@ def group_metrics(spark) -> dict[str, dict]:
         return {}
 
 
+def scan_records(spark, group: str) -> list[tuple[str, int]]:
+    """(description, rows) of every scan node in the SQL executions
+    that ran job group ``group``'s jobs, read from the driver's status
+    store over py4j (no UI needed). A parquet scan emits every row of
+    the row groups it reads, so its rows are its input records; the
+    description names the files or directory scanned."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    store = spark._jsparkSession.sharedState().statusStore()
+    executions = store.executionsList()
+    out = []
+    for i in range(executions.size()):
+        e = executions.apply(i)
+        own = e.jobs()
+        if not any(own.contains(j) for j in jobs):
+            continue
+        values, it = {}, store.executionMetrics(e.executionId()).iterator()
+        while it.hasNext():
+            kv = it.next()
+            values[kv._1()] = kv._2()
+        nodes = store.planGraph(e.executionId()).allNodes()
+        for k in range(nodes.size()):
+            node = nodes.apply(k)
+            if not node.name().startswith("Scan"):
+                continue
+            metrics = node.metrics()
+            rows = sum(
+                int(values.get(metrics.apply(m).accumulatorId(), "0").replace(",", ""))
+                for m in range(metrics.size())
+                if metrics.apply(m).name() == "number of output rows"
+            )
+            out.append((node.desc(), rows))
+    return out
+
+
 def _sum_by_group(jobs: list[dict], stages: dict[int, dict]) -> dict[str, dict]:
     from datetime import datetime
 

@@ -17,11 +17,14 @@ and the survivor-selection window is a partial-aggregatable pattern.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from ..functions.scalars import json_param
 from ..schemas import FIXTURE_TRACKED_EVENTS
+
+
+def _sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def valid_user_filter(df: DataFrame, user_col: str = "user_id") -> DataFrame:
@@ -31,24 +34,25 @@ def valid_user_filter(df: DataFrame, user_col: str = "user_id") -> DataFrame:
     The fixture ``user_id`` is numeric, so the ``!= ''`` arm only
     applies to string-typed columns (the reference's contract).
     """
-    c = F.col(user_col)
-    cond = c.isNotNull()
+    cond = f"`{user_col}` IS NOT NULL"
     if dict(df.dtypes).get(user_col) == "string":
-        cond = cond & (c != F.lit(""))
+        cond += f" AND `{user_col}` != ''"
     return df.where(cond)
 
 
 def tracked_events_filter(df: DataFrame, events: list[str], col: str = "event_type") -> DataFrame:
     """F3 — set-membership filter (reference: extract_bq.py:89-93,113)."""
-    return df.where(F.col(col).isin(events))
+    if not events:
+        return df.where("false")  # SQL has no empty IN list
+    return df.where(f"`{col}` IN ({', '.join(map(_sql_str, events))})")
 
 
 def watermark_filter(df: DataFrame, watermark_us: int, ts_col: str = "ts") -> DataFrame:
     """F4 — only rows strictly newer than the persisted high-water mark
-    (reference: flask_server.py:151). At scale this predicate must also
-    prune date partitions — see streaming.incremental.
+    (reference: flask_server.py:151). Source files the watermark rules
+    out are skipped before the read — see io.load_events_after.
     """
-    return df.where(F.unix_micros(F.col(ts_col)) > F.lit(watermark_us))
+    return df.where(f"unix_micros(`{ts_col}`) > {int(watermark_us)}")
 
 
 def date_range_filter(df: DataFrame, date_from: str, date_to: str, ts_col: str = "ts") -> DataFrame:
@@ -56,7 +60,8 @@ def date_range_filter(df: DataFrame, date_from: str, date_to: str, ts_col: str =
     of `_TABLE_SUFFIX BETWEEN` (reference: extract_bq.py:98-100,110).
     On a date-partitioned lake this is partition pruning, not a scan.
     """
-    return df.where(F.to_date(F.col(ts_col)).between(F.lit(date_from), F.lit(date_to)))
+    day = f"to_date(`{ts_col}`)"
+    return df.where(f"{day} >= {_sql_str(date_from)} AND {day} <= {_sql_str(date_to)}")
 
 
 def dedup_application_events(
@@ -82,13 +87,11 @@ def dedup_application_events(
     projection, and the two minima coincide only while collision
     groups are small (every driver fixture — the latent-bug shape).
     """
-    oc = F.col(order_col)
-    if numeric_order:
-        oc = oc.cast("long")
-    w = Window.partitionBy(*keys).orderBy(oc.asc())
+    order = f"CAST(`{order_col}` AS BIGINT)" if numeric_order else f"`{order_col}`"
+    part = ", ".join(f"`{k}`" for k in keys)
     return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
+        df.selectExpr("*", f"row_number() OVER (PARTITION BY {part} ORDER BY {order} ASC) AS __rn")
+        .where("__rn = 1")
         .drop("__rn")
     )
 
@@ -113,19 +116,21 @@ def flagship_pipeline(
     event_name_detail.
     """
     tracked = tracked if tracked is not None else FIXTURE_TRACKED_EVENTS
+    # SQL-string builds, one filter per where: a Column-DSL chain costs
+    # an order of magnitude more py4j round trips for the same plan
     df = valid_user_filter(events)
     df = tracked_events_filter(df, tracked)
     if watermark_us is not None:
         df = watermark_filter(df, watermark_us)
     if date_from is not None and date_to is not None:
         df = date_range_filter(df, date_from, date_to)
-    df = df.select(
-        F.col("user_id"),
-        F.to_date("ts").alias("event_date"),
-        F.unix_micros("ts").alias("event_timestamp"),
-        F.col("event_type").alias("event_name"),
-        F.col("event_id").cast("string").alias("event_id"),
-        json_param("props", "k").alias("event_name_detail"),
+    df = df.selectExpr(
+        "user_id",
+        "to_date(ts) AS event_date",
+        "unix_micros(ts) AS event_timestamp",
+        "event_type AS event_name",
+        "CAST(event_id AS STRING) AS event_id",
+        "get_json_object(props, '$.k') AS event_name_detail",
     )
     return dedup_application_events(
         df, ["user_id", "event_timestamp", "event_name"], order_col="event_id"

@@ -41,8 +41,8 @@ def _orphan_sort_key(name: str, base: str) -> tuple[int, str]:
 def recover_interrupted_compaction(path: str) -> bool:
     """A crash between the two swap renames leaves the target missing
     and the data stranded in ``<path>.old.<ns>.<hex>`` — a subsequent
-    appender would see PATH_NOT_FOUND and silently treat the batch as
-    a first load (history loss). This restores the newest orphan (by
+    appender would find no target and silently treat the batch as a
+    first load (history loss). This restores the newest orphan (by
     the monotonic-nanos suffix — uuid hex is NOT temporal) and removes
     the losers so stale snapshots can't be resurrected later. Call
     sites: compact_parquet entry and idempotent_append_parquet's

@@ -21,7 +21,6 @@ import contextlib
 import os
 import time
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -103,6 +102,13 @@ class TargetLock:
         return False
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop filesystem Spark
+    would read it through (local, HDFS or an object store alike)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+
+
 def idempotent_append_parquet(
     spark: SparkSession,
     df: DataFrame,
@@ -117,11 +123,15 @@ def idempotent_append_parquet(
        survivor happens upstream in the pipeline; here dropDuplicates
        suffices because upstream already made rows per key unique);
     2. left_anti against the existing target's keys — only the key
-       columns are read (column pruning), and when the target is
-       date-partitioned the existing-keys side is semi-join-pruned to
-       the partition values present in this batch (dynamic partition
-       pruning skips the untouched partitions' files; at 100 TB the
-       anti-join otherwise scans the whole history every run);
+       columns are read (column pruning). Catalyst copies the batch's
+       constraints on key columns onto the target side
+       (InferFiltersFromConstraints) and pushes them into the target
+       scan: for an incremental batch, ``event_timestamp > wm`` lets
+       row-group stats skip every file of earlier runs. When the
+       target is date-partitioned the existing-keys side is also
+       semi-join-pruned to the partition values present in this batch
+       (dynamic partition pruning skips the untouched partitions'
+       files). A batch with no such constraint reads every target key;
     3. append, under a cross-process ``TargetLock`` — the read-keys →
        append sequence is only exactly-once for a *serialized* writer
        (see TargetLock; the in-process single-flight lock in
@@ -142,13 +152,15 @@ def idempotent_append_parquet(
 
             recover_interrupted_compaction(target_path)
         batch = df.dropDuplicates(keys)
-        try:
-            # only a missing target may be ignored; any other read
-            # failure must abort — treating a corrupt/unreadable target
-            # as "first load" would skip the anti-join and
-            # double-insert on replay. The target holds what earlier
-            # batches of this schema wrote: read it with the batch's
-            # schema instead of inferring it (no inference job)
+        # only a missing target is a first load; any read failure of an
+        # existing one must abort — treating a corrupt/unreadable target
+        # as "first load" would skip the anti-join and double-insert on
+        # replay. Asking the filesystem, not a failed Spark read, keeps
+        # a first load free of Spark's PATH_NOT_FOUND error logs
+        if _path_exists(spark, target_path):
+            # the target holds what earlier batches of this schema
+            # wrote: read it with the batch's schema instead of
+            # inferring it (no inference job)
             existing = spark.read.schema(df.schema).parquet(target_path)
             if partition_by:
                 # prune the anti-join's right side to the partition
@@ -170,10 +182,6 @@ def idempotent_append_parquet(
             batch = batch.join(existing.select(*keys), keys, "left_anti").select(
                 *df.columns
             )
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-            # first load — no target yet
         # one evaluation of the anti-join plan both counts and writes,
         # so records_inserted equals the rows committed even if the
         # source moves. The observe point sits above the last exchange,

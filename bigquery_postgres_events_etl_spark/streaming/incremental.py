@@ -16,7 +16,11 @@ Semantics preserved 1:1 (SURVEY §2.9):
 - ST8: the same progress-record shape the reference exposes at
   /status (flask_server.py:210-221).
 
-A parquet-sink run reads the source once, like the reference's single
+A run reads only the source files whose footers allow a row newer
+than the watermark (io.load_events_after), the reference's
+``_TABLE_SUFFIX BETWEEN`` shard pruning (extract_bq.py:98-110); a run
+with no such file returns at once and runs no Spark job. A parquet-sink
+run reads those files once, like the reference's single
 fetch-then-insert (flask_server.py:142-196): the batch's row count and
 max timestamp, and the sink's inserted count, are ``Observation``s on
 the sink's one write job — no stats job, no cache. The JDBC sink keeps
@@ -31,7 +35,7 @@ import time
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_events_after
 from ..operators.etl import flagship_pipeline
 from ..sources.sinks import idempotent_append_parquet
 from ..sources.watermark import read_watermark_us, write_watermark_us
@@ -51,12 +55,16 @@ def run_incremental_etl(
 ) -> dict:
     """One incremental run; returns the ST8 progress record.
 
-    The watermark bounds rows, not files: flagship_pipeline filters
-    on ``unix_micros(ts) > wm`` after the scan. Spark does not push
-    that predicate into the parquet scan (its PushedFilters hold only
-    the null checks and the tracked-event list), so every trigger
-    reads the whole source table; nothing here skips source files or
-    days the way the reference's ``_TABLE_SUFFIX BETWEEN`` does.
+    The watermark bounds files and rows. Before any Spark work, one
+    pass over the source's parquet footers keeps the files whose max
+    ``ts`` is above the watermark (io.load_events_after); when no file
+    is kept, the run returns the success record with nothing fetched,
+    before the sink branch, so neither sink runs a job.
+    flagship_pipeline then filters the kept files' rows on
+    ``unix_micros(ts) > wm``. The parquet sink's anti-join reads the
+    target's keys under the batch's ``event_timestamp > wm``, which
+    Catalyst infers from this filter and pushes into the target scan:
+    row-group stats skip the target files of earlier runs.
 
     ``jdbc_target``: when given ({"url": …, "table": …, optional
     "driver", "writer_options", "conflict_keys"}), the sink is the
@@ -73,10 +81,13 @@ def run_incremental_etl(
     t0 = time.time()
     try:
         wm = read_watermark_us(state_path, lookback_hours, now_us=now_us)
-        events = load_table(spark, source_sf_dir, "events")
-        batch = flagship_pipeline(events, tracked=tracked, watermark_us=wm)
+        events = load_events_after(spark, source_sf_dir, wm)
+        batch = None if events is None else flagship_pipeline(events, tracked=tracked, watermark_us=wm)
         stats = (F.count(F.lit(1)).alias("n"), F.max("event_timestamp").alias("max_ts"))
-        if jdbc_target is None:
+        if batch is None:
+            # every source footer proves ts <= wm: nothing to fetch
+            fetched, inserted, max_ts = 0, 0, None
+        elif jdbc_target is None:
             # one pass: the batch stats ride on the sink's write job,
             # read after it returns. This observe point sits upstream
             # of the sink's dedup and anti-join; if the plan shuffles

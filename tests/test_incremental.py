@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from bigquery_postgres_events_etl_spark.io import load_table
@@ -87,44 +90,23 @@ def test_error_lands_in_status(spark, tmp_path):
 
 # -- one-pass contract --------------------------------------------------
 
-_SOURCE_SCAN = "events.parquet"  # load_table's file under the source dir
+_SOURCE_SCAN = "events.parquet"  # the events source under the source dir
 
 
 def _source_scan_jobs(spark, group: str) -> int:
-    """Jobs of ``group`` that ran the events source scan.
+    """Scans of the events source that emitted rows in ``group``'s
+    SQL executions. A query runs each scan node in one stage of one of
+    its jobs; a scan inside a cached plan counts only in the execution
+    that materialized the cache."""
+    from bench import scan_records
 
-    A query runs each scan node in one stage of one of its jobs, so
-    this counts the group's SQL executions whose plan graph holds a
-    scan of the source that emitted rows. A scan inside a cached plan
-    counts only in the execution that materialized the cache."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    store = spark._jsparkSession.sharedState().statusStore()
-    executions = store.executionsList()
-    n = 0
-    for i in range(executions.size()):
-        e = executions.apply(i)
-        own = e.jobs()
-        if not any(own.contains(j) for j in jobs):
-            continue
-        values, it = {}, store.executionMetrics(e.executionId()).iterator()
-        while it.hasNext():
-            kv = it.next()
-            values[kv._1()] = kv._2()
-        nodes = store.planGraph(e.executionId()).allNodes()
-        for k in range(nodes.size()):
-            node = nodes.apply(k)
-            if not (node.name().startswith("Scan") and _SOURCE_SCAN in node.desc()):
-                continue
-            metrics = node.metrics()
-            rows = [
-                values.get(metrics.apply(m).accumulatorId(), "0")
-                for m in range(metrics.size())
-                if metrics.apply(m).name() == "number of output rows"
-            ]
-            n += any(r != "0" for r in rows)
-    return n
+    return sum(1 for desc, rows in scan_records(spark, group) if _SOURCE_SCAN in desc and rows)
+
+
+def _source_max_us(sf_dir) -> int:
+    """The source's largest ``ts`` in µs, read from its data pages."""
+    ts = pq.read_table(os.path.join(sf_dir, _SOURCE_SCAN), columns=["ts"]).column("ts")
+    return pc.max(ts.cast(pa.int64())).as_py()
 
 
 def _batch(spark, sf_dir, wm):
@@ -149,7 +131,8 @@ def _two_pass(spark, sf_dir, wm, target):
 
 
 def test_parquet_trigger_is_one_pass_and_matches_two_pass(spark, sf_dir, tmp_path):
-    """A parquet-sink trigger scans the source in one Spark job, and its
+    """A parquet-sink trigger scans the source in at most one Spark job
+    (none when the source holds no row above the watermark), and its
     observed record equals a separate two-pass computation: a first
     load, a new day (part new, part already loaded), an idle trigger
     and a crash replay."""
@@ -175,7 +158,9 @@ def test_parquet_trigger_is_one_pass_and_matches_two_pass(spark, sf_dir, tmp_pat
             sc._jsc.clearJobGroup()
         assert got["status"] == "success", got
         assert {k: got[k] for k in want} == want, kind
-        assert _source_scan_jobs(spark, group) == 1, kind
+        # a trigger whose source holds no row newer than the watermark
+        # runs no source scan at all: the footers prove it first
+        assert _source_scan_jobs(spark, group) == int(_source_max_us(sf_dir) > wm), kind
         # commit-then-advance, to the observed max
         assert read_watermark_us(state, 1, now_us=NOW_US) == max(wm, want["last_processed_timestamp"])
         records[kind] = got

@@ -56,6 +56,49 @@ def test_idempotent_append_partial_overlap(spark, sf_dir, tmp_path):
     assert spark.read.parquet(target).count() == batch.count()
 
 
+def test_first_load_is_decided_from_the_filesystem(spark, sf_dir, tmp_path, monkeypatch):
+    """A first load never asks Spark to read the missing target (a
+    failed read logs Spark's PATH_NOT_FOUND stack traces); the next
+    append reads it and inserts nothing."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        reads.extend(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    batch = flagship_pipeline(load_table(spark, sf_dir, "events"))
+    target = str(tmp_path / "t")
+
+    assert idempotent_append_parquet(spark, batch, target) == batch.count() > 0
+    assert target not in reads
+    assert idempotent_append_parquet(spark, batch, target) == 0
+    assert target in reads
+
+
+def test_unreadable_target_still_raises(spark, sf_dir, tmp_path):
+    """Only a missing target is a first load: a corrupt file in an
+    existing one fails the append and commits nothing."""
+    import os
+
+    import pytest
+
+    batch = flagship_pipeline(load_table(spark, sf_dir, "events"))
+    target = tmp_path / "t"
+    n = idempotent_append_parquet(spark, batch, str(target))
+    (target / "part-99999-corrupt.parquet").write_bytes(b"PAR1 not parquet")
+    files = sorted(os.listdir(target))
+
+    with pytest.raises(Exception):
+        idempotent_append_parquet(spark, batch, str(target))
+    assert sorted(os.listdir(target)) == files
+    os.remove(target / "part-99999-corrupt.parquet")
+    assert spark.read.parquet(str(target)).count() == n
+
+
 def test_upsert_sql_shape():
     """K4: the ON CONFLICT DO NOTHING statement matches the
     reference's (extract_bq.py:216-221)."""

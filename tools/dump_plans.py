@@ -10,6 +10,9 @@ from the registry of the checkout at ``--tree``, so a checkout of an
 older commit yields that commit's plans. The fixture scale comes from
 ``SPARK_GRAFT_SF_DIR`` (default sf0.1).
 
+Both outputs go through :func:`stable_plan`, so two dumps of the same
+plans are byte-identical and can be diffed.
+
 Usage: python tools/dump_plans.py [sf_dir]
        python tools/dump_plans.py --tree DIR --out-dir DIR --suffix S NAME...
 """
@@ -18,10 +21,85 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+
+# ids a driver allocates from global counters: they shift whenever
+# earlier code allocates a different number of them
+_ID_MASKS = [
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
+]
+_EXPAND_ARGS = re.compile(r"^Arguments: \[(\[.*\])\], \[(.*\bgid#\d+.*)\]$", re.M)
+
+
+def _split(s: str) -> list[str]:
+    """Split ``s`` on the commas outside brackets and parentheses."""
+    out, depth, start = [], 0, 0
+    for i, c in enumerate(s):
+        depth += (c in "([") - (c in ")]")
+        if c == "," and depth == 0:
+            out.append(s[start:i].strip())
+            start = i + 1
+    return out + [s[start:].strip()]
+
+
+def _mask(s: str) -> str:
+    for pattern, repl in _ID_MASKS:
+        s = pattern.sub(repl, s)
+    return s
+
+
+def _sort_expand_groups(plan: str, m: re.Match) -> str:
+    """Put the distinct groups of one multi-``countDistinct`` Expand
+    (Spark's RewriteDistinctAggregates) in name order. Spark orders
+    them, their columns and their ``gid`` literals by expression-id
+    hash, so the same plan prints in either order; this renames
+    consistently through the whole plan."""
+    projs = [_split(p[1:-1]) for p in _split(m.group(1))]
+    outs = _split(m.group(2))
+    g = next((i for i, o in enumerate(outs) if re.fullmatch(r"gid#\d+", o)), None)
+    if g is None:
+        return plan
+    cols = [i for i in range(g) if any(p[i] == "null" for p in projs)]
+    order = sorted(cols, key=lambda i: _mask(outs[i]))
+    perm = list(range(len(outs)))
+    for i, j in zip(cols, order):
+        perm[i] = j
+    projs = [[p[perm[i]] for i in range(len(p))] for p in projs]
+    new_outs = [outs[perm[i]] for i in range(len(outs))]
+    regular = [p for p in projs if p[g] == "0"]
+    distinct = sorted((p for p in projs if p[g] != "0"), key=lambda p: _mask(str(p[:g] + p[g + 1:])))
+    gids = sorted((p[g] for p in distinct), key=int)
+    remap = {p[g]: new for p, new in zip(distinct, gids)}
+    for p, new in zip(distinct, gids):
+        p[g] = new
+    line = "Arguments: [{}], [{}]".format(
+        ", ".join(f"[{', '.join(p)}]" for p in regular + distinct), ", ".join(new_outs)
+    )
+    plan = plan[:m.start()] + line + plan[m.end():]
+    if cols:
+        old_seq = ", ".join(outs[i] for i in cols)
+        plan = plan.replace(old_seq, ", ".join(outs[j] for j in order))
+    gid = re.escape(outs[g])
+    return re.sub(rf"({gid} = )(\d+)", lambda x: x.group(1) + remap.get(x.group(2), x.group(2)), plan)
+
+
+def stable_plan(plan: str) -> str:
+    """``plan`` without its run-to-run noise: each multi-``countDistinct``
+    Expand's distinct groups in name order, then ``[plan_id=N]``,
+    expression ids (``#N``), ``RDD[N]`` and ``_common_expr_N`` masked."""
+    pos = 0
+    while (m := _EXPAND_ARGS.search(plan, pos)) is not None:
+        plan = _sort_expand_groups(plan, m)
+        pos = m.start() + 1
+    return _mask(plan)
 
 
 def dump_files(tree: str, out_dir: str, suffix: str, names: list[str]) -> None:
@@ -38,7 +116,7 @@ def dump_files(tree: str, out_dir: str, suffix: str, names: list[str]) -> None:
     qs = all_queries()
     for name in names:
         spark.catalog.clearCache()
-        plan = formatted_plan(qs[name](spark, sf_dir))
+        plan = stable_plan(formatted_plan(qs[name](spark, sf_dir)))
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(
@@ -249,7 +327,7 @@ def dump_explains(sf_dir: str) -> None:
         "corpus_datasheet",
     ]
     for name in HEADLINE + extra:
-        plan = formatted_plan(qs[name](spark, sf_dir))
+        plan = stable_plan(formatted_plan(qs[name](spark, sf_dir)))
         out.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
 
     with open(os.path.join(REPO, "EXPLAINS.md"), "w") as f:

@@ -23,7 +23,13 @@ runs, second run steady-state) and prints per-query
 "how many times worse than perfectly linear" number SCALE.md quotes
 (LSH/banded tiers should hold ≲1.5).
 
+With ``--history 1,30,120`` it instead measures the incremental ETL
+trigger against its history (see :func:`history_sweep`): per history
+length, the wall and the source and target input records of a
+new-day, an idle and a crash-replay trigger.
+
 Usage: python tools/scale_curve.py  [--regen]
+       python tools/scale_curve.py --history 1,30,120
 """
 
 from __future__ import annotations
@@ -33,10 +39,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 AMPLIFY = 10
-SF1_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale_sf1")
+SF1_DIR = os.path.join(REPO, ".scale_sf1")
 SF01_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 QUERIES = [
@@ -375,6 +382,82 @@ def _link_dims() -> None:
         os.link(src, dst)
 
 
+HISTORY_ROWS_PER_DAY = 20_000
+HISTORY_SEED = 7
+HISTORY_CYCLES = 2  # the last cycle is reported; the first warms the JVM
+
+
+def history_sweep(spark, day_counts: list[int]) -> dict[str, dict]:
+    """The incremental ETL trigger's cost against the history behind it.
+
+    For each count N, N generated days (perfbench's day generator,
+    ``HISTORY_ROWS_PER_DAY`` rows a day, one file a day) are backfilled
+    into a parquet target; then each cycle adds a day and runs a
+    new-day, an idle and a crash-replay trigger (the watermark rewound
+    to before the new day). For the last cycle's triggers it returns
+    the wall seconds, the fetched and inserted rows, the rows the
+    source and the target scans read (bench.scan_records) and the job
+    group's ``inputRecords`` (their sum)."""
+    import tempfile
+
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    from gen import EPOCH_2024_US, write_events_day
+
+    from bench import group_metrics, scan_records
+    from bigquery_postgres_events_etl_spark.streaming.incremental import (
+        run_incremental_etl,
+    )
+
+    sc = spark.sparkContext
+    rows = HISTORY_ROWS_PER_DAY
+    out: dict[str, dict] = {}
+    for n in day_counts:
+        with tempfile.TemporaryDirectory(prefix=f"history{n}-") as base:
+            state, target = os.path.join(base, "wm"), os.path.join(base, "target")
+
+            def trigger(group: str, wm: int | None = None) -> dict:
+                if wm is not None:
+                    with open(state, "w") as f:
+                        f.write(str(wm))
+                sc.setJobGroup(group, group)
+                t0 = time.perf_counter()
+                try:
+                    r = run_incremental_etl(spark, base, state, target)
+                finally:
+                    sc._jsc.clearJobGroup()
+                if r["status"] != "success":
+                    raise RuntimeError(f"{group}: {r}")
+                r["wall_s"] = round(time.perf_counter() - t0, 3)
+                return r
+
+            for d in range(n):
+                write_events_day(HISTORY_SEED, d, rows, rows // 5, base)
+            trigger(f"history{n}-backfill", EPOCH_2024_US - 1)
+            for c in range(HISTORY_CYCLES):
+                with open(state) as f:
+                    wm = int(f.read())
+                write_events_day(HISTORY_SEED, n + c, rows, rows // 5, base)
+                cycle = {}
+                for kind, rewind in (("batch", None), ("idle", None), ("replay", wm)):
+                    group = f"history{n}-{c}-{kind}"
+                    r = trigger(group, rewind)
+                    scans = scan_records(spark, group)
+                    cycle[kind] = {
+                        "wall_s": r["wall_s"],
+                        "fetched": r["records_fetched"],
+                        "inserted": r["records_inserted"],
+                        "source_records": sum(v for desc, v in scans if "events.parquet" in desc),
+                        "target_records": sum(v for desc, v in scans if target in desc),
+                    }
+            metrics = group_metrics(spark)
+            for kind, m in cycle.items():
+                # a trigger that ran no job has no group
+                m["input_records"] = metrics.get(f"history{n}-{c}-{kind}", {}).get("input_records", 0)
+            out[f"{n}d"] = cycle
+            print(f"# history {n} days: {cycle}", file=sys.stderr)
+    return out
+
+
 def main() -> None:
     from bench import group_metrics, noop_run
     from bigquery_postgres_events_etl_spark.registry import all_queries
@@ -382,6 +465,10 @@ def main() -> None:
 
     os.environ.setdefault("SPARK_GRAFT_UI", "true")
     spark = get_spark(app_name="scale_curve")
+    if "--history" in sys.argv:
+        days = sys.argv[sys.argv.index("--history") + 1]
+        print(json.dumps(history_sweep(spark, [int(d) for d in days.split(",")])))
+        return
     if "--regen" in sys.argv or not os.path.isdir(
         os.path.join(SF1_DIR, "documents.parquet")
     ):
