@@ -85,31 +85,61 @@ def noop_run(spark, fn, sf_dir: str, group: str) -> float:
     return time.time() - t0
 
 
-def group_metrics(spark) -> dict[str, dict]:
-    """Per job group, from one read of the UI REST jobs and stages:
-    ``jobs``, ``job_s`` (summed submission → completion), and
-    ``tasks``, ``input_records``, ``shuffle_read_mb`` and ``shuffle_mb``
-    (shuffle write) summed over non-skipped stages. Wall clock on a
-    shared machine swings ±30%; job counts and bytes don't, so these
-    are the plan-health signal. Callers strip their own group suffix.
-    Returns {} if the UI is unavailable or any read fails, so a caller
-    treats a failure as missing data; one that gates on these numbers
-    must assert its groups are present."""
-    import urllib.request
-
+def _group_job_ids(spark, group: str) -> list[int]:
+    """Ids of job group ``group``'s jobs, once the listener bus has
+    delivered every event to the driver's status store."""
     sc = spark.sparkContext
-    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
-    def api(path: str):
-        with urllib.request.urlopen(f"{base}/{path}", timeout=30) as r:
-            return json.loads(r.read())
+
+def _last_attempt(store, stage_id: int):
+    """Stage ``stage_id``'s last attempt in the status store ``store``,
+    or None once evicted (the store drops skipped stages first)."""
+    from py4j.protocol import Py4JJavaError
 
     try:
-        jobs = api("jobs")
-        stages = {s["stageId"]: s for s in api("stages")}
-        return _sum_by_group(jobs, stages)
-    except Exception:  # UI disabled or unreachable, or a malformed reply
-        return {}
+        return store.lastStageAttempt(stage_id)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.util.NoSuchElementException":
+            raise
+        return None
+
+
+def group_metrics(spark, group: str) -> dict:
+    """Job group ``group``'s ``jobs``, ``job_s`` (summed submission →
+    completion), and ``tasks``, ``input_records``, ``shuffle_read_mb``
+    and ``shuffle_mb`` (shuffle write) summed over non-skipped stages,
+    read from the driver's status store over py4j (no UI needed); all
+    zero for a group that ran no job. Read soon after the group runs:
+    the store keeps only the newest 1000 jobs and 1000 stages, and a
+    stage it no longer holds counts as skipped. Wall clock on a shared
+    machine swings ±30%; job counts and bytes don't, so these are the
+    plan-health signal."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    m = {"jobs": 0, "job_s": 0.0, "tasks": 0, "input_records": 0,
+         "shuffle_read_mb": 0.0, "shuffle_mb": 0.0}
+    for jid in _group_job_ids(spark, group):
+        job = store.job(jid)
+        m["jobs"] += 1
+        sub, comp = job.submissionTime(), job.completionTime()
+        if sub.isDefined() and comp.isDefined():
+            m["job_s"] += (comp.get().getTime() - sub.get().getTime()) / 1000
+        sids = job.stageIds()
+        for k in range(sids.size()):
+            st = _last_attempt(store, sids.apply(k))
+            if st is None or st.status().toString() == "SKIPPED":
+                continue
+            m["tasks"] += st.numCompleteTasks()
+            # records, not inputBytes: the status store's input bytes
+            # under-report a parquet scan about 100x
+            m["input_records"] += st.inputRecords()
+            m["shuffle_read_mb"] += st.shuffleReadBytes() / 1e6
+            m["shuffle_mb"] += st.shuffleWriteBytes() / 1e6
+    m["job_s"] = round(m["job_s"], 3)
+    for k in ("shuffle_read_mb", "shuffle_mb"):
+        m[k] = round(m[k], 6)  # to the byte: callers gate on these
+    return m
 
 
 def scan_records(spark, group: str) -> list[tuple[str, int]]:
@@ -118,9 +148,7 @@ def scan_records(spark, group: str) -> list[tuple[str, int]]:
     store over py4j (no UI needed). A parquet scan emits every row of
     the row groups it reads, so its rows are its input records; the
     description names the files or directory scanned."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = _group_job_ids(spark, group)
     store = spark._jsparkSession.sharedState().statusStore()
     executions = store.executionsList()
     out = []
@@ -145,42 +173,6 @@ def scan_records(spark, group: str) -> list[tuple[str, int]]:
                 if metrics.apply(m).name() == "number of output rows"
             )
             out.append((node.desc(), rows))
-    return out
-
-
-def _sum_by_group(jobs: list[dict], stages: dict[int, dict]) -> dict[str, dict]:
-    from datetime import datetime
-
-    def ts(s: str) -> float:
-        return datetime.strptime(s[:23], "%Y-%m-%dT%H:%M:%S.%f").timestamp()
-
-    out: dict[str, dict] = {}
-    for job in jobs:
-        group = job.get("jobGroup")
-        if not group:
-            continue
-        m = out.setdefault(
-            group,
-            {"jobs": 0, "job_s": 0.0, "tasks": 0, "input_records": 0,
-             "shuffle_read_mb": 0.0, "shuffle_mb": 0.0},
-        )
-        m["jobs"] += 1
-        if job.get("completionTime") and job.get("submissionTime"):
-            m["job_s"] += ts(job["completionTime"]) - ts(job["submissionTime"])
-        for sid in job.get("stageIds", []):
-            s = stages.get(sid)
-            if not s or s.get("status") == "SKIPPED":
-                continue
-            m["tasks"] += s.get("numCompleteTasks", 0)
-            # records, not inputBytes: the status store's input bytes
-            # under-report a parquet scan about 100x
-            m["input_records"] += s.get("inputRecords", 0)
-            m["shuffle_read_mb"] += s.get("shuffleReadBytes", 0) / 1e6
-            m["shuffle_mb"] += s.get("shuffleWriteBytes", 0) / 1e6
-    for m in out.values():
-        m["job_s"] = round(m["job_s"], 3)
-        for k in ("shuffle_read_mb", "shuffle_mb"):
-            m[k] = round(m[k], 6)  # to the byte: callers gate on these
     return out
 
 
@@ -265,10 +257,6 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    # the UI powers the per-query job/shuffle metrics; REST polling
-    # happens between entries, never inside a timed run
-    os.environ.setdefault("SPARK_GRAFT_UI", "true")
-
     from bigquery_postgres_events_etl_spark.registry import all_queries
     from bigquery_postgres_events_etl_spark.session import get_spark
 
@@ -316,10 +304,11 @@ def main() -> None:
         all_runs[name] = []
         for i in range(5):
             timed_run(name, i)
-        # read the steady-state run's metrics now: the UI store keeps
-        # only the newest 1000 jobs and stages, so one read after all
-        # 34 entries would find most #r1 groups evicted
-        metrics[name] = group_metrics(spark).get(f"{name}#r1", {})
+        # read the steady-state run's metrics now, between entries and
+        # never inside a timed run: the status store keeps only the
+        # newest 1000 jobs and stages, so one read after all 34 entries
+        # would find most #r1 groups evicted
+        metrics[name] = group_metrics(spark, f"{name}#r1")
 
     flagged = _flag_movers(all_runs, prev_med, prev_spread)
     # Interleaved A/B re-runs: 4 extra rounds, round-robin across the
@@ -360,7 +349,7 @@ def main() -> None:
     # file, BENCH_DETAIL.json, next to this script.
     sidecar = {
         "queries_detail": detail,
-        "shuffle": {n: m for n, m in metrics.items() if m},
+        "shuffle": metrics,
         "sf": sf,
         "cpus": cpus,
         "flagged_rerun": flagged,

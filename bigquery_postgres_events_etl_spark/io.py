@@ -12,7 +12,7 @@ no schema-inference job per read. The fixtures store ``events.ts``,
 timestamp[us] with ``isAdjustedToUTC=false``; a declared TIMESTAMP reads
 them as session-zoned (UTC) timestamps whatever the session's
 ``inferTimestampNTZ`` setting. The legacy TIMESTAMP(NANOS) layout of
-``events.ts`` is still read, via :func:`_ts_is_nanos_int64`.
+``events.ts`` is still read; :func:`_ts_footers` detects it.
 :func:`load_events_after` reads only the events files whose footers
 allow a row newer than a watermark: the incremental ETL's shard pruning.
 """
@@ -171,12 +171,6 @@ def _ts_footers(path: str) -> tuple[bool, list[tuple[str, int | None]] | None]:
     return nanos, maxima if listing and listing[1] else None
 
 
-def _ts_is_nanos_int64(path: str) -> bool:
-    """Whether ``events.ts`` under ``path`` is the legacy nanos layout
-    (see :func:`_ts_footers`); ValueError on a mixed directory."""
-    return _ts_footers(path)[0]
-
-
 def _read(reader, paths: list[str], name: str, nanos: bool) -> DataFrame:
     """Read ``paths`` with table ``name``'s declared schema (see
     :func:`read_declared`); ``nanos`` picks the legacy ``ts`` layout."""
@@ -201,7 +195,7 @@ def read_declared(reader, path: str, name: str) -> DataFrame:
     loudly (PARQUET_COLUMN_DATA_TYPE_MISMATCH); a column the files lack
     reads as NULL.
     """
-    return _read(reader, [path], name, name == "events" and _ts_is_nanos_int64(path))
+    return _read(reader, [path], name, name == "events" and _ts_footers(path)[0])
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

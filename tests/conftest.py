@@ -14,9 +14,6 @@ SF_SMOKE = "/root/testdata/sf0.001"
 def spark():
     from bigquery_postgres_events_etl_spark.session import get_spark
 
-    # UI on: the runtime shuffle-byte assertions (test_plans) read the
-    # REST status API — the same evidence channel bench.py scrapes
-    os.environ.setdefault("SPARK_GRAFT_UI", "true")
     spark = get_spark(app_name="tests", shuffle_partitions=8)
     yield spark
 

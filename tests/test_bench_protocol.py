@@ -4,9 +4,10 @@ bench.py is driver-critical: a malformed or over-long final line loses
 the round's official perf record (it happened in r5 — 2,971-byte line
 truncated by the driver's ~2,000-byte stdout tail — and nearly again
 in r6 via an assert placed before the print). These tests pin the
-protocol pieces that do not need a SparkSession: the previous-round
-reference loader, the mover-flagging trigger, the REST job-group
-reader, and the final-line size budget under worst-case numbers.
+protocol pieces: the previous-round reference loader, the
+mover-flagging trigger, the final-line size budget under worst-case
+numbers, and (on the session fixture) the status-store job-group
+reader.
 """
 
 from __future__ import annotations
@@ -136,73 +137,41 @@ def test_final_line_fits_driver_tail_window_worst_case():
     assert len(line) < 1500, len(line)
 
 
-def test_group_metrics_sums_non_skipped_stages_per_group(monkeypatch):
-    """One read of the REST jobs + stages, summed per job group over
-    non-skipped stages; job-seconds run submission → completion."""
-    import io
-    import types
-    import urllib.request
+def test_group_metrics_sums_non_skipped_stages_per_group(spark):
+    """Per job group, from the driver's status store: one shuffle
+    (4 map, 2 reduce partitions) counted once under one group and a
+    twin counted twice under another. The twin's second job reuses its
+    map output, so that stage is SKIPPED: two jobs, two more tasks, and
+    no more shuffle bytes. A group that ran no job reads all zero."""
+    sc = spark.sparkContext
 
-    jobs = [
-        {"jobGroup": "q#r1", "stageIds": [1, 2],
-         "submissionTime": "2026-01-01T00:00:00.000GMT",
-         "completionTime": "2026-01-01T00:00:01.500GMT"},
-        {"jobGroup": "q#r1", "stageIds": [3],
-         "submissionTime": "2026-01-01T00:00:02.000GMT",
-         "completionTime": "2026-01-01T00:00:02.250GMT"},
-        {"jobGroup": "q#r0", "stageIds": [4]},
-        {"stageIds": [4]},  # no group: not reported
-    ]
-    stage = {"numCompleteTasks": 2, "inputRecords": 1_000,
-             "shuffleReadBytes": 500_000, "shuffleWriteBytes": 250_000}
-    stages = [
-        {"stageId": 1, "status": "COMPLETE", **stage},
-        {"stageId": 2, "status": "SKIPPED", **stage},
-        {"stageId": 3, "status": "COMPLETE", **stage},
-        {"stageId": 4, "status": "COMPLETE", **stage},
-    ]
+    def counted(group: str, times: int) -> dict:
+        rdd = sc.parallelize(range(1000), 4).map(lambda x: (x % 10, 1)).reduceByKey(
+            lambda a, b: a + b, 2
+        )
+        sc.setJobGroup(group, group)
+        try:
+            for _ in range(times):
+                rdd.count()
+        finally:
+            sc._jsc.clearJobGroup()
+        return bench.group_metrics(spark, group)
 
-    def urlopen(url, timeout):
-        body = jobs if url.endswith("/jobs") else stages
-        return io.BytesIO(json.dumps(body).encode())
-
-    monkeypatch.setattr(urllib.request, "urlopen", urlopen)
-    sc = types.SimpleNamespace(uiWebUrl="http://localhost:4040", applicationId="app")
-    got = bench.group_metrics(types.SimpleNamespace(sparkContext=sc))
-    assert got["q#r1"] == {"jobs": 2, "job_s": 1.75, "tasks": 4, "input_records": 2_000,
-                           "shuffle_read_mb": 1.0, "shuffle_mb": 0.5}
-    assert got["q#r0"]["jobs"] == 1 and got["q#r0"]["job_s"] == 0.0
-    assert set(got) == {"q#r1", "q#r0"}
+    once, twice = counted("gm-once", 1), counted("gm-twice", 2)
+    assert once["jobs"] == 1 and twice["jobs"] == 2
+    assert once["tasks"] == 6 and twice["tasks"] == once["tasks"] + 2
+    assert once["shuffle_mb"] > 0
+    assert twice["shuffle_mb"] == once["shuffle_mb"] == once["shuffle_read_mb"]
+    assert twice["shuffle_read_mb"] == 2 * once["shuffle_read_mb"]
+    assert bench.group_metrics(spark, "gm-none") == {
+        "jobs": 0, "job_s": 0.0, "tasks": 0, "input_records": 0,
+        "shuffle_read_mb": 0.0, "shuffle_mb": 0.0,
+    }
 
 
-def test_group_metrics_degrades_to_empty_without_ui():
-    import types
-
-    sc = types.SimpleNamespace(uiWebUrl=None, applicationId="app")
-    assert bench.group_metrics(types.SimpleNamespace(sparkContext=sc)) == {}
-
-
-def test_group_metrics_degrades_to_empty_on_a_broken_reply(monkeypatch):
-    """A read that fails mid-way (truncated HTTP body, or a record
-    missing a field) is missing data, not an error that would abort
-    bench.main before its final line."""
-    import http.client
-    import io
-    import types
-    import urllib.request
-
-    sc = types.SimpleNamespace(uiWebUrl="http://localhost:4040", applicationId="app")
-    spark = types.SimpleNamespace(sparkContext=sc)
-
-    def truncated(url, timeout):
-        raise http.client.IncompleteRead(b"")
-
-    monkeypatch.setattr(urllib.request, "urlopen", truncated)
-    assert bench.group_metrics(spark) == {}
-
-    def malformed(url, timeout):
-        body = [{"jobGroup": "q#r1"}] if url.endswith("/jobs") else [{}]
-        return io.BytesIO(json.dumps(body).encode())
-
-    monkeypatch.setattr(urllib.request, "urlopen", malformed)
-    assert bench.group_metrics(spark) == {}
+def test_evicted_stage_reads_as_absent(spark):
+    """The status store evicts skipped stages first once it holds 1000
+    stages; a stage it does not hold reads as None, which
+    group_metrics counts as skipped."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    assert bench._last_attempt(store, 10**9) is None

@@ -99,7 +99,7 @@ def test_stream_reader_rejects_mixed_encoding_dir(spark, sf_dir, tmp_path):
     than silently corrupt the other encoding's event times."""
     import pytest
 
-    from bigquery_postgres_events_etl_spark.io import _ts_is_nanos_int64
+    from bigquery_postgres_events_etl_spark.io import _ts_footers
 
     table = pq.read_table(f"{sf_dir}/events.parquet")
     idx = table.schema.get_field_index("ts")
@@ -117,7 +117,7 @@ def test_stream_reader_rejects_mixed_encoding_dir(spark, sf_dir, tmp_path):
     )  # TIMESTAMP(NANOS)
 
     with pytest.raises(ValueError, match="mixed ts encodings"):
-        _ts_is_nanos_int64(str(src))
+        _ts_footers(str(src))
     with pytest.raises(ValueError, match="mixed ts encodings"):
         read_events_stream(spark, str(src))
 

@@ -706,16 +706,13 @@ def test_entity_resolve_verify_stage_is_candidate_pruned(spark, sf_dir):
 def test_runtime_shuffle_bytes_match_inventory(spark, sf_dir):
     """SCALE.md's shuffle inventory asserted from the EVENT LOG, not
     the static plan: run three inventory queries under tagged job
-    groups and read actual shuffle-write bytes from the REST status
-    API (bench.group_metrics, the channel bench.py reads). Map-side
+    groups and read actual shuffle-write bytes from the driver's status
+    store (bench.group_metrics, the channel bench.py reads). Map-side
     ops must move ~zero shuffle bytes; single-exchange ops must stay
     within a sliver envelope at sf0.001 — a plan regression that adds
     a real exchange shows up as bytes here even if static node counts
     stay equal (ReusedExchange, cached subtrees)."""
     from bench import group_metrics, noop_run
-
-    if not spark.sparkContext.uiWebUrl:
-        pytest.skip("Spark UI disabled in this session")
 
     qs = all_queries()
     cases = {
@@ -742,10 +739,10 @@ def test_runtime_shuffle_bytes_match_inventory(spark, sf_dir):
         noop_run(spark, qs[name], sf_dir, f"rtshuf-{name}")
     spark.sparkContext.setJobGroup("", "")
 
-    metrics = group_metrics(spark)
-    missing = [n for n in cases if f"rtshuf-{n}" not in metrics]
-    assert not missing, f"no REST job-group metrics for {missing}"
-    written = {n: metrics[f"rtshuf-{n}"]["shuffle_mb"] for n in cases}
+    metrics = {n: group_metrics(spark, f"rtshuf-{n}") for n in cases}
+    missing = [n for n, m in metrics.items() if m["jobs"] == 0]
+    assert not missing, f"no jobs in the job groups of {missing}"
+    written = {n: m["shuffle_mb"] for n, m in metrics.items()}
     over = {
         n: (round(mb, 3), cases[n]) for n, mb in written.items() if mb > cases[n]
     }
@@ -753,19 +750,17 @@ def test_runtime_shuffle_bytes_match_inventory(spark, sf_dir):
 
 
 def test_runtime_input_records_match_row_count(spark, sf_dir):
-    """bench.group_metrics reports a scan's exact input row count (the
-    stage input bytes under-report a parquet scan about 100x)."""
+    """bench.group_metrics reports a scan's exact input row count from
+    the driver's status store (its stage input bytes under-report a
+    parquet scan about 100x)."""
     import pyarrow.parquet as pq
 
     from bench import group_metrics, noop_run
 
-    if not spark.sparkContext.uiWebUrl:
-        pytest.skip("Spark UI disabled in this session")
-
     path = f"{sf_dir}/lineitem.parquet"
     noop_run(spark, lambda s, d: s.read.parquet(path), sf_dir, "inrec-lineitem")
     spark.sparkContext.setJobGroup("", "")
-    got = group_metrics(spark).get("inrec-lineitem", {}).get("input_records")
+    got = group_metrics(spark, "inrec-lineitem")["input_records"]
     assert got == pq.ParquetFile(path).metadata.num_rows
 
 

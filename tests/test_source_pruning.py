@@ -15,6 +15,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from bench import group_metrics
 from bigquery_postgres_events_etl_spark.io import _ts_footers, load_events_after, load_table
 from bigquery_postgres_events_etl_spark.schemas import APPLICATION_EVENTS_DEDUP_KEY
 from bigquery_postgres_events_etl_spark.streaming.incremental import run_incremental_etl
@@ -169,12 +170,6 @@ def test_mixed_encoding_dir_still_raises(spark, tmp_path):
 # -- triggers ------------------------------------------------------------
 
 
-def _group_jobs(spark, group: str) -> int:
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _trigger(spark, sf: str, tmp_path, group: str, wm: int | None = None, **kw) -> dict:
     """One run_incremental_etl under job group ``group``; ``wm``
     overwrites the watermark first (a crash replay rewinds it)."""
@@ -214,11 +209,11 @@ def test_idle_trigger_skips_only_when_the_footers_prove_it(spark, tmp_path, last
     assert idle["records_fetched"] == idle["records_inserted"] == 0
     assert not idle["watermark_advanced"]
     assert idle["last_processed_timestamp"] == load["last_processed_timestamp"]
-    assert (_group_jobs(spark, f"prune-idle-{last}") == 0) == (last == "tracked")
+    assert (group_metrics(spark, f"prune-idle-{last}")["jobs"] == 0) == (last == "tracked")
     if last == "tracked":  # the JDBC leg returns before reaching its (absent) database
         jdbc = _trigger(spark, sf, tmp_path, "prune-jdbc",
                         jdbc_target={"url": "jdbc:derby:memory:absent", "table": "t"})
-        assert jdbc["records_fetched"] == 0 and _group_jobs(spark, "prune-jdbc") == 0
+        assert jdbc["records_fetched"] == 0 and group_metrics(spark, "prune-jdbc")["jobs"] == 0
 
 
 def _file_max_us(path: str) -> int:
@@ -242,11 +237,7 @@ def test_triggers_over_history_read_only_what_is_new(spark, tmp_path):
     the target side, and the target's earlier files fail it on their
     row-group stats. A crash replay with the watermark rewound reads
     the day again, reads only that day's target records, and inserts
-    nothing. Records are the job group's ``inputRecords``."""
-    from bench import group_metrics
-
-    if not spark.sparkContext.uiWebUrl:
-        pytest.skip("Spark UI disabled in this session")
+    nothing. Records are the job group's ``input_records``."""
     sf, seed, rows = str(tmp_path), 808, 2000
     src = os.path.join(sf, "events.parquet")
     for d in range(4):
@@ -258,8 +249,7 @@ def test_triggers_over_history_read_only_what_is_new(spark, tmp_path):
     batch = _trigger(spark, sf, tmp_path, "hist-batch")
     replay = _trigger(spark, sf, tmp_path, "hist-replay", wm=wm)
 
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    records = {g: m["input_records"] for g, m in group_metrics(spark).items() if g.startswith("hist-")}
+    records = {g: group_metrics(spark, g)["input_records"] for g in ("hist-batch", "hist-replay")}
     source = _rows_newer_files(src, wm)
     # the new day, and the last old day only if its max-ts row is not committed
     assert rows <= source <= 2 * rows

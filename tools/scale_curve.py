@@ -397,7 +397,7 @@ def history_sweep(spark, day_counts: list[int]) -> dict[str, dict]:
     to before the new day). For the last cycle's triggers it returns
     the wall seconds, the fetched and inserted rows, the rows the
     source and the target scans read (bench.scan_records) and the job
-    group's ``inputRecords`` (their sum)."""
+    group's ``input_records`` (their sum, bench.group_metrics)."""
     import tempfile
 
     sys.path.insert(0, os.path.join(REPO, "perfbench"))
@@ -448,11 +448,8 @@ def history_sweep(spark, day_counts: list[int]) -> dict[str, dict]:
                         "inserted": r["records_inserted"],
                         "source_records": sum(v for desc, v in scans if "events.parquet" in desc),
                         "target_records": sum(v for desc, v in scans if target in desc),
+                        "input_records": group_metrics(spark, group)["input_records"],
                     }
-            metrics = group_metrics(spark)
-            for kind, m in cycle.items():
-                # a trigger that ran no job has no group
-                m["input_records"] = metrics.get(f"history{n}-{c}-{kind}", {}).get("input_records", 0)
             out[f"{n}d"] = cycle
             print(f"# history {n} days: {cycle}", file=sys.stderr)
     return out
@@ -463,7 +460,6 @@ def main() -> None:
     from bigquery_postgres_events_etl_spark.registry import all_queries
     from bigquery_postgres_events_etl_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_UI", "true")
     spark = get_spark(app_name="scale_curve")
     if "--history" in sys.argv:
         days = sys.argv[sys.argv.index("--history") + 1]
@@ -497,12 +493,12 @@ def main() -> None:
             )
             walls[f"{label}_s"] = round(best, 2)
         # steady-state (#r1) shuffle bytes per scale, read before later
-        # entries' jobs evict these groups from the UI store — bytes
-        # scale with data even when wall clock is overhead-bound at
-        # these sizes, so the bytes RATIO is the honest slope signal
-        m = group_metrics(spark)
-        a = m.get(f"{name}@sf01#r1", {}).get("shuffle_mb")
-        b = m.get(f"{name}@sf1#r1", {}).get("shuffle_mb")
+        # entries' jobs evict these groups from the status store (it
+        # keeps the newest 1000 jobs) — bytes scale with data even when
+        # wall clock is overhead-bound at these sizes, so the bytes
+        # RATIO is the honest slope signal
+        a = group_metrics(spark, f"{name}@sf01#r1")["shuffle_mb"]
+        b = group_metrics(spark, f"{name}@sf1#r1")["shuffle_mb"]
         # persisted intermediates (vocab gates etc.) accumulate across
         # 15 queries × 2 scales × 2 runs in one JVM — drop them so the
         # curve measures the queries, not heap pressure
@@ -512,11 +508,10 @@ def main() -> None:
             **walls,
             "ratio": round(ratio, 2),
             "linear_x": round(ratio / AMPLIFY, 2),
+            "sf01_shuffle_mb": a,
+            "sf1_shuffle_mb": b,
+            "shuffle_ratio": round(b / a, 2) if a else None,
         }
-        if a is not None and b is not None:
-            out[name]["sf01_shuffle_mb"] = a
-            out[name]["sf1_shuffle_mb"] = b
-            out[name]["shuffle_ratio"] = round(b / a, 2) if a else None
         print(f"# {name}: {out[name]}", file=sys.stderr)
     spark.sparkContext.setJobGroup("", "")
 
