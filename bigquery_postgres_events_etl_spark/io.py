@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schemas import FIXTURE_SCHEMAS
+from .session import SHUFFLE_PARTITIONS
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -57,7 +58,7 @@ def _pin_session(spark: SparkSession) -> None:
     except Exception:
         pass
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        spark.conf.set("spark.sql.shuffle.partitions", str(SHUFFLE_PARTITIONS))
     except Exception:
         pass  # immutable under AQE in some configs; AQE coalesce covers it
 

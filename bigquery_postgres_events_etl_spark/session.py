@@ -12,11 +12,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+# spark.sql.shuffle.partitions for every session, ours or one handed to
+# io._pin_session; AQE coalesces it down at fixture scale
+SHUFFLE_PARTITIONS = 32
 
-def get_spark(
-    app_name: str = "bq-pg-events-etl-spark",
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+
+def get_spark(app_name: str = "bq-pg-events-etl-spark") -> SparkSession:
     """Create (or reuse) a SparkSession with scale-aware defaults.
 
     - AQE on: runtime coalescing of shuffle partitions + skew-join
@@ -28,12 +29,10 @@ def get_spark(
       operators (multimodal plumbing).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -17,7 +17,6 @@ prunes to the partitions a batch can touch.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import time
 
@@ -115,7 +114,6 @@ def idempotent_append_parquet(
     target_path: str,
     keys: list[str] | None = None,
     partition_by: list[str] | None = None,
-    lock: bool = True,
 ) -> int:
     """K4/K5 — conflict-skipping append to a parquet target.
 
@@ -142,7 +140,7 @@ def idempotent_append_parquet(
     is evaluated once. Re-running the same batch inserts 0.
     """
     keys = keys or APPLICATION_EVENTS_DEDUP_KEY
-    with TargetLock(target_path) if lock else contextlib.nullcontext():
+    with TargetLock(target_path):
         if not os.path.exists(target_path):
             # a missing target may be an interrupted compaction (crash
             # between the two swap renames), not a first load — restore
@@ -322,7 +320,6 @@ def write_jdbc_merge_append(
     table: str,
     conflict_keys: list[str],
     driver: str | None = None,
-    staging_table: str | None = None,
     writer_options: dict[str, str] | None = None,
     timings: dict | None = None,
 ) -> int:
@@ -359,7 +356,9 @@ def write_jdbc_merge_append(
     Scale: the batch lands on the DB via Spark's partition-parallel
     JDBC writer (one connection per partition, batched inserts); the
     driver runs only constant-count DDL/DML statements — no per-row
-    work outside the database.
+    work outside the database. The staging write is the batch's one
+    Spark job: its staged row count is an ``Observation`` on that job,
+    so the batch is read once.
 
     ``writer_options`` pass through to the staging write — in
     particular ``createTableColumnTypes`` to pin string key columns to
@@ -373,14 +372,18 @@ def write_jdbc_merge_append(
     layout (``CREATE TABLE … AS SELECT … WITH NO DATA`` — Derby and PG
     both speak it; the already-exists race/false-negative is handled
     by swallowing exactly that SQLState, X0Y32/42P07, never by a
-    pattern-wildcarded metadata probe). Returns the number of rows the
-    MERGE actually inserted (the reference's ``records_inserted``; a
-    full replay returns 0)."""
+    pattern-wildcarded metadata probe). A batch that stages no row
+    (an idle trigger or an empty micro-batch) only drops its staging
+    table: no target bootstrap, no index DDL, no ``MERGE`` — so a
+    zero-row first load creates no target table, and ``timings`` gets
+    ``staging_write_s`` only. Returns the number of rows the MERGE
+    actually inserted (the reference's ``records_inserted``; a full
+    replay or an empty batch returns 0)."""
     # intra-batch dedup — the parquet twin's step 1: MERGE evaluates
     # source rows against the TARGET snapshot only, so two staged rows
     # sharing a conflict key would BOTH insert without this
     df = df.dropDuplicates(conflict_keys)
-    staging = staging_table or _next_staging_name(table)
+    staging = _next_staging_name(table)
     writer_options = dict(writer_options or {})
     if "createTableColumnTypes" not in writer_options and url.startswith(
         "jdbc:derby"
@@ -404,8 +407,13 @@ def write_jdbc_merge_append(
             writer_options["createTableColumnTypes"] = ", ".join(
                 f"{k} VARCHAR(255)" for k in string_keys
             )
+    # the staged count is observed on the deduped frame, which is the
+    # staging write's result stage: Spark applies each task's update
+    # once, so the count is exact
+    staged = Observation()
     w = (
-        df.write.format("jdbc")
+        df.observe(staged, F.count(F.lit(1)).alias("n"))
+        .write.format("jdbc")
         .option("url", url)
         .option("dbtable", staging)
         .mode("overwrite")
@@ -414,16 +422,16 @@ def write_jdbc_merge_append(
         w = w.option("driver", driver)
     for k, v in writer_options.items():
         w = w.option(k, v)
-    import time as _time
-
-    _t0 = _time.time()
+    t0 = time.time()
     w.save()
     if timings is not None:
         # perf-characterization hook (SCALE.md JDBC section): the
         # staging write is the executor-parallel leg, the MERGE the
         # single set-based DB statement — the split tells which side
         # a slow load is on
-        timings["staging_write_s"] = _time.time() - _t0
+        timings["staging_write_s"] = time.time() - t0
+    # read only after the write returned, like the parquet twin
+    n_staged = staged.get["n"]
 
     def q(c: str) -> str:
         return '"' + c.replace('"', '""') + '"'
@@ -446,22 +454,13 @@ def write_jdbc_merge_append(
     try:
         st = conn.createStatement()
         try:
-            try:
+            inserted = 0
+            if n_staged:
                 # bootstrap the target on first load: clone the staging
-                # layout without rows; tolerate exactly "table already
-                # exists" (Derby X0Y32, PG 42P07) so the check is
-                # race-free and immune to JDBC metadata-pattern quirks
-                st.executeUpdate(
-                    f"CREATE TABLE {table} AS SELECT * FROM {staging} "
-                    f"WITH NO DATA"
+                # layout without rows
+                _create_unless_exists(
+                    st, f"CREATE TABLE {table} AS SELECT * FROM {staging} WITH NO DATA"
                 )
-            except Exception as e:
-                state = getattr(
-                    getattr(e, "java_exception", None), "getSQLState", lambda: None
-                )()
-                if state not in ("X0Y32", "42P07"):
-                    raise
-            try:
                 # Index the conflict keys on the target — the
                 # reference's UNIQUE constraint gives it this index
                 # implicitly (extract_bq.py:204), and without one the
@@ -473,25 +472,17 @@ def write_jdbc_merge_append(
                 # indexed. Plain (not UNIQUE) index: NULLs compare
                 # distinct in a MERGE ON, so duplicate NULL-key rows
                 # are legal target states the index must not reject.
-                # Attempted UNCONDITIONALLY (its own try, not nested
-                # in the bootstrap's) so pre-existing targets created
-                # by older code or externally get indexed too (r9
-                # ADVICE); the duplicate-name SQLState on replay is
-                # the swallowed no-op.
+                # Attempted on every non-empty batch, not only after a
+                # bootstrap, so pre-existing targets created by older
+                # code or externally get indexed too (r9 ADVICE).
                 idx_cols = ", ".join(q(k) for k in conflict_keys)
-                st.executeUpdate(
-                    f"CREATE INDEX {table}_ck_idx ON {table} ({idx_cols})"
+                _create_unless_exists(
+                    st, f"CREATE INDEX {table}_ck_idx ON {table} ({idx_cols})"
                 )
-            except Exception as e:
-                state = getattr(
-                    getattr(e, "java_exception", None), "getSQLState", lambda: None
-                )()
-                if state not in ("X0Y32", "42P07"):
-                    raise
-            _t1 = _time.time()
-            inserted = st.executeUpdate(merge_sql)
-            if timings is not None:
-                timings["merge_s"] = _time.time() - _t1
+                t1 = time.time()
+                inserted = st.executeUpdate(merge_sql)
+                if timings is not None:
+                    timings["merge_s"] = time.time() - t1
             # staging is per-call scratch: drop it after the merge
             # commits (leaving it behind doubles the batch's storage)
             st.executeUpdate(f"DROP TABLE {staging}")
@@ -500,6 +491,20 @@ def write_jdbc_merge_append(
             st.close()
     finally:
         conn.close()
+
+
+def _create_unless_exists(st, ddl: str) -> None:
+    """Run a CREATE statement, tolerating exactly "already exists"
+    (Derby X0Y32, PG 42P07): race-free, and immune to the JDBC
+    metadata-pattern quirks of a probe-first check."""
+    try:
+        st.executeUpdate(ddl)
+    except Exception as e:
+        state = getattr(
+            getattr(e, "java_exception", None), "getSQLState", lambda: None
+        )()
+        if state not in ("X0Y32", "42P07"):
+            raise
 
 
 _STAGING_SEQ = iter(range(1, 1 << 62))

@@ -19,12 +19,13 @@ Semantics preserved 1:1 (SURVEY §2.9):
 A run reads only the source files whose footers allow a row newer
 than the watermark (io.load_events_after), the reference's
 ``_TABLE_SUFFIX BETWEEN`` shard pruning (extract_bq.py:98-110); a run
-with no such file returns at once and runs no Spark job. A parquet-sink
-run reads those files once, like the reference's single
-fetch-then-insert (flask_server.py:142-196): the batch's row count and
-max timestamp, and the sink's inserted count, are ``Observation``s on
-the sink's one write job — no stats job, no cache. The JDBC sink keeps
-a stats job first, so an idle run skips the database round trip.
+with no such file returns at once and runs no Spark job. Any other
+run reads those files once, on either sink, like the reference's
+single fetch-then-insert (flask_server.py:142-196): the batch's row
+count and max timestamp, and the sink's inserted count, are
+``Observation``s on the sink's one write job — no stats job, no cache.
+A batch the filters leave empty still runs that write; the JDBC sink
+then drops its empty staging table and runs no ``MERGE``.
 """
 
 from __future__ import annotations
@@ -37,7 +38,8 @@ from pyspark.sql import functions as F
 
 from ..io import load_events_after
 from ..operators.etl import flagship_pipeline
-from ..sources.sinks import idempotent_append_parquet
+from ..schemas import APPLICATION_EVENTS_DEDUP_KEY
+from ..sources.sinks import idempotent_append_parquet, write_jdbc_merge_append
 from ..sources.watermark import read_watermark_us, write_watermark_us
 
 _run_lock = threading.Lock()  # ST5: real mutual exclusion
@@ -59,7 +61,10 @@ def run_incremental_etl(
     pass over the source's parquet footers keeps the files whose max
     ``ts`` is above the watermark (io.load_events_after); when no file
     is kept, the run returns the success record with nothing fetched,
-    before the sink branch, so neither sink runs a job.
+    before the sink call, so neither sink runs a job. Otherwise the
+    run makes exactly one sink call and runs no Spark action of its
+    own: ``records_fetched`` and the new watermark are observed on the
+    sink's write job.
     flagship_pipeline then filters the kept files' rows on
     ``unix_micros(ts) > wm``. The parquet sink's anti-join reads the
     target's keys under the batch's ``event_timestamp > wm``, which
@@ -72,9 +77,14 @@ def run_incremental_etl(
     target — the reference's exact deployment (watermarked extract →
     conflict-skipping insert into a live SQL database). Idempotence
     comes from the database MERGE rather than the parquet anti-join;
-    everything else (watermark predicate, commit-then-advance,
-    single-flight) is shared. Exercised for real against embedded
-    Derby in tests/test_jdbc_derby.py.
+    everything else (watermark predicate, one observed write,
+    commit-then-advance, single-flight) is shared. A batch with no row
+    (a zero-row first load, or an idle trigger whose newest file's
+    max-``ts`` row is untracked or has a NULL user, so the footers keep
+    that file) creates and drops an empty staging table and runs no
+    ``MERGE``: a zero-row first load creates no target table.
+    Exercised for real against embedded Derby in
+    tests/test_jdbc_derby.py and tests/test_source_pruning.py.
     """
     if not _run_lock.acquire(blocking=False):
         return {"status": "skipped", "reason": "already_running"}  # HTTP 409 twin
@@ -83,34 +93,26 @@ def run_incremental_etl(
         wm = read_watermark_us(state_path, lookback_hours, now_us=now_us)
         events = load_events_after(spark, source_sf_dir, wm)
         batch = None if events is None else flagship_pipeline(events, tracked=tracked, watermark_us=wm)
-        stats = (F.count(F.lit(1)).alias("n"), F.max("event_timestamp").alias("max_ts"))
         if batch is None:
             # every source footer proves ts <= wm: nothing to fetch
             fetched, inserted, max_ts = 0, 0, None
-        elif jdbc_target is None:
-            # one pass: the batch stats ride on the sink's write job,
-            # read after it returns. This observe point sits upstream
-            # of the sink's dedup and anti-join; if the plan shuffles
-            # in between, it lands in a map stage that a failure can
-            # re-run. max_ts is a max, so a re-run cannot corrupt it;
-            # the count is only reported (records_inserted is counted
-            # in the write's result stage)
-            observed = Observation()
-            inserted = idempotent_append_parquet(
-                spark, batch.observe(observed, *stats), target_path
-            )
-            fetched, max_ts = observed.get["n"], observed.get["max_ts"]
         else:
-            row = batch.agg(*stats).first()
-            fetched, max_ts = row["n"], row["max_ts"]
-            # idle trigger (the common daily case): skip the sink —
-            # the JDBC path would otherwise run staging DDL + a MERGE
-            # against the live database to insert nothing
-            inserted = 0
-            if fetched:
-                from ..schemas import APPLICATION_EVENTS_DEDUP_KEY
-                from ..sources.sinks import write_jdbc_merge_append
-
+            # one pass on either sink: the batch stats ride on the
+            # sink's one write job, read after it returns. This observe
+            # point sits upstream of the sink's dedup (and the parquet
+            # sink's anti-join); if the plan shuffles in between, it
+            # lands in a map stage that a failure can re-run. max_ts is
+            # a max, so a re-run cannot corrupt it; the count is only
+            # reported (records_inserted is counted by the sink itself)
+            observed = Observation()
+            batch = batch.observe(
+                observed,
+                F.count(F.lit(1)).alias("n"),
+                F.max("event_timestamp").alias("max_ts"),
+            )
+            if jdbc_target is None:
+                inserted = idempotent_append_parquet(spark, batch, target_path)
+            else:
                 inserted = write_jdbc_merge_append(
                     batch,
                     jdbc_target["url"],
@@ -121,6 +123,7 @@ def run_incremental_etl(
                     driver=jdbc_target.get("driver"),
                     writer_options=jdbc_target.get("writer_options"),
                 )
+            fetched, max_ts = observed.get["n"], observed.get["max_ts"]
         advanced = False
         if max_ts is not None and max_ts > wm:
             advanced = write_watermark_us(state_path, max_ts)  # ST4: after commit

@@ -16,7 +16,7 @@ state with the timeout conf (evict idle users), configured here.
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
 
@@ -92,81 +92,3 @@ def streaming_user_profiles(events: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-# ---------------------------------------------------------------------
-# transformWithStateInPandas — the Spark 4 arbitrary-state API
-# ---------------------------------------------------------------------
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    TimerValues,
-)
-
-
-class UserProfileProcessor(StatefulProcessor):
-    """StatefulProcessor maintaining the same per-user profile as
-    :func:`streaming_user_profiles`, on the modern
-    ``transformWithStateInPandas`` API (Spark 4): typed state
-    variables (ValueState) instead of a single opaque tuple, timers /
-    TTL available for state eviction, and the state store behind the
-    RocksDB provider at scale. One operator, two API generations —
-    the applyInPandasWithState twin stays as the 3.x-compatible path.
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("profile", STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        existing = self._state.get() if self._state.exists() else None
-        if existing is not None:
-            n_events, sum_value, n_sessions, last_ts = existing
-        else:
-            n_events, sum_value, n_sessions, last_ts = 0, 0.0, 0, None
-
-        for pdf in rows:
-            pdf = pdf.sort_values("ts_us")
-            for ts in pdf["ts_us"]:
-                if last_ts is None or ts - last_ts > SESSION_GAP_US:
-                    n_sessions += 1
-                last_ts = int(ts)
-            n_events += len(pdf)
-            sum_value += float(pdf["value"].sum())
-
-        self._state.update((n_events, sum_value, n_sessions, last_ts))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n_events],
-                "sum_value": [sum_value],
-                "n_sessions": [n_sessions],
-                "last_ts_us": [last_ts],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_user_profiles_tws(events: DataFrame) -> DataFrame:
-    """Per-user running profile on ``transformWithStateInPandas`` —
-    must produce exactly the profiles of the applyInPandasWithState
-    variant (tests pin equality of the two paths and the batch ground
-    truth).
-
-    Env note: the TWS Python runner communicates with its JVM state
-    server over protobuf; containers without ``google.protobuf``
-    cannot *execute* this operator (the parity test skips there), but
-    the plan construction below is pure public API and works
-    anywhere."""
-    from pyspark.sql import functions as F
-
-    keyed = events.select("user_id", F.unix_micros("ts").alias("ts_us"), "value")
-    return keyed.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserProfileProcessor(),
-        outputStructType=PROFILE_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -15,11 +15,13 @@ identical query shape, different ``format()``.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.sinks import idempotent_append_parquet
+
 
 def read_events_stream(
     spark: SparkSession,
@@ -93,20 +95,15 @@ def streaming_dedup_events(
     return events.withWatermark("ts", lateness).dropDuplicatesWithinWatermark(keys)
 
 
-def _drain_foreach_batch(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    sink,
-) -> dict:
-    """Shared scaffold for every batch-sink streaming leg: unbounded
-    events view → ``foreachBatch(sink)`` → AvailableNow drain →
-    last-progress batch id. The three public legs differ ONLY in the
-    per-batch sink (parquet anti-join / DBAPI upsert / JDBC MERGE), so
-    the checkpointing and termination mechanics live once."""
-    events = read_events_stream(spark, source_dir)
+def _drain_foreach_batch(stream: DataFrame, checkpoint_dir: str, sink) -> dict:
+    """Shared scaffold for every batch-sink streaming leg: streaming
+    frame → ``foreachBatch(sink)`` → AvailableNow drain → last-progress
+    batch id. The legs differ only in their frame and per-batch sink
+    (parquet anti-join / DBAPI upsert / JDBC MERGE / epoch publish /
+    CDC apply / PSI record), so the checkpointing and termination
+    mechanics live once."""
     q = (
-        events.writeStream.foreachBatch(sink)
+        stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -117,6 +114,34 @@ def _drain_foreach_batch(
         "status": "success",
         "batch_id": progress["batchId"] if progress else None,
     }
+
+
+def _publish_epoch(root: str, epoch_id: int, write) -> None:
+    """Epoch-keyed idempotent publish (Spark docs' "idempotent write by
+    batchId"): ``write(tmp)`` fills ``root/epoch=<id>.tmp``, then an
+    atomic rename publishes it. A replayed epoch (the sink crashed after
+    publishing, before the checkpoint commit) is already published and
+    is skipped; a stranded ``.tmp`` from a mid-write crash is removed
+    first — only the rename publishes."""
+    final = os.path.join(root, f"epoch={epoch_id}")
+    if os.path.isdir(final):
+        return  # replayed epoch — already published, no-op
+    tmp = final + ".tmp"
+    if os.path.isdir(tmp):
+        shutil.rmtree(tmp)  # stranded half-write from a crash
+    write(tmp)
+    os.rename(tmp, final)  # atomic publish
+
+
+def _published_epochs(root: str) -> list[str]:
+    """The published ``epoch=<id>`` dirs under ``root``, sorted by name.
+    A stranded ``*.tmp`` from a crash is never listed, so it is never
+    readable as data."""
+    if not os.path.isdir(root):
+        return []
+    return sorted(
+        d for d in os.listdir(root) if d.startswith("epoch=") and not d.endswith(".tmp")
+    )
 
 
 def run_streaming_etl(
@@ -140,7 +165,7 @@ def run_streaming_etl(
         out = flagship_pipeline(batch_df, tracked=tracked)
         idempotent_append_parquet(batch_df.sparkSession, out, target_path)
 
-    res = _drain_foreach_batch(spark, source_dir, checkpoint_dir, sink)
+    res = _drain_foreach_batch(read_events_stream(spark, source_dir), checkpoint_dir, sink)
     res["rows_in_target"] = spark.read.parquet(target_path).count()
     return res
 
@@ -175,7 +200,7 @@ def run_streaming_etl_to_db(
             out, connect, table, batch_size=batch_size, dialect=dialect
         )
 
-    return _drain_foreach_batch(spark, source_dir, checkpoint_dir, sink)
+    return _drain_foreach_batch(read_events_stream(spark, source_dir), checkpoint_dir, sink)
 
 
 def run_streaming_etl_to_jdbc(
@@ -195,7 +220,9 @@ def run_streaming_etl_to_jdbc(
     reference's conflict-skipping stream into a relational target with
     no per-row Python in the sink at all. Effective exactly-once is
     the same composition (checkpoint replays an unacknowledged batch;
-    the MERGE makes the replay a no-op). Exercised for REAL against
+    the MERGE makes the replay a no-op). A micro-batch the flagship
+    filters leave empty stages nothing and runs no target bootstrap,
+    index DDL or MERGE. Exercised for REAL against
     embedded Derby in tests/test_jdbc_derby.py; in production the url
     points at PostgreSQL 15+ (ANSI MERGE) and nothing else changes."""
     from ..operators.etl import flagship_pipeline
@@ -211,7 +238,7 @@ def run_streaming_etl_to_jdbc(
             writer_options=writer_options,
         )
 
-    return _drain_foreach_batch(spark, source_dir, checkpoint_dir, sink)
+    return _drain_foreach_batch(read_events_stream(spark, source_dir), checkpoint_dir, sink)
 
 
 def streaming_purchase_click_join(
@@ -332,34 +359,13 @@ def run_streaming_to_lake(
     mid-write crash is overwritten by the retry — only the rename
     publishes.
     """
-    import shutil
-
-    events = read_events_stream(spark, source_dir)
-    cleaned = events.where(F.col("user_id").isNotNull())
+    cleaned = read_events_stream(spark, source_dir).where(F.col("user_id").isNotNull())
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        final = os.path.join(target_dir, f"epoch={epoch_id}")
-        if os.path.isdir(final):
-            return  # replayed epoch — already published, no-op
-        tmp = final + ".tmp"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)  # stranded half-write from a crash
-        batch_df.write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)  # atomic publish
+        _publish_epoch(target_dir, epoch_id, batch_df.write.mode("overwrite").parquet)
 
-    q = (
-        cleaned.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    epochs = sorted(
-        d for d in os.listdir(target_dir)
-        if d.startswith("epoch=") and not d.endswith(".tmp")
-    ) if os.path.isdir(target_dir) else []
-    # count ONLY published epoch dirs — a stranded *.tmp from a crash
-    # must never be readable as data
+    _drain_foreach_batch(cleaned, checkpoint_dir, sink)
+    epochs = _published_epochs(target_dir)
     return {
         "epochs": epochs,
         "rows_in_target": spark.read.parquet(
@@ -409,13 +415,7 @@ def run_streaming_cdc_to_lake(
             return
         apply_changelog(spark, table_dir, batch_df, key_cols, epoch=epoch_id)
 
-    q = (
-        changes.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_foreach_batch(changes, checkpoint_dir, sink)
     return {"version": current_version(table_dir)}
 
 
@@ -480,8 +480,6 @@ def run_streaming_psi_monitor(
     the monitoring cost is O(batch), independent of stream history.
     Returns the monitor rows (epoch, n_events, psi, alert).
     """
-    import shutil
-
     from ..io import load_table
 
     ref_hist = value_histogram_ref(
@@ -492,34 +490,20 @@ def run_streaming_psi_monitor(
     events = read_events_stream(spark, source_dir, max_files_per_trigger)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        final = os.path.join(monitor_dir, f"epoch={epoch_id}")
-        if os.path.isdir(final):
-            return  # replayed epoch — already recorded
-        tmp = final + ".tmp"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        cur = value_histogram_ref(batch_df, bin_width)
-        psi = psi_between(ref_hist, cur)
-        n = batch_df.count()
-        row = batch_df.sparkSession.createDataFrame(
-            [(int(epoch_id), int(n), float(psi), bool(psi > alert_threshold))],
-            "epoch BIGINT, n_events BIGINT, psi DOUBLE, alert BOOLEAN",
-        )
-        row.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
+        def write(tmp: str) -> None:
+            psi = psi_between(ref_hist, value_histogram_ref(batch_df, bin_width))
+            n = batch_df.count()
+            row = batch_df.sparkSession.createDataFrame(
+                [(int(epoch_id), int(n), float(psi), bool(psi > alert_threshold))],
+                "epoch BIGINT, n_events BIGINT, psi DOUBLE, alert BOOLEAN",
+            )
+            row.coalesce(1).write.mode("overwrite").parquet(tmp)
 
-    q = (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        _publish_epoch(monitor_dir, epoch_id, write)
+
+    _drain_foreach_batch(events, checkpoint_dir, sink)
     ref_hist.unpersist()
-    epochs = sorted(
-        d for d in os.listdir(monitor_dir)
-        if d.startswith("epoch=") and not d.endswith(".tmp")
-    ) if os.path.isdir(monitor_dir) else []
+    epochs = _published_epochs(monitor_dir)
     rows = (
         spark.read.parquet(*[os.path.join(monitor_dir, e) for e in epochs])
         .orderBy("epoch")

@@ -14,7 +14,7 @@ SF_SMOKE = "/root/testdata/sf0.001"
 def spark():
     from bigquery_postgres_events_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="tests", shuffle_partitions=8)
+    spark = get_spark(app_name="tests")
     yield spark
 
 

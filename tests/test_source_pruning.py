@@ -187,13 +187,25 @@ def _trigger(spark, sf: str, tmp_path, group: str, wm: int | None = None, **kw) 
     return r
 
 
+DERBY = "org.apache.derby.jdbc.EmbeddedDriver"
+
+
+def _derby_tables(spark, url: str) -> list[str]:
+    sql = "SELECT TABLENAME FROM SYS.SYSTABLES WHERE TABLETYPE = 'T'"
+    return sorted(r[0] for r in spark.read.format("jdbc").options(url=url, query=sql, driver=DERBY).load().collect())
+
+
 @pytest.mark.parametrize("last", ["tracked", "untracked"])
 def test_idle_trigger_skips_only_when_the_footers_prove_it(spark, tmp_path, last):
     """After a load, an idle trigger runs no job when the source's max
     ``ts`` row was committed, so the watermark reached it; when that row
     is an untracked event the watermark never passes it, the file is
-    read again and finds nothing. The JDBC leg skips the same way,
-    without touching its database."""
+    read again and finds nothing. Both sinks read each kept source row
+    once (the batch stats are observed on the sink's write job). The
+    JDBC leg skips the footer-proven idle trigger without touching its
+    database; on the re-read one, as on a zero-row first load, it
+    stages nothing, runs no ``MERGE`` and leaves no staging table
+    behind."""
     src = _src(tmp_path)
     ts = [EPOCH_2024_US + i for i in range(10)]
     day = _events(ts)
@@ -201,15 +213,29 @@ def test_idle_trigger_skips_only_when_the_footers_prove_it(spark, tmp_path, last
         day = day.set_column(3, "event_type", pa.array(["click"] * 9 + ["error"]))
     pq.write_table(day, f"{src}/day.parquet")
     sf = str(tmp_path)
+    (tmp_path / "jdbc").mkdir()
+    url = f"jdbc:derby:{tmp_path}/db;create=true"
+    derby = {"url": url, "table": "t", "driver": DERBY}
+    legs = {"parquet": (tmp_path, {}), "jdbc": (tmp_path / "jdbc", {"jdbc_target": derby})}
+    empty = _trigger(spark, sf, tmp_path / "jdbc", f"prune-empty-{last}", wm=EPOCH_2024_US - 1,
+                     tracked=["none"], jdbc_target=derby)
+    assert empty["records_fetched"] == empty["records_inserted"] == 0
+    assert _derby_tables(spark, url) == []  # a zero-row first load creates no target
 
-    load = _trigger(spark, sf, tmp_path, f"prune-load-{last}", wm=EPOCH_2024_US - 1)
-    idle = _trigger(spark, sf, tmp_path, f"prune-idle-{last}")
+    for sink, (state_dir, kw) in legs.items():
+        load = _trigger(spark, sf, state_dir, f"prune-load-{last}-{sink}", wm=EPOCH_2024_US - 1, **kw)
+        idle = _trigger(spark, sf, state_dir, f"prune-idle-{last}-{sink}", **kw)
 
-    assert load["records_inserted"] == (10 if last == "tracked" else 9)
-    assert idle["records_fetched"] == idle["records_inserted"] == 0
-    assert not idle["watermark_advanced"]
-    assert idle["last_processed_timestamp"] == load["last_processed_timestamp"]
-    assert (group_metrics(spark, f"prune-idle-{last}")["jobs"] == 0) == (last == "tracked")
+        assert load["records_inserted"] == (10 if last == "tracked" else 9)
+        assert group_metrics(spark, f"prune-load-{last}-{sink}")["input_records"] == 10
+        assert idle["records_fetched"] == idle["records_inserted"] == 0
+        assert not idle["watermark_advanced"]
+        assert idle["last_processed_timestamp"] == load["last_processed_timestamp"]
+        assert (group_metrics(spark, f"prune-idle-{last}-{sink}")["jobs"] == 0) == (last == "tracked")
+
+    assert _derby_tables(spark, url) == ["T"]  # no staging table left
+    target = spark.read.format("jdbc").options(url=url, dbtable="t", driver=DERBY).load()
+    assert target.count() == load["records_inserted"]
     if last == "tracked":  # the JDBC leg returns before reaching its (absent) database
         jdbc = _trigger(spark, sf, tmp_path, "prune-jdbc",
                         jdbc_target={"url": "jdbc:derby:memory:absent", "table": "t"})

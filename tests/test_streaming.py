@@ -226,55 +226,6 @@ def test_streaming_dedup_composite_key_within_watermark(spark, sf_dir, tmp_path)
     assert got == batch_distinct
 
 
-def test_stateful_user_profiles_tws_matches_legacy_api(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas (Spark 4 typed-state API) must emit
-    the same final per-user profiles as the applyInPandasWithState
-    operator on the same drained source.
-
-    The TWS Python runner speaks protobuf to its JVM state server;
-    this container ships no google.protobuf, so the test skips here
-    and lights up automatically where the dependency exists (the
-    operator itself is pure public-API code)."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState runner needs protobuf (absent in this env)",
-    )
-    from bigquery_postgres_events_etl_spark.streaming.stateful import (
-        streaming_user_profiles,
-        streaming_user_profiles_tws,
-    )
-
-    src = _stage_source(sf_dir, tmp_path)
-
-    def drain(make, name):
-        q = (
-            make(read_events_stream(spark, src))
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return {
-            r.user_id: (r.n_events, round(r.sum_value, 6), r.n_sessions, r.last_ts_us)
-            for r in spark.sql(
-                f"""
-                SELECT * FROM (
-                  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY n_events DESC) rn
-                  FROM {name}
-                ) WHERE rn = 1
-                """
-            ).collect()
-        }
-
-    legacy = drain(streaming_user_profiles, "tws_legacy_out")
-    tws = drain(streaming_user_profiles_tws, "tws_new_out")
-    assert tws == legacy and len(tws) > 0
-
-
 def test_streaming_resume_processes_only_new_files(spark, sf_dir, tmp_path):
     """ST1 with growth: after a drained run, adding a new source file
     and re-running with the SAME checkpoint processes exactly the
@@ -553,21 +504,3 @@ def test_streaming_psi_monitor_detects_drift_vs_reference(spark, sf_dir, tmp_pat
     assert row.psi == pytest.approx(psi, rel=1e-9)
     assert row.alert == (row.psi > 0.2)
     assert row.alert  # a collapsed support IS a drift
-
-
-def test_tws_gate_pins_operator_importable():
-    """Pin the TWS env-gate (r11 verdict item 9): the parity test
-    above may skip ONLY because google.protobuf is absent —
-    importorskip lights it up automatically the day the dependency
-    exists. The rot mode a bare skip would hide is the OPERATOR
-    module becoming unimportable (then the parity test would skip
-    forever even with protobuf present); this guard imports it
-    unconditionally and checks the TWS entry point is real."""
-    import inspect
-
-    from bigquery_postgres_events_etl_spark.streaming.stateful import (
-        streaming_user_profiles_tws,
-    )
-
-    src = inspect.getsource(streaming_user_profiles_tws)
-    assert "transformWithStateInPandas" in src
