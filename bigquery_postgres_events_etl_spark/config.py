@@ -1,6 +1,8 @@
 """Environment configuration — parity with the reference's env-var
-surface (.env.example:1-27, extract_bq.py:330, flask_server.py:49,
-64, 279-289).
+surface (.env.example:1-27, flask_server.py:49, 64, 279-289). The
+reference's BATCH_SIZE (extract_bq.py:330) has no getter: Spark's JDBC
+writer already batches 1000 rows per insert, and a ``jdbc_target``'s
+``writer_options={"batchsize": …}`` overrides it.
 
 Every getter reads the environment at call time (not import time) so
 tests and long-lived services observe updates; defaults match the
@@ -44,11 +46,6 @@ def schedule_minute() -> int:
     """ETL_SCHEDULE_MINUTE — daily trigger minute (flask_server.py:284)."""
     m = _int_env("ETL_SCHEDULE_MINUTE", 0)
     return m if 0 <= m <= 59 else 0
-
-
-def batch_size() -> int:
-    """BATCH_SIZE — DB insert chunk size (extract_bq.py:330)."""
-    return _int_env("BATCH_SIZE", 1000)
 
 
 def service_port() -> int:

@@ -28,7 +28,7 @@ import threading
 from socketserver import ThreadingMixIn
 from wsgiref.simple_server import WSGIServer, make_server
 
-from .config import schedule_hour, schedule_minute, service_port
+from .config import schedule_hour, schedule_minute, service_port, timestamp_file
 from .sources.watermark import read_watermark_us
 
 
@@ -209,7 +209,7 @@ class EtlService:
             scheduler.stop()
 
 
-def main(argv: list[str] | None = None) -> int:  # pragma: no cover — manual entry
+def main(argv: list[str] | None = None) -> int:
     """Console entry point (``bq-pg-etl-service``): the reference's
     ``python flask_server.py`` twin (flask_server.py:278-296) — build a
     SparkSession, wire the incremental ETL service over a fixture or
@@ -223,7 +223,10 @@ def main(argv: list[str] | None = None) -> int:  # pragma: no cover — manual e
         description="Watermarked incremental ETL service (daily cron + HTTP API)",
     )
     p.add_argument("--source", default="/root/testdata/sf0.001", help="events source dir")
-    p.add_argument("--state", default="watermark_state.json", help="watermark file path")
+    p.add_argument(
+        "--state", default=timestamp_file(),
+        help="watermark file path (default: TIMESTAMP_FILE env, last_timestamp.txt)",
+    )
     p.add_argument("--target", default="etl_target.parquet", help="append target path")
     p.add_argument("--jdbc-url", help="optional JDBC url → staging+MERGE sink")
     p.add_argument("--jdbc-table", default="application_events")

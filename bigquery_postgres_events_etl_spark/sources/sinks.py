@@ -1,12 +1,18 @@
-"""Sinks: CSV export (K1), idempotent append (K4/K5), JDBC upsert
-writer (K2/K3/K4).
+"""Sinks: CSV export (K1) and the two conflict-skipping appends
+(K2-K5) — a parquet target and a relational (JDBC) target — behind
+one dispatch, ``append_batch``, that the batch and streaming runners
+share.
 
 The reference's sink guarantees, re-expressed for a distributed
 writer:
 - K1 CSV: exact header set/order of extract_bq.py:149;
+- K2/K3 relational target: Spark's partition-parallel JDBC writer
+  (``batchsize`` 1000 by default, the reference's chunk size,
+  extract_bq.py:330) fills a staging table;
 - K4 idempotence: `INSERT … ON CONFLICT DO NOTHING` becomes
-  (a) intra-batch key-dedup + (b) anti-join against already-loaded
-  keys — so re-running a batch never duplicates (ST3's effective
+  (a) intra-batch key-dedup + (b) an anti-join against already-loaded
+  keys (parquet) or one set-based ANSI ``MERGE … WHEN NOT MATCHED``
+  (JDBC) — so re-running a batch never duplicates (ST3's effective
   exactly-once);
 - K5 append-only: never overwrite loaded data.
 
@@ -19,6 +25,7 @@ from __future__ import annotations
 
 import os
 import time
+from contextlib import closing, suppress
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -195,125 +202,6 @@ def idempotent_append_parquet(
         return inserted.get["n"]
 
 
-# ---------------------------------------------------------------------
-# JDBC upsert writer (PostgreSQL) — import-gated: no PG in this
-# container; the SQL-building logic is unit-tested, the network path
-# requires a live database.
-# ---------------------------------------------------------------------
-
-# Reference DDL: extract_bq.py:194-210 == flask_server.py:122-138
-APPLICATION_EVENTS_DDL = """
-CREATE TABLE IF NOT EXISTS {table} (
-    id SERIAL PRIMARY KEY,
-    user_id VARCHAR(255),
-    event_date DATE,
-    event_timestamp BIGINT,
-    event_name VARCHAR(255),
-    event_id VARCHAR(255),
-    event_name_detail TEXT,
-    created_at TIMESTAMP DEFAULT CURRENT_TIMESTAMP,
-    UNIQUE(user_id, event_timestamp, event_name)
-)
-"""
-
-INDEX_DDL = [
-    "CREATE INDEX IF NOT EXISTS idx_{t}_user_id ON {table} (user_id)",
-    "CREATE INDEX IF NOT EXISTS idx_{t}_event_date ON {table} (event_date)",
-    "CREATE INDEX IF NOT EXISTS idx_{t}_event_name ON {table} (event_name)",
-    "CREATE INDEX IF NOT EXISTS idx_{t}_event_timestamp ON {table} (event_timestamp)",
-]
-
-
-def build_upsert_sql(
-    table: str,
-    columns: list[str],
-    conflict_keys: list[str],
-    dialect: str = "postgres",
-) -> str:
-    """K4 — the conflict-skipping insert the per-partition writer
-    executes (reference: extract_bq.py:216-221).
-
-    ``postgres`` → ``INSERT … ON CONFLICT (keys) DO NOTHING`` (%s
-    placeholders); ``sqlite`` → ``INSERT OR IGNORE`` (? placeholders)
-    — identical skip-on-duplicate semantics, which lets the partition/
-    commit/replay mechanics be proven in-container against SQLite.
-    """
-    cols = ", ".join(columns)
-    if dialect == "postgres":
-        placeholders = ", ".join(["%s"] * len(columns))
-        keys = ", ".join(conflict_keys)
-        return (
-            f"INSERT INTO {table} ({cols}) VALUES ({placeholders}) "
-            f"ON CONFLICT ({keys}) DO NOTHING"
-        )
-    if dialect == "sqlite":
-        placeholders = ", ".join(["?"] * len(columns))
-        return f"INSERT OR IGNORE INTO {table} ({cols}) VALUES ({placeholders})"
-    raise ValueError(f"unknown dialect: {dialect!r}")
-
-
-def write_dbapi_upsert(
-    df: DataFrame,
-    connect,
-    table: str,
-    columns: list[str] | None = None,
-    conflict_keys: list[str] | None = None,
-    batch_size: int | None = None,
-    dialect: str = "postgres",
-) -> None:
-    """K2-K4 — partition-parallel batched conflict-skipping insert
-    through any DBAPI driver.
-
-    ``connect`` is a zero-arg picklable callable returning a DBAPI
-    connection (e.g. ``partial(psycopg2.connect, dsn)`` or
-    ``partial(sqlite3.connect, path, timeout=30)``). Each Spark
-    partition opens one connection, executes the insert in
-    ``batch_size`` chunks (reference default 1000, extract_bq.py:330),
-    and commits ONCE per partition — a mid-partition failure rolls the
-    whole partition back, so a Spark task retry (or a full job replay)
-    re-inserts it atomically and the conflict-skip makes the replay a
-    no-op for rows that did commit (ST3's effective exactly-once).
-
-    Partition count = write parallelism; repartition upstream to match
-    the database's connection budget. This is the distributed version
-    of the reference's single-threaded ``execute_batch`` loop.
-    """
-    if batch_size is None:
-        from ..config import batch_size as _bs
-
-        batch_size = _bs()  # BATCH_SIZE env parity (extract_bq.py:330)
-    columns = columns or CSV_EXPORT_COLUMNS
-    conflict_keys = conflict_keys or APPLICATION_EVENTS_DEDUP_KEY
-    sql = build_upsert_sql(table, columns, conflict_keys, dialect)
-    out = df.select(*columns)
-
-    def write_partition(rows) -> None:
-        chunk: list[tuple] = []
-        conn = connect()
-        try:
-            cur = conn.cursor()
-            for r in rows:
-                chunk.append(tuple(r))
-                if len(chunk) >= batch_size:
-                    cur.executemany(sql, chunk)
-                    chunk = []
-            if chunk:
-                cur.executemany(sql, chunk)
-            # single commit per partition: chunks are client-side
-            # batching only, atomicity stays at partition granularity
-            conn.commit()
-        except Exception:
-            try:
-                conn.rollback()
-            except Exception:
-                pass  # a dead connection's rollback must not mask the root cause
-            raise
-        finally:
-            conn.close()
-
-    out.foreachPartition(write_partition)
-
-
 def write_jdbc_merge_append(
     df: DataFrame,
     url: str,
@@ -328,10 +216,9 @@ def write_jdbc_merge_append(
     per-call staging table, then ONE set-based ANSI ``MERGE … WHEN NOT
     MATCHED THEN INSERT`` on the database — the reference's ``ON
     CONFLICT DO NOTHING`` retention contract (extract_bq.py:187-267)
-    expressed in the dialect-portable way (Apache Derby — embedded,
-    ships with Spark, exercised for real in tests/test_jdbc_derby.py —
-    and PostgreSQL 15+ both speak ANSI MERGE; for older PG the DBAPI
-    upsert twin with ON CONFLICT remains).
+    expressed in the dialect-portable way. The database must speak
+    ANSI MERGE: Apache Derby (embedded, ships with Spark, exercised for
+    real in tests/test_jdbc_derby.py) or PostgreSQL 15+.
 
     Idempotent under replay: rerunning the same batch merges zero
     rows, so crash-and-retry around the watermark commit keeps
@@ -376,9 +263,13 @@ def write_jdbc_merge_append(
     (an idle trigger or an empty micro-batch) only drops its staging
     table: no target bootstrap, no index DDL, no ``MERGE`` — so a
     zero-row first load creates no target table, and ``timings`` gets
-    ``staging_write_s`` only. Returns the number of rows the MERGE
-    actually inserted (the reference's ``records_inserted``; a full
-    replay or an empty batch returns 0)."""
+    ``staging_write_s`` only. The staging table is dropped on a failed
+    staging write or ``MERGE`` too (tolerating exactly "does not
+    exist", 42Y55/42P01), and the original error propagates; the
+    target is untouched, so a replay of the batch completes the load.
+    Returns the number of rows the MERGE actually inserted (the
+    reference's ``records_inserted``; a full replay or an empty batch
+    returns 0)."""
     # intra-batch dedup — the parquet twin's step 1: MERGE evaluates
     # source rows against the TARGET snapshot only, so two staged rows
     # sharing a conflict key would BOTH insert without this
@@ -422,89 +313,137 @@ def write_jdbc_merge_append(
         w = w.option("driver", driver)
     for k, v in writer_options.items():
         w = w.option(k, v)
-    t0 = time.time()
-    w.save()
-    if timings is not None:
-        # perf-characterization hook (SCALE.md JDBC section): the
-        # staging write is the executor-parallel leg, the MERGE the
-        # single set-based DB statement — the split tells which side
-        # a slow load is on
-        timings["staging_write_s"] = time.time() - t0
-    # read only after the write returned, like the parquet twin
-    n_staged = staged.get["n"]
-
-    def q(c: str) -> str:
-        return '"' + c.replace('"', '""') + '"'
-
-    on = " AND ".join(f"t.{q(k)} = s.{q(k)}" for k in conflict_keys)
-    cols = df.columns
-    merge_sql = (
-        f"MERGE INTO {table} t USING {staging} s ON {on} "
-        f"WHEN NOT MATCHED THEN INSERT ({', '.join(q(c) for c in cols)}) "
-        f"VALUES ({', '.join('s.' + q(c) for c in cols)})"
-    )
     jvm = df.sparkSession._jvm
     if driver:
         jvm.java.lang.Class.forName(driver)
     props = jvm.java.util.Properties()
     for cred in ("user", "password"):
-        if writer_options and cred in writer_options:
+        if cred in writer_options:
             props.setProperty(cred, writer_options[cred])
-    conn = jvm.java.sql.DriverManager.getConnection(url, props)
-    try:
-        st = conn.createStatement()
+    with closing(jvm.java.sql.DriverManager.getConnection(url, props)) as conn, closing(
+        conn.createStatement()
+    ) as st:
         try:
-            inserted = 0
-            if n_staged:
-                # bootstrap the target on first load: clone the staging
-                # layout without rows
-                _create_unless_exists(
-                    st, f"CREATE TABLE {table} AS SELECT * FROM {staging} WITH NO DATA"
-                )
-                # Index the conflict keys on the target — the
-                # reference's UNIQUE constraint gives it this index
-                # implicitly (extract_bq.py:204), and without one the
-                # MERGE's anti-probe is a nested-loop heap scan per
-                # staged row: O(|staged|·|target|). Measured in
-                # round 9 (jstack-confirmed
-                # NestedLoopLeftOuterJoinResultSet): the 80k×80k
-                # replay MERGE ran 10+ minutes unindexed vs seconds
-                # indexed. Plain (not UNIQUE) index: NULLs compare
-                # distinct in a MERGE ON, so duplicate NULL-key rows
-                # are legal target states the index must not reject.
-                # Attempted on every non-empty batch, not only after a
-                # bootstrap, so pre-existing targets created by older
-                # code or externally get indexed too (r9 ADVICE).
-                idx_cols = ", ".join(q(k) for k in conflict_keys)
-                _create_unless_exists(
-                    st, f"CREATE INDEX {table}_ck_idx ON {table} ({idx_cols})"
-                )
-                t1 = time.time()
-                inserted = st.executeUpdate(merge_sql)
-                if timings is not None:
-                    timings["merge_s"] = time.time() - t1
-            # staging is per-call scratch: drop it after the merge
-            # commits (leaving it behind doubles the batch's storage)
-            st.executeUpdate(f"DROP TABLE {staging}")
-            return inserted
-        finally:
-            st.close()
-    finally:
-        conn.close()
+            t0 = time.time()
+            w.save()
+            if timings is not None:
+                # perf-characterization hook (SCALE.md JDBC section): the
+                # staging write is the executor-parallel leg, the MERGE the
+                # single set-based DB statement — the split tells which side
+                # a slow load is on
+                timings["staging_write_s"] = time.time() - t0
+            # read only after the write returned, like the parquet twin
+            inserted = (
+                _merge_staged(st, table, staging, conflict_keys, df.columns, timings)
+                if staged.get["n"]
+                else 0
+            )
+        except BaseException:
+            # a failed staging write or MERGE may leave a half-filled
+            # staging table: drop it, but never let the drop's own error
+            # replace the one that got here
+            with suppress(Exception):
+                _execute_tolerating(st, f"DROP TABLE {staging}", _DOES_NOT_EXIST)
+            raise
+        # staging is per-call scratch: drop it after the merge commits
+        # (leaving it behind doubles the batch's storage)
+        _execute_tolerating(st, f"DROP TABLE {staging}", _DOES_NOT_EXIST)
+        return inserted
 
 
-def _create_unless_exists(st, ddl: str) -> None:
-    """Run a CREATE statement, tolerating exactly "already exists"
-    (Derby X0Y32, PG 42P07): race-free, and immune to the JDBC
-    metadata-pattern quirks of a probe-first check."""
+def _merge_staged(
+    st, table: str, staging: str, conflict_keys: list[str], cols: list[str],
+    timings: dict | None,
+) -> int:
+    """Merge a non-empty staging table into ``table``, bootstrapping
+    and indexing the target first; returns the rows inserted."""
+
+    def q(c: str) -> str:
+        return '"' + c.replace('"', '""') + '"'
+
+    # bootstrap the target on first load: clone the staging layout
+    # without rows
+    _execute_tolerating(
+        st, f"CREATE TABLE {table} AS SELECT * FROM {staging} WITH NO DATA",
+        _ALREADY_EXISTS,
+    )
+    # Index the conflict keys on the target — the reference's UNIQUE
+    # constraint gives it this index implicitly (extract_bq.py:204), and
+    # without one the MERGE's anti-probe is a nested-loop heap scan per
+    # staged row: O(|staged|·|target|). Measured in round 9
+    # (jstack-confirmed NestedLoopLeftOuterJoinResultSet): the 80k×80k
+    # replay MERGE ran 10+ minutes unindexed vs seconds indexed. Plain
+    # (not UNIQUE) index: NULLs compare distinct in a MERGE ON, so
+    # duplicate NULL-key rows are legal target states the index must
+    # not reject. Attempted on every non-empty batch, not only after a
+    # bootstrap, so pre-existing targets created by older code or
+    # externally get indexed too (r9 ADVICE).
+    idx_cols = ", ".join(q(k) for k in conflict_keys)
+    _execute_tolerating(
+        st, f"CREATE INDEX {table}_ck_idx ON {table} ({idx_cols})", _ALREADY_EXISTS
+    )
+    on = " AND ".join(f"t.{q(k)} = s.{q(k)}" for k in conflict_keys)
+    merge_sql = (
+        f"MERGE INTO {table} t USING {staging} s ON {on} "
+        f"WHEN NOT MATCHED THEN INSERT ({', '.join(q(c) for c in cols)}) "
+        f"VALUES ({', '.join('s.' + q(c) for c in cols)})"
+    )
+    t1 = time.time()
+    inserted = st.executeUpdate(merge_sql)
+    if timings is not None:
+        timings["merge_s"] = time.time() - t1
+    return inserted
+
+
+_ALREADY_EXISTS = ("X0Y32", "42P07")  # Derby, PostgreSQL
+_DOES_NOT_EXIST = ("42Y55", "42P01")  # Derby, PostgreSQL
+
+
+def _execute_tolerating(st, ddl: str, states: tuple[str, ...]) -> None:
+    """Run a DDL statement, tolerating exactly the SQLStates given
+    ("already exists" for a CREATE, "does not exist" for a DROP):
+    race-free, and immune to the JDBC metadata-pattern quirks of a
+    probe-first check."""
     try:
         st.executeUpdate(ddl)
     except Exception as e:
         state = getattr(
             getattr(e, "java_exception", None), "getSQLState", lambda: None
         )()
-        if state not in ("X0Y32", "42P07"):
+        if state not in states:
             raise
+
+
+def append_batch(
+    spark: SparkSession,
+    df: DataFrame,
+    target_path: str,
+    jdbc_target: dict | None = None,
+) -> int:
+    """The flagship sink call the batch and streaming runners share.
+
+    Without ``jdbc_target`` the batch goes to the parquet target at
+    ``target_path`` (``idempotent_append_parquet``). With one —
+    ``{"url", "table"}`` plus optional ``"driver"``,
+    ``"writer_options"`` and ``"conflict_keys"`` (default: the
+    reference's dedup key) — it goes to that database table
+    (``write_jdbc_merge_append``). Returns the rows inserted.
+
+    Both writers are looked up in this module's globals at each call,
+    so a wrapper installed over either name (perfbench/spans.py) sees
+    every flagship sink call."""
+    if jdbc_target is None:
+        return idempotent_append_parquet(spark, df, target_path)
+    return write_jdbc_merge_append(
+        df,
+        jdbc_target["url"],
+        jdbc_target["table"],
+        conflict_keys=jdbc_target.get(
+            "conflict_keys", list(APPLICATION_EVENTS_DEDUP_KEY)
+        ),
+        driver=jdbc_target.get("driver"),
+        writer_options=jdbc_target.get("writer_options"),
+    )
 
 
 _STAGING_SEQ = iter(range(1, 1 << 62))

@@ -18,9 +18,6 @@ import os
 import time
 
 
-DEFAULT_LOOKBACK_HOURS = 24  # reference: flask_server.py:64
-
-
 def read_watermark_us(
     path: str,
     lookback_hours: int | None = None,

@@ -38,8 +38,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_events_after
 from ..operators.etl import flagship_pipeline
-from ..schemas import APPLICATION_EVENTS_DEDUP_KEY
-from ..sources.sinks import idempotent_append_parquet, write_jdbc_merge_append
+from ..sources.sinks import append_batch
 from ..sources.watermark import read_watermark_us, write_watermark_us
 
 _run_lock = threading.Lock()  # ST5: real mutual exclusion
@@ -72,10 +71,11 @@ def run_incremental_etl(
     row-group stats skip the target files of earlier runs.
 
     ``jdbc_target``: when given ({"url": …, "table": …, optional
-    "driver", "writer_options", "conflict_keys"}), the sink is the
-    real Spark-JDBC staging+MERGE writer instead of the parquet
-    target — the reference's exact deployment (watermarked extract →
-    conflict-skipping insert into a live SQL database). Idempotence
+    "driver", "writer_options", "conflict_keys"}; sinks.append_batch
+    dispatches on it), the sink is the real Spark-JDBC staging+MERGE
+    writer instead of the parquet target — the reference's exact
+    deployment (watermarked extract → conflict-skipping insert into a
+    live SQL database). Idempotence
     comes from the database MERGE rather than the parquet anti-join;
     everything else (watermark predicate, one observed write,
     commit-then-advance, single-flight) is shared. A batch with no row
@@ -110,19 +110,7 @@ def run_incremental_etl(
                 F.count(F.lit(1)).alias("n"),
                 F.max("event_timestamp").alias("max_ts"),
             )
-            if jdbc_target is None:
-                inserted = idempotent_append_parquet(spark, batch, target_path)
-            else:
-                inserted = write_jdbc_merge_append(
-                    batch,
-                    jdbc_target["url"],
-                    jdbc_target["table"],
-                    conflict_keys=jdbc_target.get(
-                        "conflict_keys", list(APPLICATION_EVENTS_DEDUP_KEY)
-                    ),
-                    driver=jdbc_target.get("driver"),
-                    writer_options=jdbc_target.get("writer_options"),
-                )
+            inserted = append_batch(spark, batch, target_path, jdbc_target)
             fetched, max_ts = observed.get["n"], observed.get["max_ts"]
         advanced = False
         if max_ts is not None and max_ts > wm:

@@ -20,7 +20,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.sinks import idempotent_append_parquet
+from ..sources.sinks import append_batch
 
 
 def read_events_stream(
@@ -99,9 +99,9 @@ def _drain_foreach_batch(stream: DataFrame, checkpoint_dir: str, sink) -> dict:
     """Shared scaffold for every batch-sink streaming leg: streaming
     frame → ``foreachBatch(sink)`` → AvailableNow drain → last-progress
     batch id. The legs differ only in their frame and per-batch sink
-    (parquet anti-join / DBAPI upsert / JDBC MERGE / epoch publish /
-    CDC apply / PSI record), so the checkpointing and termination
-    mechanics live once."""
+    (flagship append to parquet or JDBC / epoch publish / CDC apply /
+    PSI record), so the checkpointing and termination mechanics live
+    once."""
     q = (
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
@@ -150,95 +150,36 @@ def run_streaming_etl(
     target_path: str,
     checkpoint_dir: str,
     tracked: list[str] | None = None,
+    jdbc_target: dict | None = None,
 ) -> dict:
     """Run the flagship pipeline as an AvailableNow streaming query
     with an idempotent foreachBatch sink (effective exactly-once:
-    checkpointed offsets + anti-join dedup).
+    checkpointed offsets + a conflict-skipping append, so a replayed
+    micro-batch inserts nothing twice).
 
-    Returns counts after the run drains. Restarting with the same
-    checkpoint processes only new files — Spark's native version of
-    the watermark file.
+    Each micro-batch goes through ``sinks.append_batch``, the batch
+    runner's sink call: the parquet target at ``target_path`` by
+    default, or the database table that ``jdbc_target`` names (the
+    same dict ``run_incremental_etl`` takes) through the JDBC staging
+    write + set-based MERGE. A micro-batch the flagship filters leave
+    empty stages nothing on the JDBC sink and runs no target
+    bootstrap, index DDL or MERGE.
+
+    Returns the drain's status and last batch id, plus the parquet
+    target's row count when there is no ``jdbc_target``. Restarting
+    with the same checkpoint processes only new files — Spark's native
+    version of the watermark file.
     """
     from ..operators.etl import flagship_pipeline
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         out = flagship_pipeline(batch_df, tracked=tracked)
-        idempotent_append_parquet(batch_df.sparkSession, out, target_path)
+        append_batch(batch_df.sparkSession, out, target_path, jdbc_target)
 
     res = _drain_foreach_batch(read_events_stream(spark, source_dir), checkpoint_dir, sink)
-    res["rows_in_target"] = spark.read.parquet(target_path).count()
+    if jdbc_target is None:
+        res["rows_in_target"] = spark.read.parquet(target_path).count()
     return res
-
-
-def run_streaming_etl_to_db(
-    spark: SparkSession,
-    source_dir: str,
-    connect,
-    table: str,
-    checkpoint_dir: str,
-    tracked: list[str] | None = None,
-    batch_size: int | None = None,
-    dialect: str = "postgres",
-) -> dict:
-    """The reference's production path as a stream: micro-batched
-    conflict-skipping inserts into a relational table (K2/K3/K4 —
-    extract_bq.py:216-258) driven by ``foreachBatch``.
-
-    Effective exactly-once (ST3) comes from the composition: the
-    checkpoint replays an unacknowledged micro-batch after a crash,
-    and the DB's duplicate-skip makes the replay a no-op for rows that
-    already committed. ``connect``/``dialect`` are the DBAPI injection
-    points (psycopg2 in production, SQLite in the in-container tests —
-    same semantics, tests/test_streaming_db.py).
-    """
-    from ..operators.etl import flagship_pipeline
-    from ..sources.sinks import write_dbapi_upsert
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        out = flagship_pipeline(batch_df, tracked=tracked)
-        write_dbapi_upsert(
-            out, connect, table, batch_size=batch_size, dialect=dialect
-        )
-
-    return _drain_foreach_batch(read_events_stream(spark, source_dir), checkpoint_dir, sink)
-
-
-def run_streaming_etl_to_jdbc(
-    spark: SparkSession,
-    source_dir: str,
-    url: str,
-    table: str,
-    checkpoint_dir: str,
-    conflict_keys: list[str] | None = None,
-    tracked: list[str] | None = None,
-    driver: str | None = None,
-    writer_options: dict[str, str] | None = None,
-) -> dict:
-    """The SPARK-JDBC flavor of :func:`run_streaming_etl_to_db`: each
-    micro-batch lands through the executor-parallel JDBC staging write
-    + set-based MERGE of ``sinks.write_jdbc_merge_append`` — the
-    reference's conflict-skipping stream into a relational target with
-    no per-row Python in the sink at all. Effective exactly-once is
-    the same composition (checkpoint replays an unacknowledged batch;
-    the MERGE makes the replay a no-op). A micro-batch the flagship
-    filters leave empty stages nothing and runs no target bootstrap,
-    index DDL or MERGE. Exercised for REAL against
-    embedded Derby in tests/test_jdbc_derby.py; in production the url
-    points at PostgreSQL 15+ (ANSI MERGE) and nothing else changes."""
-    from ..operators.etl import flagship_pipeline
-    from ..schemas import APPLICATION_EVENTS_DEDUP_KEY
-    from ..sources.sinks import write_jdbc_merge_append
-
-    keys = conflict_keys or list(APPLICATION_EVENTS_DEDUP_KEY)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        out = flagship_pipeline(batch_df, tracked=tracked)
-        write_jdbc_merge_append(
-            out, url, table, conflict_keys=keys, driver=driver,
-            writer_options=writer_options,
-        )
-
-    return _drain_foreach_batch(read_events_stream(spark, source_dir), checkpoint_dir, sink)
 
 
 def streaming_purchase_click_join(

@@ -257,25 +257,47 @@ def test_env_config_parity(monkeypatch):
     from bigquery_postgres_events_etl_spark import config
 
     for var in ["ETL_LOOKBACK_HOURS", "TIMESTAMP_FILE", "ETL_SCHEDULE_HOUR",
-                "ETL_SCHEDULE_MINUTE", "BATCH_SIZE", "FLASK_PORT"]:
+                "ETL_SCHEDULE_MINUTE", "FLASK_PORT"]:
         monkeypatch.delenv(var, raising=False)
     assert config.lookback_hours() == 24
     assert config.timestamp_file() == "last_timestamp.txt"
     assert (config.schedule_hour(), config.schedule_minute()) == (2, 0)
-    assert config.batch_size() == 1000
     assert config.service_port() == 5000
 
     monkeypatch.setenv("ETL_LOOKBACK_HOURS", "48")
     monkeypatch.setenv("TIMESTAMP_FILE", "/tmp/wm.txt")
     monkeypatch.setenv("ETL_SCHEDULE_HOUR", "5")
     monkeypatch.setenv("ETL_SCHEDULE_MINUTE", "30")
-    monkeypatch.setenv("BATCH_SIZE", "250")
+    monkeypatch.setenv("FLASK_PORT", "8080")
     assert config.lookback_hours() == 48
     assert config.timestamp_file() == "/tmp/wm.txt"
     assert (config.schedule_hour(), config.schedule_minute()) == (5, 30)
-    assert config.batch_size() == 250
-    monkeypatch.setenv("BATCH_SIZE", "junk")
-    assert config.batch_size() == 1000  # malformed → reference default
+    assert config.service_port() == 8080
+    monkeypatch.setenv("FLASK_PORT", "junk")
+    assert config.service_port() == 5000  # malformed → reference default
+
+
+def test_service_main_state_defaults_to_timestamp_file(monkeypatch, tmp_path):
+    """The service's watermark file is TIMESTAMP_FILE (default
+    last_timestamp.txt, flask_server.py:49) unless --state names one."""
+    from bigquery_postgres_events_etl_spark import service, session
+
+    served = []
+    monkeypatch.setattr(session, "get_spark", lambda **kw: None)
+    monkeypatch.setattr(
+        service.EtlService, "serve", lambda self, port=None: served.append(self)
+    )
+
+    monkeypatch.delenv("TIMESTAMP_FILE", raising=False)
+    assert service.main([]) == 0
+    assert served[-1].state_path == "last_timestamp.txt"
+
+    monkeypatch.setenv("TIMESTAMP_FILE", str(tmp_path / "wm.txt"))
+    assert service.main([]) == 0
+    assert served[-1].state_path == str(tmp_path / "wm.txt")
+
+    assert service.main(["--state", str(tmp_path / "other.txt")]) == 0
+    assert served[-1].state_path == str(tmp_path / "other.txt")
 
 
 def test_watermark_lookback_env(monkeypatch, tmp_path):

@@ -13,8 +13,9 @@ actual Spark JDBC code paths can execute for real:
   extract_bq.py:187-267) as staging + ANSI MERGE, idempotent under
   replay (the exactly-once-effect sink contract).
 
-What stays env-blocked is only the PostgreSQL WIRE target; the JDBC
-mechanics themselves are no longer stubbed anywhere.
+What stays env-blocked is only the PostgreSQL WIRE target (the last
+test, gated on SPARK_GRAFT_PG_JDBC_URL); the JDBC mechanics themselves
+are no longer stubbed anywhere.
 """
 
 from __future__ import annotations
@@ -122,6 +123,73 @@ def test_jdbc_merge_append_skips_conflicts_and_replays_idempotently(
     assert _rows(read()) == expect
 
 
+def _stage_tables(spark, url):
+    """The per-call staging tables left in the database."""
+    names = (
+        spark.read.format("jdbc")
+        .option("url", url)
+        .option("driver", DRIVER)
+        .option("query", "SELECT TABLENAME FROM SYS.SYSTABLES")
+        .load()
+        .collect()
+    )
+    return [r[0] for r in names if "_STAGE_" in r[0]]
+
+
+def test_merge_append_failure_drops_staging_then_replay_completes(spark, derby_url):
+    """A staging write that fails mid-job (one partition holds a row
+    wider than its VARCHAR pin, so that partition's inserts raise while
+    the others commit) raises to the caller, leaves the target as it
+    was and leaves no staging table behind; a replay without the
+    poison row then inserts the batch's distinct keys once, and a
+    second replay inserts nothing."""
+    from bigquery_postgres_events_etl_spark.sources.sinks import (
+        write_jdbc_merge_append,
+    )
+
+    keys = ["user_id", "event_timestamp", "event_name"]
+    schema = "user_id string, event_timestamp long, event_name string"
+
+    def merge(df):
+        return write_jdbc_merge_append(
+            df, derby_url, "leak_events", conflict_keys=keys, driver=DRIVER,
+            writer_options={
+                "createTableColumnTypes": "user_id VARCHAR(10), event_name VARCHAR(10)"
+            },
+        )
+
+    def target():
+        return _rows(
+            spark.read.format("jdbc").option("url", derby_url)
+            .option("dbtable", "leak_events").option("driver", DRIVER).load()
+        )
+
+    base = [("b0", 0, "click"), ("b1", 1, "view")]
+    assert merge(spark.createDataFrame(base, schema)) == 2
+
+    rows = [(f"u{i % 7}", i, "click") for i in range(1, 41)]
+    rows += rows[:5]  # intra-batch duplicates
+    clean = spark.createDataFrame(rows, schema)
+    poisoned = clean.union(spark.createDataFrame([("u" * 40, 99, "click")], schema))
+    # keep the deduped batch in several partitions, so the staging
+    # write commits the clean partitions before the poisoned one fails
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        with pytest.raises(Exception):
+            merge(poisoned)
+    finally:
+        spark.conf.set(coalesce, prev)
+    assert target() == sorted(base)
+    assert _stage_tables(spark, derby_url) == []
+
+    assert merge(clean) == len(set(rows))
+    assert target() == sorted(base + list(set(rows)))
+    assert merge(clean) == 0
+    assert _stage_tables(spark, derby_url) == []
+
+
 def test_incremental_watermark_loop_into_real_jdbc(spark, derby_url, sf_dir, tmp_path):
     """The reference's PRIMARY flow (watermarked incremental extract →
     conflict-skipping append into a live SQL database,
@@ -224,9 +292,7 @@ def test_streaming_etl_to_real_jdbc_is_exactly_once(spark, derby_url, sf_dir, tm
     exactly-once on the database."""
     from bigquery_postgres_events_etl_spark.io import load_table
     from bigquery_postgres_events_etl_spark.operators.etl import flagship_pipeline
-    from bigquery_postgres_events_etl_spark.streaming.stream import (
-        run_streaming_etl_to_jdbc,
-    )
+    from bigquery_postgres_events_etl_spark.streaming.stream import run_streaming_etl
 
     coltypes = "event_name VARCHAR(128), event_name_detail VARCHAR(512)"
     events = load_table(spark, sf_dir, "events")
@@ -242,15 +308,20 @@ def test_streaming_etl_to_real_jdbc_is_exactly_once(spark, derby_url, sf_dir, tm
         .save()
     )
 
+    jdbc_target = {
+        "url": derby_url,
+        "table": "application_events",
+        "driver": DRIVER,
+        "writer_options": {"createTableColumnTypes": coltypes},
+    }
+
     def run():
-        return run_streaming_etl_to_jdbc(
+        return run_streaming_etl(
             spark,
             sf_dir,
-            derby_url,
-            "application_events",
+            str(tmp_path / "unused_parquet"),
             str(tmp_path / "ckpt"),
-            driver=DRIVER,
-            writer_options={"createTableColumnTypes": coltypes},
+            jdbc_target=jdbc_target,
         )
 
     assert run()["status"] == "success"
@@ -274,14 +345,12 @@ def test_streaming_etl_to_real_jdbc_is_exactly_once(spark, derby_url, sf_dir, tm
 
     # fresh checkpoint = full source REPLAY into the same target: the
     # MERGE must skip every already-committed row
-    run_streaming_etl_to_jdbc(
+    run_streaming_etl(
         spark,
         sf_dir,
-        derby_url,
-        "application_events",
+        str(tmp_path / "unused_parquet"),
         str(tmp_path / "ckpt2"),
-        driver=DRIVER,
-        writer_options={"createTableColumnTypes": coltypes},
+        jdbc_target=jdbc_target,
     )
     assert target_count() == expect
 
@@ -396,3 +465,44 @@ def test_merge_append_zero_config_string_keys_autocreate(spark, derby_url):
     )
     rows = {r.user_id: r.payload for r in back.collect()}
     assert rows == {"u1": "p" * 300, "u2": "q", "u3": "r"}
+
+
+def test_live_postgres_merge_append_replay_idempotent(spark, sf_dir):
+    """The Derby tests prove the staging + MERGE mechanics; this runs
+    them against a live PostgreSQL 15+ server (ANSI MERGE) when one is
+    reachable. Set SPARK_GRAFT_PG_JDBC_URL (e.g.
+    ``jdbc:postgresql://localhost:5432/test?user=postgres``) and put
+    the PostgreSQL JDBC driver on Spark's classpath; otherwise the test
+    skips."""
+    import os
+
+    url = os.environ.get("SPARK_GRAFT_PG_JDBC_URL")
+    if not url:
+        pytest.skip("SPARK_GRAFT_PG_JDBC_URL not set (no PostgreSQL server in this env)")
+    from bigquery_postgres_events_etl_spark.io import load_table
+    from bigquery_postgres_events_etl_spark.operators.etl import flagship_pipeline
+    from bigquery_postgres_events_etl_spark.schemas import APPLICATION_EVENTS_DEDUP_KEY
+    from bigquery_postgres_events_etl_spark.sources.sinks import (
+        write_jdbc_merge_append,
+    )
+
+    pg_driver = "org.postgresql.Driver"
+    table = "application_events_test"
+    keys = list(APPLICATION_EVENTS_DEDUP_KEY)
+    spark._jvm.java.lang.Class.forName(pg_driver)
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        conn.createStatement().executeUpdate(f"DROP TABLE IF EXISTS {table}")
+    finally:
+        conn.close()
+
+    out = flagship_pipeline(load_table(spark, sf_dir, "events"))
+    first = write_jdbc_merge_append(out, url, table, conflict_keys=keys, driver=pg_driver)
+    assert first == out.dropDuplicates(keys).count()
+    # replay inserts nothing
+    assert write_jdbc_merge_append(out, url, table, conflict_keys=keys, driver=pg_driver) == 0
+    back = (
+        spark.read.format("jdbc").option("url", url)
+        .option("dbtable", table).option("driver", pg_driver).load()
+    )
+    assert back.count() == first

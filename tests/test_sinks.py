@@ -1,5 +1,5 @@
 """Sink contract tests: CSV header parity (K1), idempotent append
-(K4/K5), upsert SQL (K2-K4)."""
+(K4/K5)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from bigquery_postgres_events_etl_spark.io import load_table
 from bigquery_postgres_events_etl_spark.operators.etl import flagship_pipeline
 from bigquery_postgres_events_etl_spark.schemas import CSV_EXPORT_COLUMNS
 from bigquery_postgres_events_etl_spark.sources.sinks import (
-    build_upsert_sql,
     export_csv,
     idempotent_append_parquet,
 )
@@ -97,21 +96,6 @@ def test_unreadable_target_still_raises(spark, sf_dir, tmp_path):
     assert sorted(os.listdir(target)) == files
     os.remove(target / "part-99999-corrupt.parquet")
     assert spark.read.parquet(str(target)).count() == n
-
-
-def test_upsert_sql_shape():
-    """K4: the ON CONFLICT DO NOTHING statement matches the
-    reference's (extract_bq.py:216-221)."""
-    sql = build_upsert_sql(
-        "application_events",
-        ["user_id", "event_timestamp", "event_name"],
-        ["user_id", "event_timestamp", "event_name"],
-    )
-    assert sql == (
-        "INSERT INTO application_events (user_id, event_timestamp, event_name) "
-        "VALUES (%s, %s, %s) "
-        "ON CONFLICT (user_id, event_timestamp, event_name) DO NOTHING"
-    )
 
 
 def test_bigquery_reader_options():
