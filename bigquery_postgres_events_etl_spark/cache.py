@@ -48,7 +48,7 @@ def scoped_cache(spark: SparkSession):
 
     clearCache is session-global by design: the scope's contract is
     "this runner owns the session's cache lifetime between runs", the
-    situation in service.py / any one-entry-at-a-time driver. Nesting
+    situation of any one-entry-at-a-time driver. Nesting
     is therefore meaningless (the inner exit clears the outer scope's
     caches too) — don't nest.
     """

@@ -95,7 +95,7 @@ def distinct_hashed_shingles(
 
     Persist-no-unpersist is the documented operator contract (the
     returned lazy plan references the cache; harnesses clearCache per
-    entry, services use cache.scoped_cache)."""
+    entry, long-lived sessions use cache.scoped_cache)."""
     return (
         exploded_shingles(docs, n, id_col, text_col)
         .select("doc_id", md5_hash60("shingle").alias("h"))

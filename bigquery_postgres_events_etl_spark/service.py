@@ -7,8 +7,11 @@ Endpoints (same paths/shapes):
 - GET /         service descriptor
 - GET /health   {"status": "healthy", "timestamp": ...}
 - GET /status   last run record + current watermark (raw µs + ISO)
-- POST /trigger synchronous run; 409 if one is in flight (ST5 — the
-  runner holds a real lock, fixing the reference's racy flag)
+- POST /trigger synchronous run; 409 if one is in flight (ST5)
+
+The 409 has one source: ``run_incremental_etl``'s single-flight lock
+(a real lock, fixing the reference's racy flag), which is per process,
+so every ``EtlService`` in the process and the scheduler share it.
 
 Plus the reference's self-scheduling behavior (ST6): starting the
 service also starts a daemon-thread daily trigger at
@@ -114,7 +117,6 @@ class EtlService:
         # the sink through the real Spark-JDBC staging+MERGE writer
         self.jdbc_target = jdbc_target
         self.last_result: dict | None = None
-        self._lock = threading.Lock()
 
     # -- handlers ------------------------------------------------------
     def descriptor(self) -> dict:
@@ -140,31 +142,22 @@ class EtlService:
         }
 
     def trigger(self) -> tuple[int, dict]:
-        from .cache import scoped_cache
+        """One synchronous run: ``200 triggered`` with its record, or
+        ``409 already_running`` (``last_result`` untouched) when the
+        runner's single-flight lock is held."""
         from .streaming.incremental import run_incremental_etl
 
-        if not self._lock.acquire(blocking=False):
+        result = run_incremental_etl(
+            self.spark,
+            self.source_dir,
+            self.state_path,
+            self.target_path,
+            jdbc_target=self.jdbc_target,
+        )
+        if result.get("reason") == "already_running":
             return 409, {"status": "already_running"}
-        try:
-            # scoped cache (r6 verdict item #4): operators persist()
-            # shared intermediates and never unpersist (the lazy-plan
-            # contract); in this long-lived session that would
-            # accumulate cached frames across daily runs — each run's
-            # caches die with the run instead. Safe because the run is
-            # fully materialized (results written, counts observed in
-            # the write job) before the scope exits, and the service
-            # holds no cross-run caches of its own.
-            with scoped_cache(self.spark):
-                self.last_result = run_incremental_etl(
-                    self.spark,
-                    self.source_dir,
-                    self.state_path,
-                    self.target_path,
-                    jdbc_target=self.jdbc_target,
-                )
-            return 200, {"status": "triggered", "result": self.last_result}
-        finally:
-            self._lock.release()
+        self.last_result = result
+        return 200, {"status": "triggered", "result": result}
 
     def scheduled_run(self) -> None:
         """The daily scheduler's entry: same path as POST /trigger,

@@ -10,23 +10,29 @@ Layout:
 
 The manifest is the single source of truth and is published by
 write-to-tmp + atomic os.replace — readers either see the old version
-or the new one, never a half-state. Writers serialize on the existing
-``TargetLock`` (same lock the append/compaction paths take, so MERGE
-composes with them). Old versions stay readable until vacuumed —
-that's time travel.
+or the new one, never a half-state. Every writer that derives a
+snapshot from a DataFrame publishes through one commit path,
+``_commit``, under the table's ``TargetLock`` (same lock the
+append/compaction paths take, so MERGE composes with them). Old
+versions stay readable until vacuumed — that's time travel; vacuum
+never drops the current version.
 
 MERGE = read current snapshot, full-outer against the updates on the
 key, matched rows take the update's values, unmatched-source rows
-insert, unmatched-target rows carry over — one distributed join, then
-a NEW immutable snapshot. No file is ever rewritten in place.
+insert, unmatched-target rows carry over — one distributed join
+(``_join_on_keys``, shared by every keyed writer), then a NEW
+immutable snapshot. No file is ever rewritten in place. A batch that
+repeats a key is rejected with ValueError: the join would emit one
+row per copy and break the key's uniqueness.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .sinks import TargetLock
@@ -36,6 +42,10 @@ _MANIFEST = "_manifest.json"
 
 def _manifest_path(table_dir: str) -> str:
     return os.path.join(table_dir, _MANIFEST)
+
+
+def _version_dir(table_dir: str, v: int) -> str:
+    return os.path.join(table_dir, f"v={v}")
 
 
 def _read_manifest(table_dir: str) -> dict:
@@ -75,21 +85,90 @@ def read_table(
     v = m["current"] if version is None else version
     if v == 0 or str(v) not in m["versions"]:
         raise ValueError(f"version {v} does not exist in {table_dir}")
-    return spark.read.parquet(os.path.join(table_dir, f"v={v}"))
+    return spark.read.parquet(_version_dir(table_dir, v))
+
+
+def _commit(
+    spark: SparkSession, table_dir: str, note: str, build, epoch: int | None = None
+) -> dict:
+    """Publish one new version under the table's lock; returns
+    ``{"version", "rows"}``.
+
+    ``build`` is the new snapshot, or a function of the current one
+    (None for an empty table) that returns it; only a function makes
+    the current snapshot be read. Its rows are counted by an
+    ``Observation`` on the one write job.
+
+    ``epoch`` makes the commit exactly-once per micro-batch: an epoch
+    already in the manifest's ``applied_epochs`` ledger returns
+    ``{"version", "rows": None, "skipped_epoch"}`` with no Spark job,
+    and a new one joins the ledger in the SAME manifest publish as the
+    version pointer — a crash after the snapshot write but before the
+    publish leaves the ledger un-advanced, so the replay overwrites
+    the unpublished version dir and publishes once."""
+    with TargetLock(table_dir):
+        m = _read_manifest(table_dir)
+        if epoch is not None and str(epoch) in m.get("applied_epochs", []):
+            return {"version": m["current"], "rows": None, "skipped_epoch": epoch}
+        if callable(build):
+            cur = m["current"]
+            build = build(spark.read.parquet(_version_dir(table_dir, cur)) if cur else None)
+        v = _next_version(m)
+        rows = Observation()
+        (
+            build.observe(rows, F.count(F.lit(1)).alias("n"))
+            .write.mode("overwrite")
+            .parquet(_version_dir(table_dir, v))
+        )
+        m["versions"][str(v)] = {"note": note}
+        m["current"] = v
+        if epoch is not None:
+            m.setdefault("applied_epochs", []).append(str(epoch))
+        _publish_manifest(table_dir, m)
+        return {"version": v, "rows": rows.get["n"]}
+
+
+def _join_on_keys(
+    base: DataFrame | None, updates: DataFrame, key_cols: list[str], schema
+) -> DataFrame:
+    """The keyed join every MERGE shares: ``base`` aliased ``b`` (an
+    empty frame of ``schema`` when the table has no version yet)
+    full-outer against ``updates`` aliased ``u``, null-safe on
+    ``key_cols``. ``u.__present`` marks "the batch has this key":
+    presence must not be inferred from key nullability (a null-keyed
+    update row would misroute).
+
+    A batch that repeats a key raises ValueError first (one aggregation
+    over the batch): the join would emit one row per copy, and picking
+    an arbitrary winner is the classic CDC corruption."""
+    if not updates.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__n")).where(
+        F.col("__n") > 1
+    ).isEmpty():
+        raise ValueError(
+            f"batch has duplicate keys on {key_cols}; pre-collapse with a seq column"
+        )
+    if base is None:
+        # an empty relation the optimizer can see, so the join folds
+        # into a projection of the batch (no shuffle)
+        base = updates.sparkSession.createDataFrame([], schema).where(F.lit(False))
+    u = updates.withColumn("__present", F.lit(1)).alias("u")
+    cond = [F.col(f"b.{k}").eqNullSafe(F.col(f"u.{k}")) for k in key_cols]
+    return base.alias("b").join(u, cond, "full_outer")
+
+
+def _upserted(cols: list[str]) -> list:
+    """``cols`` over a ``_join_on_keys`` result: the update's value
+    where the batch has the key, else the carried-over base value."""
+    hit = F.col("u.__present").isNotNull()
+    return [
+        F.when(hit, F.col(f"u.{c}")).otherwise(F.col(f"b.{c}")).alias(c)
+        for c in cols
+    ]
 
 
 def write_snapshot(df: DataFrame, table_dir: str, note: str = "") -> int:
     """Publish ``df`` as the next immutable version. Returns it."""
-    os.makedirs(table_dir, exist_ok=True)
-    with TargetLock(table_dir):
-        m = _read_manifest(table_dir)
-        v = _next_version(m)
-        path = os.path.join(table_dir, f"v={v}")
-        df.write.mode("overwrite").parquet(path)
-        m["versions"][str(v)] = {"note": note}
-        m["current"] = v
-        _publish_manifest(table_dir, m)
-        return v
+    return _commit(df.sparkSession, table_dir, note, df)["version"]
 
 
 def merge_upsert(
@@ -102,55 +181,32 @@ def merge_upsert(
     values, new keys insert, untouched rows carry over — published as
     a new snapshot (the previous version remains readable). The join
     shuffles both sides on the key once; at 100 TB pair this with the
-    daily-partition layout so only affected partitions join."""
-    with TargetLock(table_dir):
-        m = _read_manifest(table_dir)
-        base = (
-            spark.read.parquet(os.path.join(table_dir, f"v={m['current']}"))
-            if m["current"]
-            else spark.createDataFrame([], updates.schema)
-        )
-        val_cols = [c for c in updates.columns if c not in key_cols]
-        b = base.alias("b")
-        # presence marker: "this side had a row" must not be inferred
-        # from key nullability (a null-keyed update row would misroute)
-        u = updates.withColumn("__is_update", F.lit(1)).alias("u")
-        cond = [F.col(f"b.{k}").eqNullSafe(F.col(f"u.{k}")) for k in key_cols]
-        merged = b.join(u, cond, "full_outer").select(
-            *[
-                F.when(F.col("u.__is_update").isNotNull(), F.col(f"u.{k}"))
-                .otherwise(F.col(f"b.{k}"))
-                .alias(k)
-                for k in key_cols
-            ],
-            *[
-                F.when(F.col("u.__is_update").isNotNull(), F.col(f"u.{c}"))
-                .otherwise(F.col(f"b.{c}"))
-                .alias(c)
-                for c in val_cols
-            ],
-        )
-        v = _next_version(m)
-        path = os.path.join(table_dir, f"v={v}")
-        merged.write.mode("overwrite").parquet(path)
-        n_rows = spark.read.parquet(path).count()
-        m["versions"][str(v)] = {"note": f"merge on {key_cols}"}
-        m["current"] = v
-        _publish_manifest(table_dir, m)
-        return {"version": v, "rows": n_rows}
+    daily-partition layout so only affected partitions join. A key
+    repeated in ``updates`` raises ValueError."""
+    cols = key_cols + [c for c in updates.columns if c not in key_cols]
+    return _commit(
+        spark,
+        table_dir,
+        f"merge on {key_cols}",
+        lambda base: _join_on_keys(base, updates, key_cols, updates.schema).select(
+            *_upserted(cols)
+        ),
+    )
 
 
 def vacuum(table_dir: str, keep_last: int = 2) -> list[int]:
-    """Drop snapshot dirs older than the last ``keep_last`` versions
-    (bounded storage; time travel keeps only the retained window)."""
-    import shutil
-
+    """Drop the snapshot dirs older than both the current version and
+    the last ``keep_last`` versions (bounded storage; time travel keeps
+    only the retained window). The current version and every newer
+    one (abandoned by a ``restore_table``) stay, so the table stays
+    readable and the next write still numbers past the highest."""
     with TargetLock(table_dir):
         m = _read_manifest(table_dir)
         versions = sorted(int(v) for v in m["versions"])
-        to_drop = versions[:-keep_last] if keep_last else versions
+        window = versions[-keep_last:] if keep_last else []
+        to_drop = [v for v in versions if v < m["current"] and v not in window]
         for v in to_drop:
-            shutil.rmtree(os.path.join(table_dir, f"v={v}"), ignore_errors=True)
+            shutil.rmtree(_version_dir(table_dir, v), ignore_errors=True)
             del m["versions"][str(v)]
         _publish_manifest(table_dir, m)
         return to_drop
@@ -167,79 +223,21 @@ def apply_changelog(
     """Apply a CDC changelog (op ∈ {'I','U','D'}) to the versioned
     table — the consumer side of `etl_snapshot_diff`'s producer:
     inserts and updates upsert, deletes drop the key, untouched rows
-    carry over; published as a new immutable snapshot. If a key
-    appears multiple times in the batch, the LAST op wins by a
-    deterministic (key, op-order) rule the caller controls via a
-    `seq` column; absent one, duplicate keys are rejected loudly
-    (silent arbitrary-winner is the classic CDC corruption).
+    carry over; published as a new immutable snapshot. A key that
+    appears more than once in the batch is rejected with ValueError;
+    the caller collapses it first by a deterministic (key, seq) rule.
 
     ``epoch`` (streaming use — see ``run_streaming_cdc_to_lake``)
-    makes the apply EXACTLY-ONCE per micro-batch: an epoch already in
-    the manifest's ``applied_epochs`` ledger is a no-op, and the
-    ledger entry is written in the SAME atomic manifest publish as
-    the version pointer — a crash after the snapshot write but before
-    the publish leaves the ledger un-advanced, so the replay simply
-    overwrites the unpublished version dir and publishes once."""
-    if epoch is not None:
-        m0 = _read_manifest(table_dir)
-        if str(epoch) in m0.get("applied_epochs", []):
-            return {"version": m0["current"], "rows": None, "skipped_epoch": epoch}
-    dup = (
-        changes.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup:
-        raise ValueError(
-            "changelog has duplicate keys; pre-collapse with a seq column"
-        )
-    with TargetLock(table_dir):
-        m = _read_manifest(table_dir)
-        if epoch is not None and str(epoch) in m.get("applied_epochs", []):
-            # another worker applied this epoch between the fast-path
-            # check and lock entry
-            return {"version": m["current"], "rows": None, "skipped_epoch": epoch}
-        base = (
-            spark.read.parquet(os.path.join(table_dir, f"v={m['current']}"))
-            if m["current"]
-            else spark.createDataFrame([], changes.drop(op_col).schema)
-        )
-        val_cols = [
-            c for c in changes.columns if c not in key_cols and c != op_col
-        ]
-        b = base.alias("b")
-        u = changes.withColumn("__present", F.lit(1)).alias("u")
-        cond = [F.col(f"b.{k}").eqNullSafe(F.col(f"u.{k}")) for k in key_cols]
-        joined = b.join(u, cond, "full_outer")
-        survived = joined.where(
-            F.col("u.__present").isNull() | (F.col(f"u.{op_col}") != "D")
-        )
-        merged = survived.select(
-            *[
-                F.when(F.col("u.__present").isNotNull(), F.col(f"u.{k}"))
-                .otherwise(F.col(f"b.{k}"))
-                .alias(k)
-                for k in key_cols
-            ],
-            *[
-                F.when(F.col("u.__present").isNotNull(), F.col(f"u.{c}"))
-                .otherwise(F.col(f"b.{c}"))
-                .alias(c)
-                for c in val_cols
-            ],
-        )
-        v = _next_version(m)
-        path = os.path.join(table_dir, f"v={v}")
-        merged.write.mode("overwrite").parquet(path)
-        n = spark.read.parquet(path).count()
-        m["versions"][str(v)] = {"note": f"changelog on {key_cols}"}
-        m["current"] = v
-        if epoch is not None:
-            m.setdefault("applied_epochs", []).append(str(epoch))
-        _publish_manifest(table_dir, m)
-        return {"version": v, "rows": n}
+    makes the apply EXACTLY-ONCE per micro-batch through the
+    manifest's epoch ledger (see ``_commit``)."""
+    cols = key_cols + [c for c in changes.columns if c not in key_cols and c != op_col]
+
+    def build(base):
+        j = _join_on_keys(base, changes, key_cols, changes.drop(op_col).schema)
+        survived = F.col("u.__present").isNull() | (F.col(f"u.{op_col}") != "D")
+        return j.where(survived).select(*_upserted(cols))
+
+    return _commit(spark, table_dir, f"changelog on {key_cols}", build, epoch)
 
 
 def checked_write(
@@ -256,10 +254,7 @@ def checked_write(
     path. One extra aggregation job; the table's current version is
     untouched on failure."""
     agg = df.agg(
-        *[
-            F.count_if(F.expr(pred)).alias(name)
-            for name, pred in expectations
-        ]
+        *[F.count_if(F.expr(pred)).alias(name) for name, pred in expectations]
     ).first()
     failed = {name: agg[name] for name, _ in expectations if agg[name] > 0}
     if failed:
@@ -282,77 +277,65 @@ def scd2_apply(
     new current row opens at ``effective_us``; brand-new keys open a
     first interval; unchanged keys and all history rows carry over
     untouched. One keyed join against the current slice only (history
-    never joins), then a new immutable snapshot.
+    never joins), then a new immutable snapshot. A key repeated in
+    ``updates`` raises ValueError. ``changed_keys`` (the rows opened)
+    is counted on the write job.
 
     First call bootstraps the dimension: every update row opens with
     ``valid_from_us = effective_us`` and an open ``valid_to_us``.
     """
-    meta = ["valid_from_us", "valid_to_us", "is_current"]
-    with TargetLock(table_dir):
-        m = _read_manifest(table_dir)
-        if m["current"]:
-            base = spark.read.parquet(
-                os.path.join(table_dir, f"v={m['current']}")
-            )
-        else:
-            base = None
+    attrs = key_cols + compare_cols
+    opening = [
+        F.lit(effective_us).cast("bigint").alias("valid_from_us"),
+        F.lit(None).cast("bigint").alias("valid_to_us"),
+        F.lit(1).alias("is_current"),
+    ]
+    dim_schema = updates.select(*attrs, *opening).schema
+    opened = Observation()
 
-        opened = updates.select(
-            *key_cols,
-            *compare_cols,
-            F.lit(effective_us).cast("bigint").alias("valid_from_us"),
-            F.lit(None).cast("bigint").alias("valid_to_us"),
-            F.lit(1).alias("is_current"),
+    def build(base):
+        cur = None if base is None else base.where(F.col("is_current") == 1)
+        j = _join_on_keys(cur, updates, key_cols, dim_schema)
+        changed = F.col("u.__present").isNotNull() & (
+            F.col("b.is_current").isNull()  # brand-new key
+            | ~F.struct(*[F.col(f"b.{c}") for c in compare_cols]).eqNullSafe(
+                F.struct(*[F.col(f"u.{c}") for c in compare_cols])
+            )
         )
+        # current rows: carried over unchanged, or closed if changed
+        kept_cur = j.where(F.col("b.is_current").isNotNull()).select(
+            *[F.col(f"b.{c}").alias(c) for c in attrs],
+            F.col("b.valid_from_us").alias("valid_from_us"),
+            F.when(changed, F.lit(effective_us).cast("bigint"))
+            .otherwise(F.col("b.valid_to_us"))
+            .alias("valid_to_us"),
+            F.when(changed, F.lit(0)).otherwise(F.lit(1)).alias("is_current"),
+        )
+        new_cur = (
+            j.where(changed)
+            .select(*[F.col(f"u.{c}").alias(c) for c in attrs], *opening)
+            .observe(opened, F.count(F.lit(1)).alias("n"))
+        )
+        merged = kept_cur.unionByName(new_cur)
         if base is None:
-            merged = opened
-            n_changed = opened.count()
-        else:
-            history = base.where(F.col("is_current") == 0)
-            cur = base.where(F.col("is_current") == 1).alias("b")
-            u = updates.withColumn("__present", F.lit(1)).alias("u")
-            cond = [
-                F.col(f"b.{k}").eqNullSafe(F.col(f"u.{k}")) for k in key_cols
-            ]
-            j = cur.join(u, cond, "full_outer")
-            changed = F.col("u.__present").isNotNull() & (
-                F.col("b.is_current").isNull()  # brand-new key
-                | ~F.struct(*[F.col(f"b.{c}") for c in compare_cols]).eqNullSafe(
-                    F.struct(*[F.col(f"u.{c}") for c in compare_cols])
-                )
-            )
-            # current rows: carried over unchanged, or closed if changed
-            kept_cur = j.where(F.col("b.is_current").isNotNull()).select(
-                *[F.col(f"b.{k}").alias(k) for k in key_cols],
-                *[F.col(f"b.{c}").alias(c) for c in compare_cols],
-                F.col("b.valid_from_us").alias("valid_from_us"),
-                F.when(changed, F.lit(effective_us).cast("bigint"))
-                .otherwise(F.col("b.valid_to_us"))
-                .alias("valid_to_us"),
-                F.when(changed, F.lit(0)).otherwise(F.lit(1)).alias("is_current"),
-            )
-            new_cur = (
-                j.where(changed)
-                .select(
-                    *[F.col(f"u.{k}").alias(k) for k in key_cols],
-                    *[F.col(f"u.{c}").alias(c) for c in compare_cols],
-                    F.lit(effective_us).cast("bigint").alias("valid_from_us"),
-                    F.lit(None).cast("bigint").alias("valid_to_us"),
-                    F.lit(1).alias("is_current"),
-                )
-            )
-            merged = history.select(*key_cols, *compare_cols, *meta).unionByName(
-                kept_cur
-            ).unionByName(new_cur)
-            n_changed = new_cur.count()
+            return merged
+        history = base.where(F.col("is_current") == 0).select(*dim_schema.names)
+        return history.unionByName(merged)
 
-        v = _next_version(m)
-        path = os.path.join(table_dir, f"v={v}")
-        merged.write.mode("overwrite").parquet(path)
-        m["versions"][str(v)] = {"note": f"scd2 @ {effective_us}"}
-        m["current"] = v
-        _publish_manifest(table_dir, m)
-        return {"version": v, "changed_keys": n_changed}
+    v = _commit(spark, table_dir, f"scd2 @ {effective_us}", build)["version"]
+    return {"version": v, "changed_keys": opened.get["n"]}
+
+
+def _link_or_copy(src_dir: str, dst_dir: str, names: list[str]) -> None:
+    """Hard-link each of ``names`` from ``src_dir`` into ``dst_dir``,
+    copying instead where a link fails (across filesystems). Safe
+    because snapshot files are never modified in place."""
+    for name in names:
+        src, dst = os.path.join(src_dir, name), os.path.join(dst_dir, name)
+        try:
+            os.link(src, dst)
+        except OSError:
+            shutil.copy2(src, dst)
 
 
 def purge_keys(
@@ -380,8 +363,6 @@ def purge_keys(
     few files instead of touching all of them (see
     operators/zorder.py).
     """
-    import shutil
-
     import pyarrow.parquet as pq
 
     key_set = set(keys)
@@ -389,7 +370,7 @@ def purge_keys(
         m = _read_manifest(table_dir)
         if not m["current"]:
             raise ValueError(f"no current version in {table_dir}")
-        cur_dir = os.path.join(table_dir, f"v={m['current']}")
+        cur_dir = _version_dir(table_dir, m["current"])
         data_files = sorted(
             f for f in os.listdir(cur_dir)
             if f.endswith(".parquet") and not f.startswith("_")
@@ -402,19 +383,19 @@ def purge_keys(
                 idx = meta.schema.names.index(key_col)
             except ValueError as exc:
                 raise ValueError(f"{key_col} not in {fpath}") from exc
-            may_hit = False
-            for rg in range(meta.num_row_groups):
-                stats = meta.row_group(rg).column(idx).statistics
-                if stats is None or not stats.has_min_max:
-                    may_hit = True
-                    break
-                if any(stats.min <= k <= stats.max for k in key_set):
-                    may_hit = True
-                    break
+            may_hit = any(
+                st is None
+                or not st.has_min_max
+                or any(st.min <= k <= st.max for k in key_set)
+                for st in (
+                    meta.row_group(rg).column(idx).statistics
+                    for rg in range(meta.num_row_groups)
+                )
+            )
             (affected if may_hit else clean).append(fname)
 
         v = _next_version(m)
-        new_dir = os.path.join(table_dir, f"v={v}")
+        new_dir = _version_dir(table_dir, v)
         tmp_dir = new_dir + ".tmp"
         shutil.rmtree(tmp_dir, ignore_errors=True)
         os.makedirs(tmp_dir)
@@ -437,18 +418,12 @@ def purge_keys(
                     os.path.join(tmp_dir, f"purged-{i:05d}.parquet"),
                 )
             shutil.rmtree(rewrite_dir)
-        for fname in clean:
-            src_path = os.path.join(cur_dir, fname)
-            dst_path = os.path.join(tmp_dir, fname)
-            try:
-                os.link(src_path, dst_path)
-            except OSError:
-                shutil.copy2(src_path, dst_path)
+        _link_or_copy(cur_dir, tmp_dir, clean)
         os.replace(tmp_dir, new_dir)
 
         scrubbed = sorted(int(x) for x in m["versions"])
         for old_v in scrubbed:
-            shutil.rmtree(os.path.join(table_dir, f"v={old_v}"), ignore_errors=True)
+            shutil.rmtree(_version_dir(table_dir, old_v), ignore_errors=True)
         m["versions"] = {
             str(v): {"note": f"purge {len(key_set)} keys on {key_col}"}
         }
@@ -484,8 +459,9 @@ def merge_additive(
     Only works for genuinely mergeable columns (counts add, decimal
     sums add, min/max would need their own combinators — rejected
     here rather than silently mis-merged: pass them through
-    ``key_cols`` or precompute). ``epoch`` gives exactly-once per
-    micro-batch via the same manifest ledger as
+    ``key_cols`` or precompute). A key repeated in ``delta`` raises
+    ValueError (pre-aggregate the delta per key). ``epoch`` gives
+    exactly-once per micro-batch via the same manifest ledger as
     :func:`apply_changelog`."""
     bad = [c for c in delta.columns if c not in key_cols and c not in add_cols]
     if bad:
@@ -493,27 +469,10 @@ def merge_additive(
             f"non-key, non-additive columns {bad}: additive merge would "
             f"silently pick one side — drop them or declare them additive"
         )
-    if epoch is not None:
-        m0 = _read_manifest(table_dir)
-        if str(epoch) in m0.get("applied_epochs", []):
-            return {"version": m0["current"], "rows": None, "skipped_epoch": epoch}
-    with TargetLock(table_dir):
-        m = _read_manifest(table_dir)
-        if epoch is not None and str(epoch) in m.get("applied_epochs", []):
-            return {"version": m["current"], "rows": None, "skipped_epoch": epoch}
-        base = (
-            spark.read.parquet(os.path.join(table_dir, f"v={m['current']}"))
-            if m["current"]
-            else spark.createDataFrame([], delta.schema)
-        )
-        b = base.alias("b")
-        u = delta.withColumn("__present", F.lit(1)).alias("u")
-        cond = [F.col(f"b.{k}").eqNullSafe(F.col(f"u.{k}")) for k in key_cols]
-        merged = b.join(u, cond, "full_outer").select(
-            *[
-                F.coalesce(F.col(f"u.{k}"), F.col(f"b.{k}")).alias(k)
-                for k in key_cols
-            ],
+
+    def build(base):
+        return _join_on_keys(base, delta, key_cols, delta.schema).select(
+            *_upserted(key_cols),
             *[
                 (
                     F.coalesce(F.col(f"b.{c}"), F.lit(0))
@@ -522,16 +481,8 @@ def merge_additive(
                 for c in add_cols
             ],
         )
-        v = _next_version(m)
-        path = os.path.join(table_dir, f"v={v}")
-        merged.write.mode("overwrite").parquet(path)
-        n = spark.read.parquet(path).count()
-        m["versions"][str(v)] = {"note": f"additive merge on {key_cols}"}
-        m["current"] = v
-        if epoch is not None:
-            m.setdefault("applied_epochs", []).append(str(epoch))
-        _publish_manifest(table_dir, m)
-        return {"version": v, "rows": n}
+
+    return _commit(spark, table_dir, f"additive merge on {key_cols}", build, epoch)
 
 
 def clone_table(source_dir: str, target_dir: str) -> dict:
@@ -548,46 +499,30 @@ def clone_table(source_dir: str, target_dir: str) -> dict:
 
     The clone starts with an empty epoch ledger — it is a NEW table
     whose future CDC stream is its own."""
-    import shutil
-
     with TargetLock(source_dir):
         m = _read_manifest(source_dir)
         if not m["current"]:
             raise ValueError(f"no current version in {source_dir}")
-        src = os.path.join(source_dir, f"v={m['current']}")
+        src = _version_dir(source_dir, m["current"])
         os.makedirs(target_dir, exist_ok=True)
-        dst = os.path.join(target_dir, "v=1")
+        dst = _version_dir(target_dir, 1)
         tmp = dst + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
         os.makedirs(tmp)
-        n_files = 0
-        for fname in sorted(os.listdir(src)):
-            if not fname.endswith(".parquet"):
-                continue
-            try:
-                os.link(os.path.join(src, fname), os.path.join(tmp, fname))
-            except OSError:
-                shutil.copy2(os.path.join(src, fname), os.path.join(tmp, fname))
-            n_files += 1
+        files = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+        _link_or_copy(src, tmp, files)
         os.replace(tmp, dst)
-        _publish_manifest(
-            target_dir,
-            {
-                "current": 1,
-                "versions": {
-                    "1": {"note": f"clone of {source_dir} v={m['current']}"}
-                },
-            },
-        )
-        return {"version": 1, "files": n_files, "source_version": m["current"]}
+        note = f"clone of {source_dir} v={m['current']}"
+        _publish_manifest(target_dir, {"current": 1, "versions": {"1": {"note": note}}})
+        return {"version": 1, "files": len(files), "source_version": m["current"]}
 
 
 def restore_table(table_dir: str, version: int) -> dict:
     """RESTORE (Delta's rollback verb): repoint ``current`` at a
     retained earlier version — no data movement, one atomic manifest
     publish. The abandoned newer versions stay on disk and readable
-    (time travel forward still works) until vacuumed; a later write
-    continues the version sequence from the HIGHEST version ever
+    (time travel forward still works; ``vacuum`` keeps them); a later
+    write continues the version sequence from the HIGHEST version ever
     published, so restore never re-uses a version number."""
     with TargetLock(table_dir):
         m = _read_manifest(table_dir)

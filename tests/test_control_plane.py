@@ -106,6 +106,19 @@ def test_service_trigger_then_status(service):
     assert status["last_timestamp"] > 0
 
 
+def test_trigger_409_while_runner_holds_single_flight_lock(spark, sf_dir, tmp_path):
+    """The runner's single-flight lock is the one 409 source: a run in
+    flight anywhere in the process (another EtlService, the scheduler)
+    makes trigger answer 409 and leave last_result as it was."""
+    import bigquery_postgres_events_etl_spark.streaming.incremental as inc
+
+    svc = EtlService(spark, sf_dir, str(tmp_path / "wm.txt"), str(tmp_path / "t"))
+    svc.last_result = before = {"status": "success", "records_inserted": 7}
+    with inc._run_lock:
+        assert svc.trigger() == (409, {"status": "already_running"})
+    assert svc.last_result is before
+
+
 def test_cli_parquet_sink(spark, sf_dir, tmp_path):
     """--parquet path: idempotent-append target; rerun adds nothing."""
     target = str(tmp_path / "ptarget")
@@ -138,7 +151,7 @@ def test_seconds_until_fire_today_and_tomorrow():
 
 def test_scheduler_fires_and_respects_single_flight():
     """Injected clock: next fire is always ~20ms away. The scheduled fn
-    routes through EtlService.trigger's lock, so a manual run in flight
+    routes through the runner's single-flight lock, so a manual run in flight
     turns the scheduled firing into a skip, not a concurrent run."""
     import datetime
     import threading

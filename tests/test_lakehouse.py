@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigquery_postgres_events_etl_spark.io import load_table
@@ -13,6 +14,7 @@ from bigquery_postgres_events_etl_spark.sources.lakehouse import (
     current_version,
     merge_upsert,
     read_table,
+    restore_table,
     vacuum,
     write_snapshot,
 )
@@ -67,6 +69,17 @@ def test_merge_updates_inserts_and_carries_over(spark, sf_dir, tmp_path):
         > 0
     )
 
+    # a batch that repeats a key is rejected, not merged into two rows
+    small = str(tmp_path / "small")
+    kv = "k BIGINT, v STRING"
+    write_snapshot(spark.createDataFrame([(1, "a")], kv), small)
+    with pytest.raises(ValueError, match="duplicate keys"):
+        merge_upsert(
+            spark, small, spark.createDataFrame([(1, "b"), (1, "c")], kv), ["k"]
+        )
+    assert current_version(small) == 1
+    assert [tuple(r) for r in read_table(spark, small).collect()] == [(1, "a")]
+
 
 def test_vacuum_bounds_history_and_keeps_current(spark, sf_dir, tmp_path):
     table = str(tmp_path / "t")
@@ -82,6 +95,23 @@ def test_vacuum_bounds_history_and_keeps_current(spark, sf_dir, tmp_path):
         raise AssertionError("vacuumed version must not be readable")
     except ValueError:
         pass
+
+    # after a restore, vacuum keeps the restored current version and
+    # the abandoned newer ones: the table stays readable and the next
+    # write takes a fresh number; once the table moves past them, the
+    # old versions are ordinary history again
+    table = str(tmp_path / "restored")
+    for i in range(3):
+        write_snapshot(spark.createDataFrame([(i,)], "v INT"), table)
+    restore_table(table, 1)
+    assert vacuum(table, keep_last=2) == []
+    assert vacuum(table, keep_last=0) == []
+    assert current_version(table) == 1
+    assert [r.v for r in read_table(spark, table).collect()] == [0]
+    assert write_snapshot(spark.createDataFrame([(3,)], "v INT"), table) == 4
+    assert [r.v for r in read_table(spark, table, version=3).collect()] == [2]
+    assert vacuum(table, keep_last=0) == [1, 2, 3]
+    assert [r.v for r in read_table(spark, table).collect()] == [3]
 
 
 def test_manifest_publish_is_atomic(spark, sf_dir, tmp_path):
@@ -236,6 +266,17 @@ def test_scd2_apply_maintains_validity_intervals(spark, sf_dir, tmp_path):
         r.valid_from_us for r in rows[1:]
     ]
     assert rows[-1].valid_to_us is None
+
+    # a batch that repeats a key is rejected, not opened twice
+    small = str(tmp_path / "small_dim")
+    ks = "k BIGINT, s STRING"
+    scd2_apply(spark, small, spark.createDataFrame([(1, "a")], ks), ["k"], ["s"], 1000)
+    with pytest.raises(ValueError, match="duplicate keys"):
+        scd2_apply(
+            spark, small, spark.createDataFrame([(1, "b"), (1, "c")], ks),
+            ["k"], ["s"], 2000,
+        )
+    assert current_version(small) == 1
 
 
 def test_purge_keys_rewrites_only_affected_files_and_scrubs_history(
@@ -444,6 +485,16 @@ def test_merge_additive_equals_full_recompute(spark, sf_dir, tmp_path):
         raise AssertionError("non-additive column must be rejected")
     except ValueError as ex:
         assert "note" in str(ex)
+
+    # a delta that repeats a key is rejected, not added twice
+    small = str(tmp_path / "small")
+    kn = "k BIGINT, n BIGINT"
+    merge_additive(spark, small, spark.createDataFrame([(1, 5)], kn), ["k"], ["n"])
+    with pytest.raises(ValueError, match="duplicate keys"):
+        merge_additive(
+            spark, small, spark.createDataFrame([(1, 2), (1, 3)], kn), ["k"], ["n"]
+        )
+    assert [tuple(r) for r in read_table(spark, small).collect()] == [(1, 5)]
 
 
 def test_clone_is_zero_copy_and_diverges_independently(spark, sf_dir, tmp_path):
