@@ -92,6 +92,7 @@ def pagerank(
     n_iter: int = 10,
     assume_distinct: bool = False,
     fixed_scale: int | None = None,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """(node, rank) after ``n_iter`` power iterations.
 
@@ -116,8 +117,26 @@ def pagerank(
     edge-list exchange — when the caller's plan already guarantees
     uniqueness (e.g. projections of a distinct frame into disjoint id
     spaces). Duplicate edges would double-count contributions, so only
-    set this when the guarantee is structural."""
-    fixed = fixed_scale is not None
+    set this when the guarantee is structural.
+
+    ``seeds`` (fixed-point only, else ValueError): PERSONALIZED
+    PageRank — the random surfer restarts at a seed node (the first
+    column of ``seeds``) instead of anywhere, so rank mass measures
+    proximity to the seeds (the recommendation / trust-propagation
+    primitive). The initial rank, the (1-d) base and the dangling
+    share go to seeds only, over the distinct seed count |S|:
+
+        rank' = [seed] · ((dden-dnum)·scale) div (dden·|S|)
+                + (dnum · Σ_in shares) div dden
+                + [seed] · (dnum · dangling) div (dden·|S|)
+
+    The node-determined seed flag is folded into the degree and
+    adjacency frames ONCE (one broadcast join of the caller-bounded
+    seed table) and rides the loop's grouping — zero per-iteration
+    seed cost."""
+    fixed, seeded = fixed_scale is not None, seeds is not None
+    if seeded and not fixed:
+        raise ValueError("personalized PageRank (seeds) needs fixed_scale")
     if fixed:
         frac = Fraction(str(damping))
         dnum, dden = frac.numerator, frac.denominator
@@ -128,6 +147,12 @@ def pagerank(
     # partitioning (the r6-r8 watch item); the branch below pins the
     # join-appropriate partitioning before persisting.
     e = e.localCheckpoint(eager=False)
+    if seeded:
+        seed_flags = seeds.select(
+            F.col(seeds.columns[0]).alias("node"), F.lit(1).alias("is_seed")
+        ).distinct()
+        n_seeds = seed_flags.count()  # loop-control scalar (bounded seed set)
+        seed_col = F.coalesce("is_seed", F.lit(0)).alias("is_seed")
     # ONE aggregation pass builds the node set AND out-degrees (a src
     # occurrence weighs 1, a dst occurrence 0 — dst-only nodes appear
     # with outdeg 0): replaces the former distinct + left-join chain
@@ -150,6 +175,10 @@ def pagerank(
             F.count(F.lit(1)).cast("long").alias("occ"),
         )
     )
+    if seeded:
+        deg = deg.join(F.broadcast(seed_flags), "node", "left").select(
+            "node", "outdeg", "occ", seed_col
+        )
     # loop-control scalars in ONE job: |V|, whether any dangling node
     # exists at all, and the max in-degree (the r15 hub sub-gate for
     # the adjacency-array branch). Symmetric edge sets (both
@@ -216,8 +245,12 @@ def pagerank(
                 F.sum("w").cast("long").alias("outdeg"),
                 F.sort_array(F.collect_list("nbr")).alias("in_nbrs"),
             )
-            .persist()
         )
+        if seeded:
+            in_adj = in_adj.join(F.broadcast(seed_flags), "node", "left").select(
+                "node", "outdeg", seed_col, "in_nbrs"
+            )
+        in_adj = in_adj.persist()
     else:
         # ranks too large to broadcast: hash-join path — pinning
         # hashpartitioning(src) means each iteration only exchanges
@@ -241,21 +274,29 @@ def pagerank(
     # loop below is arithmetic-agnostic — share/zero/mass-type/base
     # are the ONLY four points where float and fixed-point differ
     if fixed:
-        init_rank = F.lit(fixed_scale // n).cast("long")
+        n_tele = n_seeds if seeded else n  # size of the teleport set
+
+        def confine(c):
+            """Teleport term ``c``, zero off the seeds when seeded."""
+            if not seeded:
+                return c
+            return F.when(F.col("is_seed") == 1, c).otherwise(F.lit(0).cast("long"))
+
+        init_rank = confine(F.lit(fixed_scale // n_tele).cast("long"))
         zero_c = F.lit(0).cast("long")
         share = F.expr("rank div outdeg").cast("long")
         mass_t = "long"
-        base_const = ((dden - dnum) * fixed_scale) // (dden * n)
+        base_const = ((dden - dnum) * fixed_scale) // (dden * n_tele)
     else:
         init_rank = F.lit(1.0 / n)
         zero_c = F.lit(0).cast("decimal(38,18)")
         share = (F.col("rank") / F.col("outdeg")).cast("decimal(38,18)")
         mass_t = "double"
+    # the loop's node-determined columns: grouping keys, carried as-is
+    keys = ("node", "outdeg", "is_seed") if seeded else ("node", "outdeg")
     # initial ranks: same (node, outdeg) key set either way — from the
     # persisted in_adj in the broadcast branch (deg stays lazy there)
-    ranks = (in_adj if broadcast_ranks else deg).select(
-        "node", "outdeg", init_rank.alias("rank")
-    )
+    ranks = (in_adj if broadcast_ranks else deg).select(*keys, init_rank.alias("rank"))
     # r15: every loop-INVARIANT Column/DataFrame is built ONCE here —
     # reusing the same immutable expression trees each iteration
     # yields the identical plan while cutting the per-iteration py4j
@@ -264,25 +305,30 @@ def pagerank(
     has_outdeg = F.col("outdeg") > 0
     shares_cols = (F.col("node").alias("src_node"), share.alias("c"))
     if broadcast_ranks:
-        ex = in_adj.select(
-            "node", "outdeg", F.explode_outer("in_nbrs").alias("src_nbr")
-        )
+        ex = in_adj.select(*keys, F.explode_outer("in_nbrs").alias("src_nbr"))
         lookup_cond = F.col("src_nbr") == F.col("src_node")
         in_mass_agg = (
             F.sum(F.coalesce(F.col("c"), zero_c)).cast(mass_t).alias("in_mass")
         )
     else:
         contrib_cond = F.col("src") == F.col("node")
+        # the seed flag rides like outdeg: null on contribution rows,
+        # its value on the node's zero row, restored by max()
         contrib_cols = (
             F.col("dst").alias("node"),
             F.lit(None).cast("long").alias("deg_row"),
+            *([F.lit(None).cast("long").alias("seed_row")] if seeded else []),
             share.alias("c"),
         )
         zero_rows = deg.select(
-            "node", F.col("outdeg").alias("deg_row"), zero_c.alias("c")
+            "node",
+            F.col("outdeg").alias("deg_row"),
+            *([F.col("is_seed").cast("long").alias("seed_row")] if seeded else []),
+            zero_c.alias("c"),
         )
         step_aggs = (
             F.max("deg_row").alias("outdeg"),
+            *([F.max("seed_row").alias("is_seed")] if seeded else []),
             F.sum("c").cast(mass_t).alias("in_mass"),
         )
     is_dangling = F.col("outdeg") == 0
@@ -294,11 +340,13 @@ def pagerank(
         # all-integer update: base is a driver-constant, the damped
         # terms are exact-rational `div`s — no IEEE op anywhere, so a
         # second engine replays this bit-for-bit
-        upd = F.lit(base_const).cast("long") + F.expr(
+        upd = confine(F.lit(base_const).cast("long")) + F.expr(
             f"({dnum} * in_mass) div {dden}"
         )
         if has_dangling:
-            upd = upd + F.expr(f"({dnum} * dangling_mass) div {dden * n}")
+            upd = upd + confine(
+                F.expr(f"({dnum} * dangling_mass) div {dden * n_tele}")
+            )
         rank_col = upd.cast("long").alias("rank")
     else:
         dangling_agg = F.coalesce(
@@ -329,7 +377,7 @@ def pagerank(
             shares = ranks.where(has_outdeg).select(*shares_cols)
             stepped = (
                 ex.join(F.broadcast(shares), lookup_cond, "left")
-                .groupBy("node", "outdeg")
+                .groupBy(*keys)
                 .agg(in_mass_agg)
             )
         else:
@@ -356,10 +404,43 @@ def pagerank(
             # inconsistency; n_iter driver round-trips saved per run
             dangling = ranks.where(is_dangling).agg(dangling_agg)
             stepped = stepped.crossJoin(F.broadcast(dangling))
-        ranks = stepped.select("node", "outdeg", rank_col)
+        ranks = stepped.select(*keys, rank_col)
         if (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks.select("node", "rank")
+
+
+def _purchase_edges(spark: SparkSession, sf_dir: str, both_ways: bool) -> DataFrame:
+    """(src, dst) edges of the customer–part purchase graph shared by
+    the PageRank, PPR and HITS entries: the DISTINCT (customer,
+    10_000_000 + partkey) pairs of lineitem⨝orders, parts offset so
+    both kinds share one node-id space. Directed, each pair is the
+    customer → part edge; ``both_ways`` orients each (cust, part) pair
+    in both directions instead."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    cust, part = ("cust", "part") if both_ways else ("src", "dst")
+    bought = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .select(
+            F.col("o_custkey").alias(cust),
+            (F.col("l_partkey") + F.lit(10_000_000)).alias(part),
+        )
+        .distinct()
+    )
+    if not both_ways:
+        return bought
+    # both directions from ONE pass: a union of two projections would
+    # execute the bought subtree (join + distinct) once per branch;
+    # the explode emits each basket edge twice map-side instead
+    return bought.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("cust").alias("src"), F.col("part").alias("dst")),
+                F.struct(F.col("part").alias("src"), F.col("cust").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
 
 
 PAGERANK_FIXED_SCALE = 10**12  # fixed-point units per 1.0 of rank
@@ -420,228 +501,17 @@ def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     per round, so ranking semantics match the float tier to ~1e-12;
     exact per-node parity of BOTH tiers with pure-Python references
     is additionally pinned in tests/test_graph.py."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    bought = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"),
-            (F.col("l_partkey") + F.lit(10_000_000)).alias("part"),
-        )
-        .distinct()
-    )
-    # both directions from ONE pass: a union of two projections would
-    # execute the bought subtree (join + distinct) once per branch;
-    # the explode emits each basket edge twice map-side instead
-    edges = bought.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("cust").alias("src"), F.col("part").alias("dst")),
-                F.struct(F.col("part").alias("src"), F.col("cust").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    # assume_distinct is structural here: bought is DISTINCT (cust,
-    # part), and the two directions cannot collide because part ids
+    # assume_distinct is structural here: the purchase pairs are
+    # DISTINCT, and the two directions cannot collide because part ids
     # live at +10M — skipping pagerank's defensive DISTINCT saves a
     # full edge-list exchange (~1.2M rows at sf0.1)
     ranks = pagerank(
-        edges,
+        _purchase_edges(spark, sf_dir, both_ways=True),
         n_iter=PAGERANK_COPURCHASE_ITERS,
         assume_distinct=True,
         fixed_scale=PAGERANK_FIXED_SCALE,
     )
     return ranks.select("node", F.col("rank").alias("rank_fp"))
-
-
-def personalized_pagerank_fixed(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    n_iter: int = 10,
-    scale: int = PAGERANK_FIXED_SCALE,
-    assume_distinct: bool = False,
-) -> DataFrame:
-    """Personalized PageRank (teleport confined to a seed set) in the
-    fixed-point integer arithmetic of :func:`pagerank` — the random
-    surfer restarts at a SEED node instead of anywhere, so rank mass
-    measures proximity to the seeds (the standard recommendation /
-    trust-propagation primitive). All-integer update:
-
-        rank' = [seed] · ((dden-dnum)·scale) div (dden·|S|)
-                + (dnum · Σ_in shares) div dden
-                + [seed] · (dnum · dangling) div (dden·|S|)
-
-    so a second engine replays it bit-for-bit (the recursive-CTE
-    oracle on ``graph_ppr_seeded``). Same physical shape as pagerank:
-    below the measured-|V| broadcast gate the per-iteration body is a
-    map-side explode of the persisted in-neighbor adjacency + a
-    broadcast share lookup + an exchange-free aggregation; above it
-    the hash-join path. The seed flag is node-determined and is folded
-    into the adjacency/degree frames ONCE at build (one broadcast
-    join) — zero per-iteration seed cost."""
-    fr = Fraction(str(damping))
-    dnum, dden = fr.numerator, fr.denominator
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        e = e.distinct()
-    e = e.localCheckpoint(eager=False)
-    seed_flags = seeds.select(
-        F.col(seeds.columns[0]).alias("node"), F.lit(1).alias("is_seed")
-    ).distinct()
-    n_seeds = seed_flags.count()  # loop-control scalar (bounded seed set)
-    # r14: deg stays LAZY (the pagerank prelude change) — consumed
-    # once for the head scalars in the broadcast branch, where initial
-    # ranks now read the persisted in_adj; the fallback checkpoints it.
-    deg = (
-        e.select(F.col("src").alias("node"), F.lit(1).alias("w"))
-        .union(e.select(F.col("dst").alias("node"), F.lit(0).alias("w")))
-        .groupBy("node")
-        # occ: max in-degree (= occ − outdeg) for the r15 hub sub-gate
-        # rides the same aggregation (the pagerank head pattern)
-        .agg(
-            F.sum("w").cast("long").alias("outdeg"),
-            F.count(F.lit(1)).cast("long").alias("occ"),
-        )
-        .join(F.broadcast(seed_flags), "node", "left")
-        .select(
-            "node",
-            "outdeg",
-            "occ",
-            F.coalesce("is_seed", F.lit(0)).alias("is_seed"),
-        )
-    )
-    head = deg.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("outdeg").alias("min_outdeg"),
-        F.max(F.col("occ") - F.col("outdeg")).alias("max_indeg"),
-    ).first()
-    n, has_dangling = head["n"], head["min_outdeg"] == 0
-    broadcast_ranks = (
-        n <= _state_broadcast_gate(edges, RANKS_BROADCAST_MAX_NODES)
-        and (head["max_indeg"] or 0) <= ADJ_MAX_NBRS
-    )
-    if broadcast_ranks:
-        nbr_t = e.schema["src"].dataType
-        in_adj = (
-            e.select(
-                F.col("src").alias("node"),
-                F.lit(1).alias("w"),
-                F.lit(None).cast(nbr_t).alias("nbr"),
-            )
-            .union(
-                e.select(
-                    F.col("dst").alias("node"),
-                    F.lit(0).alias("w"),
-                    F.col("src").alias("nbr"),
-                )
-            )
-            .groupBy("node")
-            .agg(
-                F.sum("w").cast("long").alias("outdeg"),
-                F.sort_array(F.collect_list("nbr")).alias("in_nbrs"),
-            )
-            .join(F.broadcast(seed_flags), "node", "left")
-            .select(
-                "node",
-                "outdeg",
-                F.coalesce("is_seed", F.lit(0)).alias("is_seed"),
-                "in_nbrs",
-            )
-            .persist()
-        )
-    else:
-        deg = deg.localCheckpoint(eager=True)  # zero_rows reads it per iter
-        e = e.repartition("src").persist()
-
-    checkpoint_every = 1 if has_dangling else PAGERANK_CHECKPOINT_EVERY
-    base_const = ((dden - dnum) * scale) // (dden * n_seeds)
-    ranks = (in_adj if broadcast_ranks else deg).select(
-        "node",
-        "outdeg",
-        "is_seed",
-        F.when(F.col("is_seed") == 1, F.lit(scale // n_seeds))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rank"),
-    )
-    # r15: loop-invariant Columns/DataFrames built ONCE (the pagerank
-    # hoist — identical expression trees each iteration, a fraction of
-    # the per-build py4j round-trips)
-    has_outdeg = F.col("outdeg") > 0
-    shares_cols = (
-        F.col("node").alias("src_node"),
-        F.expr("rank div outdeg").cast("long").alias("c"),
-    )
-    if broadcast_ranks:
-        ex = in_adj.select(
-            "node",
-            "outdeg",
-            "is_seed",
-            F.explode_outer("in_nbrs").alias("src_nbr"),
-        )
-        lookup_cond = F.col("src_nbr") == F.col("src_node")
-        in_mass_agg = (
-            F.sum(F.coalesce(F.col("c"), F.lit(0).cast("long")))
-            .cast("long")
-            .alias("in_mass")
-        )
-    else:
-        contrib_cond = F.col("src") == F.col("node")
-        contrib_cols = (
-            F.col("dst").alias("node"),
-            F.lit(None).cast("long").alias("deg_row"),
-            F.lit(None).cast("long").alias("seed_row"),
-            F.expr("rank div outdeg").cast("long").alias("c"),
-        )
-        zero_rows = deg.select(
-            "node",
-            F.col("outdeg").alias("deg_row"),
-            F.col("is_seed").cast("long").alias("seed_row"),
-            F.lit(0).cast("long").alias("c"),
-        )
-        step_aggs = (
-            F.max("deg_row").alias("outdeg"),
-            F.max("seed_row").alias("is_seed"),
-            F.sum("c").cast("long").alias("in_mass"),
-        )
-    is_dangling = F.col("outdeg") == 0
-    dangling_agg = (
-        F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("dangling_mass")
-    )
-    upd = F.when(
-        F.col("is_seed") == 1, F.lit(base_const).cast("long")
-    ).otherwise(F.lit(0).cast("long")) + F.expr(
-        f"({dnum} * in_mass) div {dden}"
-    )
-    if has_dangling:
-        upd = upd + F.when(
-            F.col("is_seed") == 1,
-            F.expr(f"({dnum} * dangling_mass) div {dden * n_seeds}"),
-        ).otherwise(F.lit(0).cast("long"))
-    rank_col = upd.cast("long").alias("rank")
-    for it in range(n_iter):
-        if broadcast_ranks:
-            shares = ranks.where(has_outdeg).select(*shares_cols)
-            stepped = (
-                ex.join(F.broadcast(shares), lookup_cond, "left")
-                .groupBy("node", "outdeg", "is_seed")
-                .agg(in_mass_agg)
-            )
-        else:
-            contrib_rows = e.join(ranks, contrib_cond).select(*contrib_cols)
-            stepped = (
-                contrib_rows.union(zero_rows).groupBy("node").agg(*step_aggs)
-            )
-        if has_dangling:
-            dangling = ranks.where(is_dangling).agg(dangling_agg)
-            stepped = stepped.crossJoin(F.broadcast(dangling))
-        ranks = stepped.select("node", "outdeg", "is_seed", rank_col)
-        if (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.select("node", "rank")
 
 
 PPR_N_SEEDS = 10
@@ -697,39 +567,26 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     10 heaviest customers (order count DESC, custkey ASC — a
     deterministic 'power-buyer cohort'): rank mass measures proximity
     to the cohort, the recommendation primitive ('parts bought near
-    the customers who matter'). Fixed-point integer arithmetic
-    throughout (the graph_pagerank_copurchase pattern with a
-    seed-confined teleport), replayed bit-for-bit by the recursive
-    CTE; the seed flag rides the adjacency build — zero
+    the customers who matter'). The graph_pagerank_copurchase run
+    with ``pagerank``'s ``seeds``: the same fixed-point loop with the
+    teleport confined to the cohort, replayed bit-for-bit by the
+    recursive CTE; the seed flag rides the adjacency build — zero
     per-iteration seed cost."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    bought = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"),
-            (F.col("l_partkey") + F.lit(10_000_000)).alias("part"),
-        )
-        .distinct()
-    )
-    edges = bought.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("cust").alias("src"), F.col("part").alias("dst")),
-                F.struct(F.col("part").alias("src"), F.col("cust").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
     # orderBy+limit plans as TakeOrderedAndProject (no global window)
     seeds = (
-        o.groupBy(F.col("o_custkey").alias("node"))
+        load_table(spark, sf_dir, "orders")
+        .groupBy(F.col("o_custkey").alias("node"))
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .orderBy(F.desc("n_orders"), F.asc("node"))
         .limit(PPR_N_SEEDS)
         .select("node")
     )
-    ranks = personalized_pagerank_fixed(
-        edges, seeds, n_iter=PPR_ITERS, assume_distinct=True
+    ranks = pagerank(
+        _purchase_edges(spark, sf_dir, both_ways=True),
+        n_iter=PPR_ITERS,
+        assume_distinct=True,
+        fixed_scale=PAGERANK_FIXED_SCALE,
+        seeds=seeds,
     )
     return ranks.select("node", F.col("rank").alias("rank_fp"))
 
@@ -1039,16 +896,7 @@ def graph_hits_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     the normalization total on the CTE side is the edge-sum identity
     Σ_j raw(j) = Σ_edges hub(src)). Monotone-alignment and mass
     invariants pinned in tests/test_graph.py."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_partkey") + F.lit(10_000_000)).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _purchase_edges(spark, sf_dir, both_ways=False)
     return hits_fixed(edges, assume_distinct=True)
 
 

@@ -138,7 +138,9 @@ ALLOWED_BROADCAST_SITES: dict[tuple[str, str], str] = {
         "per-iteration rank-share table, cardinality-GATED on the "
         "measured |V| (RANKS_BROADCAST_MAX_NODES) with the "
         "hashpartitioned shuffle-join fallback above the gate — the "
-        "tfidf df-gate pattern",
+        "tfidf df-gate pattern. With seeds (personalized PageRank), "
+        "the seed-flag table: a caller-bounded seed set, 10 rows in "
+        "graph_ppr_seeded",
     ("graph.py", "label_propagation"):
         "per-iteration label table, cardinality-GATED on the measured "
         "|V| (LPA_BROADCAST_MAX_NODES) with the hash-join fallback "
@@ -151,12 +153,6 @@ ALLOWED_BROADCAST_SITES: dict[tuple[str, str], str] = {
         "scenario frame (|channels|+1 rows), the 1-row p4_full/eff_sum "
         "scalars — channel-vocabulary-bounded constants, same regime as "
         "markov_attribution",
-    ("graph.py", "personalized_pagerank_fixed"):
-        "seed-flag table (caller-bounded seed set, 10 rows in the "
-        "registered entry), 1-row dangling-mass scalar, and the "
-        "per-iteration share table cardinality-GATED on measured |V| "
-        "(RANKS_BROADCAST_MAX_NODES) with the hash-join fallback — the "
-        "pagerank regime",
     ("graph.py", "_half"):
         "hits_fixed's half-step closure: 1-row normalization-total "
         "scalar (an aggregate) — unconditionally safe; the per-half-"

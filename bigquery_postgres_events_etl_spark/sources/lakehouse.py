@@ -89,7 +89,12 @@ def read_table(
 
 
 def _commit(
-    spark: SparkSession, table_dir: str, note: str, build, epoch: int | None = None
+    spark: SparkSession,
+    table_dir: str,
+    note: str,
+    build,
+    epoch: int | None = None,
+    batch: DataFrame | None = None,
 ) -> dict:
     """Publish one new version under the table's lock; returns
     ``{"version", "rows"}``.
@@ -105,11 +110,18 @@ def _commit(
     and a new one joins the ledger in the SAME manifest publish as the
     version pointer — a crash after the snapshot write but before the
     publish leaves the ledger un-advanced, so the replay overwrites
-    the unpublished version dir and publishes once."""
+    the unpublished version dir and publishes once. ``batch`` is the
+    micro-batch behind ``epoch``: when a new epoch's batch holds no row
+    (one take job), the epoch joins the ledger and no version is
+    published."""
     with TargetLock(table_dir):
         m = _read_manifest(table_dir)
         if epoch is not None and str(epoch) in m.get("applied_epochs", []):
             return {"version": m["current"], "rows": None, "skipped_epoch": epoch}
+        if epoch is not None and batch is not None and batch.isEmpty():
+            m.setdefault("applied_epochs", []).append(str(epoch))
+            _publish_manifest(table_dir, m)
+            return {"version": m["current"], "rows": 0}
         if callable(build):
             cur = m["current"]
             build = build(spark.read.parquet(_version_dir(table_dir, cur)) if cur else None)
@@ -229,7 +241,9 @@ def apply_changelog(
 
     ``epoch`` (streaming use — see ``run_streaming_cdc_to_lake``)
     makes the apply EXACTLY-ONCE per micro-batch through the
-    manifest's epoch ledger (see ``_commit``)."""
+    manifest's epoch ledger (see ``_commit``): a replayed epoch runs
+    no Spark job, and a new epoch whose batch holds no row joins the
+    ledger without publishing a version."""
     cols = key_cols + [c for c in changes.columns if c not in key_cols and c != op_col]
 
     def build(base):
@@ -237,7 +251,7 @@ def apply_changelog(
         survived = F.col("u.__present").isNull() | (F.col(f"u.{op_col}") != "D")
         return j.where(survived).select(*_upserted(cols))
 
-    return _commit(spark, table_dir, f"changelog on {key_cols}", build, epoch)
+    return _commit(spark, table_dir, f"changelog on {key_cols}", build, epoch, changes)
 
 
 def checked_write(
@@ -402,14 +416,17 @@ def purge_keys(
         rows_removed = 0
         if affected:
             paths = [os.path.join(cur_dir, f) for f in affected]
-            src = spark.read.parquet(*paths)
-            rows_removed = src.where(F.col(key_col).isin(list(key_set))).count()
+            doomed = F.col(key_col).isin(list(key_set))
+            removed = Observation()  # counted on the rewrite job itself
             rewrite_dir = os.path.join(tmp_dir, "_rewrite")
             (
-                src.where(~F.col(key_col).isin(list(key_set)))
+                spark.read.parquet(*paths)
+                .observe(removed, F.count_if(doomed).alias("n"))
+                .where(~doomed)
                 .write.mode("overwrite")
                 .parquet(rewrite_dir)
             )
+            rows_removed = removed.get["n"]
             for i, part in enumerate(
                 sorted(p for p in os.listdir(rewrite_dir) if p.endswith(".parquet"))
             ):

@@ -113,6 +113,8 @@ def _drain_foreach_batch(stream: DataFrame, checkpoint_dir: str, sink) -> dict:
     return {
         "status": "success",
         "batch_id": progress["batchId"] if progress else None,
+        # the Spark job group of every job the run (sink included) ran
+        "run_id": str(q.runId),
     }
 
 
@@ -183,51 +185,22 @@ def run_streaming_etl(
 
 
 def streaming_purchase_click_join(
-    purchases: DataFrame, clicks: DataFrame, within: str = "1 hour"
+    purchases: DataFrame, clicks: DataFrame, within: str = "1 hour", how: str = "inner"
 ) -> DataFrame:
-    """Stream-stream inner join: each purchase joined to same-user
-    clicks in the preceding ``within`` interval.
+    """Stream-stream join: each purchase joined to same-user clicks in
+    the preceding ``within`` interval.
 
     Both sides carry watermarks so Spark can bound the join state
     buffer (clicks older than purchase-watermark − within are
     evicted) — the streaming twin of the batch as-of/range join.
-    """
-    from pyspark.sql import functions as F
 
-    p = (
-        purchases.withWatermark("ts", "30 minutes")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    c = (
-        clicks.withWatermark("ts", "30 minutes")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-    )
-    return p.join(
-        c,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {within}")),
-    ).select("purchase_id", "p_user", "p_ts", "click_id", "c_ts")
-
-
-def streaming_purchase_click_left_join(
-    purchases: DataFrame, clicks: DataFrame, within: str = "1 hour"
-) -> DataFrame:
-    """Stream-stream LEFT OUTER join: like the inner variant, but a
-    purchase with no click in its window is still emitted (NULL click)
-    — *after* the click-side watermark passes the window's end, which
-    is when the engine can prove no match will ever arrive. The
-    outer-ness is therefore watermark-delayed by design: unmatched
-    rows surface in a later micro-batch, not the one that read them
-    (tests/test_streaming_outer.py drives two triggers to show it).
+    ``how="left"``: a purchase with no click in its window is still
+    emitted (NULL click) — *after* the click-side watermark passes the
+    window's end, which is when the engine can prove no match will
+    ever arrive. The outer-ness is therefore watermark-delayed by
+    design: unmatched rows surface in a later micro-batch, not the one
+    that read them (tests/test_streaming_outer.py drives two triggers
+    to show it).
     """
     p = purchases.withWatermark("ts", "30 minutes").select(
         F.col("event_id").alias("purchase_id"),
@@ -244,7 +217,7 @@ def streaming_purchase_click_left_join(
         (F.col("p_user") == F.col("c_user"))
         & (F.col("c_ts") <= F.col("p_ts"))
         & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {within}")),
-        "leftOuter",
+        how,
     ).select("purchase_id", "p_user", "p_ts", "click_id", "c_ts")
 
 
@@ -334,7 +307,11 @@ def run_streaming_cdc_to_lake(
     entry commits in the same atomic manifest publish as the version
     pointer, so a replayed batch (sink crashed after the snapshot
     write, before checkpoint commit) is a no-op and a half-written
-    version dir is simply overwritten on retry.
+    version dir is simply overwritten on retry. The ledger is checked
+    first, so a replayed batch runs no Spark job; a new batch with no
+    row joins the ledger without publishing a version. Returns the
+    current ``version`` and the query's ``run_id``, the job group of
+    every job the run ran (read it with ``bench.group_metrics``).
 
     At 100 TB this is the Delta/Iceberg "merge into from a CDC feed"
     loop rebuilt from primitives: per-batch cost is one keyed join of
@@ -352,12 +329,10 @@ def run_streaming_cdc_to_lake(
     changes = reader.parquet(changes_dir)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         apply_changelog(spark, table_dir, batch_df, key_cols, epoch=epoch_id)
 
-    _drain_foreach_batch(changes, checkpoint_dir, sink)
-    return {"version": current_version(table_dir)}
+    res = _drain_foreach_batch(changes, checkpoint_dir, sink)
+    return {"version": current_version(table_dir), "run_id": res["run_id"]}
 
 
 def value_histogram_ref(events: DataFrame, bin_width: float = 50.0) -> DataFrame:

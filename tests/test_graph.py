@@ -186,7 +186,9 @@ def test_pagerank_shuffle_fallback_matches_broadcast_path(spark):
     }
     got_pb = {
         r.node: r.rank
-        for r in graph.personalized_pagerank_fixed(df, seeds, n_iter=6).collect()
+        for r in graph.pagerank(
+            df, n_iter=6, fixed_scale=graph.PAGERANK_FIXED_SCALE, seeds=seeds
+        ).collect()
     }
     old = graph.RANKS_BROADCAST_MAX_NODES
     graph.RANKS_BROADCAST_MAX_NODES = 0  # force the shuffle path
@@ -198,8 +200,8 @@ def test_pagerank_shuffle_fallback_matches_broadcast_path(spark):
         }
         got_ps = {
             r.node: r.rank
-            for r in graph.personalized_pagerank_fixed(
-                df, seeds, n_iter=6
+            for r in graph.pagerank(
+                df, n_iter=6, fixed_scale=graph.PAGERANK_FIXED_SCALE, seeds=seeds
             ).collect()
         }
     finally:
@@ -261,7 +263,7 @@ def test_markov_driver_tail_matches_distributed_tail(spark):
 
 def _reference_ppr_fixed(edge_list, seeds, scale, dnum=17, dden=20, n_iter=8):
     """Pure-Python integer personalized PageRank mirroring
-    personalized_pagerank_fixed (teleport confined to seeds)."""
+    pagerank's seeds mode (teleport confined to seeds)."""
     nodes = sorted({u for u, _ in edge_list} | {v for _, v in edge_list})
     out = {}
     for u, v in set(edge_list):
@@ -286,8 +288,10 @@ def _reference_ppr_fixed(edge_list, seeds, scale, dnum=17, dden=20, n_iter=8):
 
 
 def test_personalized_pagerank_fixed_matches_integer_reference(spark):
+    import pytest
+
     from bigquery_postgres_events_etl_spark.operators.graph import (
-        personalized_pagerank_fixed,
+        PAGERANK_FIXED_SCALE,
     )
 
     edges = [(2, 1), (3, 1), (4, 1), (1, 4), (3, 2), (5, 1), (5, 2), (2, 4)]
@@ -295,7 +299,9 @@ def test_personalized_pagerank_fixed_matches_integer_reference(spark):
     seeds = spark.createDataFrame([(1,), (5,)], ["node"])
     got = {
         r.node: r.rank
-        for r in personalized_pagerank_fixed(df, seeds, n_iter=8).collect()
+        for r in pagerank(
+            df, n_iter=8, fixed_scale=PAGERANK_FIXED_SCALE, seeds=seeds
+        ).collect()
     }
     want = _reference_ppr_fixed(edges, {1, 5}, 10**12, n_iter=8)
     assert got == want  # exact integers, dangling node 4 covered
@@ -303,6 +309,8 @@ def test_personalized_pagerank_fixed_matches_integer_reference(spark):
     # seed-remote source (3, no in-edges, not a seed -> exactly 0)
     assert got[3] == 0
     assert got[1] > got[4] > 0
+    with pytest.raises(ValueError):  # seeds exist only in the fixed-point tier
+        pagerank(df, seeds=seeds)
 
 
 def test_ppr_seeded_entry_invariants(spark, sf_dir):
@@ -430,9 +438,9 @@ def test_hub_degree_subgate_forces_flat_edge_paths(spark):
     the same exact-integer chain. Forced by zeroing the sub-gate."""
     from bigquery_postgres_events_etl_spark.operators import graph
     from bigquery_postgres_events_etl_spark.operators.graph import (
+        PAGERANK_FIXED_SCALE,
         hits_fixed,
         pagerank,
-        personalized_pagerank_fixed,
     )
 
     edges = [(1, 10), (1, 11), (2, 10), (3, 12), (2, 11), (3, 10), (4, 12), (10, 4)]
@@ -448,7 +456,9 @@ def test_hub_degree_subgate_forces_flat_edge_paths(spark):
             },
             {
                 r.node: r.rank
-                for r in personalized_pagerank_fixed(df, seeds, n_iter=3).collect()
+                for r in pagerank(
+                    df, n_iter=3, fixed_scale=PAGERANK_FIXED_SCALE, seeds=seeds
+                ).collect()
             },
         )
 

@@ -289,6 +289,7 @@ def test_purge_keys_rewrites_only_affected_files_and_scrubs_history(
     that time travel can undo is not an erasure."""
     import hashlib
 
+    from bench import group_metrics
     from bigquery_postgres_events_etl_spark.sources.lakehouse import (
         current_version,
         purge_keys,
@@ -323,7 +324,15 @@ def test_purge_keys_rewrites_only_affected_files_and_scrubs_history(
         r.c_custkey
         for r in read_table(spark, target).orderBy("c_custkey").limit(3).collect()
     ]
-    stats = purge_keys(spark, target, "c_custkey", doomed)
+    sc = spark.sparkContext
+    sc.setJobGroup("purge-keys", "purge-keys")
+    try:
+        stats = purge_keys(spark, target, "c_custkey", doomed)
+    finally:
+        sc._jsc.clearJobGroup()
+    # rows_removed is observed on the rewrite: the affected file's
+    # schema read and the rewrite are the only jobs (no count pass)
+    assert group_metrics(spark, "purge-keys")["jobs"] == 2
 
     after = read_table(spark, target)
     assert after.where(F.col("c_custkey").isin(doomed)).count() == 0
@@ -359,6 +368,7 @@ def test_streaming_cdc_apply_matches_batch_and_replays_idempotently(
     exactly-once effect."""
     import json as _json
 
+    from bench import group_metrics
     from bigquery_postgres_events_etl_spark.sources.lakehouse import (
         current_version,
         read_table,
@@ -393,6 +403,10 @@ def test_streaming_cdc_apply_matches_batch_and_replays_idempotently(
     spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(
         str(changes_dir)
     )
+    # a zero-row changelog file: its epoch must publish no version
+    spark.createDataFrame([], schema).coalesce(1).write.mode("append").parquet(
+        str(changes_dir)
+    )
 
     run_streaming_cdc_to_lake(
         spark, str(changes_dir), target, str(tmp_path / "ck1"),
@@ -404,13 +418,16 @@ def test_streaming_cdc_apply_matches_batch_and_replays_idempotently(
     assert got[999001] == ("new-1-renamed", 6.0)
     assert len(got) == 50 - 2 + 1
     v_after = current_version(target)
+    assert v_after == 3  # bootstrap + the two non-empty epochs
 
     # fresh checkpoint = the stream replays every file; the ledger
-    # must swallow every epoch without publishing a version
-    run_streaming_cdc_to_lake(
+    # must swallow every epoch without publishing a version, and
+    # without running a Spark job
+    replay = run_streaming_cdc_to_lake(
         spark, str(changes_dir), target, str(tmp_path / "ck2"),
         ["c_custkey"], schema, max_files_per_trigger=1,
     )
+    assert group_metrics(spark, replay["run_id"])["jobs"] == 0
     assert current_version(target) == v_after
     again = {r.c_custkey: (r.c_name, r.c_acctbal) for r in read_table(spark, target).collect()}
     assert again == got

@@ -9,7 +9,7 @@ import pandas as pd
 
 from bigquery_postgres_events_etl_spark.streaming.stream import (
     read_events_stream,
-    streaming_purchase_click_left_join,
+    streaming_purchase_click_join,
 )
 
 
@@ -31,7 +31,7 @@ def _run(spark, src, ckpt, out):
     events = read_events_stream(spark, src)
     purchases = events.where("event_type = 'purchase'")
     clicks = events.where("event_type = 'click'")
-    joined = streaming_purchase_click_left_join(purchases, clicks)
+    joined = streaming_purchase_click_join(purchases, clicks, how="left")
     q = (
         joined.writeStream.outputMode("append")
         .format("parquet")
