@@ -57,6 +57,7 @@ def _read_manifest(table_dir: str) -> dict:
 
 
 def _publish_manifest(table_dir: str, manifest: dict) -> None:
+    os.makedirs(table_dir, exist_ok=True)  # a ledger-only publish may come first
     tmp = _manifest_path(table_dir) + ".tmp"
     with open(tmp, "w") as f:
         json.dump(manifest, f)
@@ -89,12 +90,7 @@ def read_table(
 
 
 def _commit(
-    spark: SparkSession,
-    table_dir: str,
-    note: str,
-    build,
-    epoch: int | None = None,
-    batch: DataFrame | None = None,
+    spark: SparkSession, table_dir: str, note: str, build, epoch: int | None = None
 ) -> dict:
     """Publish one new version under the table's lock; returns
     ``{"version", "rows"}``.
@@ -102,7 +98,9 @@ def _commit(
     ``build`` is the new snapshot, or a function of the current one
     (None for an empty table) that returns it; only a function makes
     the current snapshot be read. Its rows are counted by an
-    ``Observation`` on the one write job.
+    ``Observation`` on the one write job. A function that returns None
+    has nothing to publish: no version is written, and ``epoch`` (if
+    any) still joins the ledger.
 
     ``epoch`` makes the commit exactly-once per micro-batch: an epoch
     already in the manifest's ``applied_epochs`` ledger returns
@@ -110,34 +108,30 @@ def _commit(
     and a new one joins the ledger in the SAME manifest publish as the
     version pointer — a crash after the snapshot write but before the
     publish leaves the ledger un-advanced, so the replay overwrites
-    the unpublished version dir and publishes once. ``batch`` is the
-    micro-batch behind ``epoch``: when a new epoch's batch holds no row
-    (one take job), the epoch joins the ledger and no version is
-    published."""
+    the unpublished version dir and publishes once."""
     with TargetLock(table_dir):
         m = _read_manifest(table_dir)
         if epoch is not None and str(epoch) in m.get("applied_epochs", []):
             return {"version": m["current"], "rows": None, "skipped_epoch": epoch}
-        if epoch is not None and batch is not None and batch.isEmpty():
-            m.setdefault("applied_epochs", []).append(str(epoch))
-            _publish_manifest(table_dir, m)
-            return {"version": m["current"], "rows": 0}
         if callable(build):
             cur = m["current"]
             build = build(spark.read.parquet(_version_dir(table_dir, cur)) if cur else None)
-        v = _next_version(m)
-        rows = Observation()
-        (
-            build.observe(rows, F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(_version_dir(table_dir, v))
-        )
-        m["versions"][str(v)] = {"note": note}
-        m["current"] = v
+        rows = 0
+        if build is not None:
+            v = _next_version(m)
+            obs = Observation()
+            (
+                build.observe(obs, F.count(F.lit(1)).alias("n"))
+                .write.mode("overwrite")
+                .parquet(_version_dir(table_dir, v))
+            )
+            m["versions"][str(v)] = {"note": note}
+            m["current"] = v
+            rows = obs.get["n"]
         if epoch is not None:
             m.setdefault("applied_epochs", []).append(str(epoch))
         _publish_manifest(table_dir, m)
-        return {"version": v, "rows": rows.get["n"]}
+        return {"version": m["current"], "rows": rows}
 
 
 def _join_on_keys(
@@ -242,16 +236,18 @@ def apply_changelog(
     ``epoch`` (streaming use — see ``run_streaming_cdc_to_lake``)
     makes the apply EXACTLY-ONCE per micro-batch through the
     manifest's epoch ledger (see ``_commit``): a replayed epoch runs
-    no Spark job, and a new epoch whose batch holds no row joins the
-    ledger without publishing a version."""
+    no Spark job. A batch with no row publishes no version (one take
+    job); its epoch still joins the ledger."""
     cols = key_cols + [c for c in changes.columns if c not in key_cols and c != op_col]
 
     def build(base):
+        if changes.isEmpty():
+            return None
         j = _join_on_keys(base, changes, key_cols, changes.drop(op_col).schema)
         survived = F.col("u.__present").isNull() | (F.col(f"u.{op_col}") != "D")
         return j.where(survived).select(*_upserted(cols))
 
-    return _commit(spark, table_dir, f"changelog on {key_cols}", build, epoch, changes)
+    return _commit(spark, table_dir, f"changelog on {key_cols}", build, epoch)
 
 
 def checked_write(
@@ -416,7 +412,8 @@ def purge_keys(
         rows_removed = 0
         if affected:
             paths = [os.path.join(cur_dir, f) for f in affected]
-            doomed = F.col(key_col).isin(list(key_set))
+            # a NULL key is never doomed (isin gives NULL, not False)
+            doomed = F.coalesce(F.col(key_col).isin(list(key_set)), F.lit(False))
             removed = Observation()  # counted on the rewrite job itself
             rewrite_dir = os.path.join(tmp_dir, "_rewrite")
             (
@@ -479,7 +476,8 @@ def merge_additive(
     ``key_cols`` or precompute). A key repeated in ``delta`` raises
     ValueError (pre-aggregate the delta per key). ``epoch`` gives
     exactly-once per micro-batch via the same manifest ledger as
-    :func:`apply_changelog`."""
+    :func:`apply_changelog`, and an empty delta, like an empty
+    changelog, publishes no version."""
     bad = [c for c in delta.columns if c not in key_cols and c not in add_cols]
     if bad:
         raise ValueError(
@@ -488,6 +486,8 @@ def merge_additive(
         )
 
     def build(base):
+        if delta.isEmpty():
+            return None
         return _join_on_keys(base, delta, key_cols, delta.schema).select(
             *_upserted(key_cols),
             *[

@@ -304,8 +304,15 @@ def test_purge_keys_rewrites_only_affected_files_and_scrubs_history(
     # range-partition on the key → files carry disjoint key ranges, so
     # footer stats can actually prune
     write_snapshot(users.repartitionByRange(6, "c_custkey"), target, note="bootstrap")
+    # plus one NULL-keyed row in its own file: a file without min/max
+    # stats is rewritten, and a NULL key is never a purge target
+    anon = users.limit(1).withColumn(
+        "c_custkey", F.lit(None).cast(users.schema["c_custkey"].dataType)
+    )
     write_snapshot(
-        read_table(spark, target).where(F.lit(True)), target, note="second version"
+        read_table(spark, target).where(F.lit(True)).unionByName(anon),
+        target,
+        note="second version",
     )
     v_before = current_version(target)
     cur_dir = os.path.join(target, f"v={v_before}")
@@ -317,12 +324,16 @@ def test_purge_keys_rewrites_only_affected_files_and_scrubs_history(
 
     total = read_table(spark, target).count()
     # the three smallest keys: only the file holding the smallest key
-    # has a footer range that can contain them. The second version's
+    # (and the NULL-keyed file) can contain them. The second version's
     # files have overlapping key ranges, so three arbitrary keys can
     # fall inside every file's range and leave nothing to carry over.
     doomed = [
         r.c_custkey
-        for r in read_table(spark, target).orderBy("c_custkey").limit(3).collect()
+        for r in read_table(spark, target)
+        .where(F.col("c_custkey").isNotNull())
+        .orderBy("c_custkey")
+        .limit(3)
+        .collect()
     ]
     sc = spark.sparkContext
     sc.setJobGroup("purge-keys", "purge-keys")
@@ -336,6 +347,7 @@ def test_purge_keys_rewrites_only_affected_files_and_scrubs_history(
 
     after = read_table(spark, target)
     assert after.where(F.col("c_custkey").isin(doomed)).count() == 0
+    assert after.where(F.col("c_custkey").isNull()).count() == 1
     assert after.count() == total - stats["rows_removed"]
     assert stats["rows_removed"] == len(doomed)
     # pruning really pruned: not every file was rewritten, and the
@@ -435,6 +447,46 @@ def test_streaming_cdc_apply_matches_batch_and_replays_idempotently(
     assert len(m["applied_epochs"]) >= 1
 
 
+def test_empty_first_epoch_on_a_new_table_joins_the_ledger_only(spark, tmp_path):
+    """An epoch whose batch holds no row publishes no version but joins
+    the ledger, also when the table directory does not exist yet (the
+    first changelog file of a stream into a new table can be empty)."""
+    from bigquery_postgres_events_etl_spark.sources.lakehouse import (
+        apply_changelog,
+        current_version,
+        read_table,
+    )
+    from bigquery_postgres_events_etl_spark.streaming.stream import (
+        run_streaming_cdc_to_lake,
+    )
+
+    def ledger(table):
+        return json.load(open(os.path.join(table, "_manifest.json")))["applied_epochs"]
+
+    schema = "op STRING, c_custkey BIGINT, c_name STRING"
+    empty = spark.createDataFrame([], schema)
+    changes_dir = str(tmp_path / "changes")
+    empty.coalesce(1).write.parquet(changes_dir)
+
+    streamed = str(tmp_path / "streamed_lake")
+    r = run_streaming_cdc_to_lake(
+        spark, changes_dir, streamed, str(tmp_path / "ck"), ["c_custkey"], schema
+    )
+    assert r["version"] == current_version(streamed) == 0
+    assert ledger(streamed) == ["0"]
+
+    direct = str(tmp_path / "direct_lake")
+    assert apply_changelog(spark, direct, empty, ["c_custkey"], epoch=7) == {
+        "version": 0,
+        "rows": 0,
+    }
+    assert current_version(direct) == 0 and ledger(direct) == ["7"]
+    one = spark.createDataFrame([("I", 1, "a")], schema)
+    assert apply_changelog(spark, direct, one, ["c_custkey"], epoch=8)["version"] == 1
+    assert ledger(direct) == ["7", "8"]
+    assert [tuple(x) for x in read_table(spark, direct).collect()] == [(1, "a")]
+
+
 def test_merge_additive_equals_full_recompute(spark, sf_dir, tmp_path):
     """Folding per-day partial states into the rollup table one day
     at a time must end in EXACTLY the state a full aggregation over
@@ -507,6 +559,9 @@ def test_merge_additive_equals_full_recompute(spark, sf_dir, tmp_path):
     small = str(tmp_path / "small")
     kn = "k BIGINT, n BIGINT"
     merge_additive(spark, small, spark.createDataFrame([(1, 5)], kn), ["k"], ["n"])
+    # an empty delta publishes no version; its epoch joins the ledger
+    r = merge_additive(spark, small, spark.createDataFrame([], kn), ["k"], ["n"], epoch=0)
+    assert r == {"version": 1, "rows": 0} and current_version(small) == 1
     with pytest.raises(ValueError, match="duplicate keys"):
         merge_additive(
             spark, small, spark.createDataFrame([(1, 2), (1, 3)], kn), ["k"], ["n"]
