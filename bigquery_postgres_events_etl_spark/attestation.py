@@ -63,6 +63,9 @@ PLAN_CHANGED_REATTEST: dict[str, int] = {
     # Values are identical wherever the old round-trip was lossless;
     # the plan changed (one fewer cast pair), so re-attest:
     "ml_eval_conformal": 15,
+    # Large/Small-Star deleted: the entry now runs connected_components;
+    # the engine-side algorithm changed, the output contract did not
+    "dedup_cluster_star": 16,
 }
 
 

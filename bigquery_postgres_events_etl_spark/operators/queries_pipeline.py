@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table, parallelize
 from ..registry import register
-from .cluster import dup_clusters
+from .cluster import connected_components, dup_clusters
 from .dedup import minhash_lsh_pairs
 from .pipeline import (
     CHUNK_STRIDE,
@@ -289,16 +289,13 @@ def pipeline_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """),
 )
 def dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris
-    et al.) over the same LSH pairs — the O(log n)-rounds tier that
-    stays fast on adversarial long-chain pair graphs where min-label
-    propagation needs O(diameter) rounds. Same recursive-closure
-    oracle as dedup_dup_clusters (both compute comp = min reachable
-    node); also equals the union-find oracle in pytest."""
-    from .cluster import connected_components_star
-
+    """Bare connected components over the same LSH pairs: (doc_id,
+    cluster_id) from ``cluster.connected_components``, without
+    dup_clusters' size and canonical columns. Same recursive-closure
+    oracle as dedup_dup_clusters (comp = min reachable node); the
+    name is kept for the registry."""
     pairs = minhash_lsh_pairs(parallelize(load_table(spark, sf_dir, "documents")))
-    return connected_components_star(pairs).select(
+    return connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
     )
 

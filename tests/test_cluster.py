@@ -4,6 +4,9 @@ rows-only registry entry's real check)."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from bigquery_postgres_events_etl_spark.io import load_table, parallelize
@@ -47,13 +50,27 @@ def test_connected_components_equal_union_find(spark, sf_dir):
     assert got == want
 
 
-def test_connected_components_chain(spark):
+@pytest.mark.parametrize(
+    "n_edges, partitions, shuffled",
+    [(20, None, False), (300, 8, False), (300, 8, True)],
+    ids=["20_edges", "300_edges_8_parts", "300_edges_8_parts_shuffled"],
+)
+def test_connected_components_chain(spark, n_edges, partitions, shuffled):
     """A long path graph exercises multi-round propagation (worst-case
-    diameter), not just the near-clique dup shape."""
-    chain = [(i, i + 1) for i in range(0, 20)]
+    diameter), not just the near-clique dup shape. The 300-edge chains
+    over 8 partitions run at the default max_iter: hop steps alone
+    would need about 300 rounds, so the ordered chain fails without
+    pointer jumping, and the one with shuffled ids fails without the
+    hook step."""
+    ids = list(range(n_edges + 1))
+    if shuffled:
+        random.Random(7).shuffle(ids)
+    chain = [(ids[i], ids[i + 1]) for i in range(n_edges)]
     df = spark.createDataFrame(chain, ["doc_a", "doc_b"])
+    if partitions:
+        df = df.repartition(partitions)
     got = {r.node: r.comp for r in connected_components(df).collect()}
-    assert got == {i: 0 for i in range(0, 21)}
+    assert got == _union_find(chain) == {i: 0 for i in range(n_edges + 1)}
 
 
 def test_dup_clusters_canonical_and_sizes(spark, sf_dir):
@@ -77,39 +94,9 @@ def test_dup_clusters_canonical_and_sizes(spark, sf_dir):
     assert n_total - n_keep == sum(len(m) - 1 for m in by_cluster.values())
 
 
-def test_star_components_equal_union_find(spark, sf_dir):
-    from bigquery_postgres_events_etl_spark.operators.cluster import (
-        connected_components_star,
-    )
-
-    pairs_df = minhash_lsh_pairs(parallelize(load_table(spark, sf_dir, "documents")))
-    pairs = [(r.doc_a, r.doc_b) for r in pairs_df.collect()]
-    got = {r.node: r.comp for r in connected_components_star(pairs_df).collect()}
-    assert got == _union_find(pairs)
-
-
-def test_star_components_adversarial_chain(spark):
-    """A 300-node path has diameter 299 — beyond any reasonable
-    O(diameter) budget; large-star/small-star must converge in
-    O(log n) ≈ 9 rounds (max_iter=20 is the proof)."""
-    from bigquery_postgres_events_etl_spark.operators.cluster import (
-        connected_components_star,
-    )
-
-    n = 300
-    chain = [(i, i + 1) for i in range(n)]
-    df = spark.createDataFrame(chain, ["doc_a", "doc_b"]).repartition(8)
-    got = {
-        r.node: r.comp for r in connected_components_star(df, max_iter=20).collect()
-    }
-    assert got == {i: 0 for i in range(n + 1)}
-
-
 def test_pointer_jumping_raises_on_nonconvergence(spark):
     """The max_iter backstop must be loud, not a silent truncation
     that emits split clusters."""
-    import pytest
-
     chain = [(i, i + 1) for i in range(0, 40)]
     df = spark.createDataFrame(chain, ["doc_a", "doc_b"])
     with pytest.raises(RuntimeError, match="did not converge"):
@@ -119,8 +106,6 @@ def test_pointer_jumping_raises_on_nonconvergence(spark):
 def test_connected_components_release_the_edge_cache(spark):
     """The persisted edge frame is dropped on both loop exits; the
     returned labels are checkpointed and stay readable without it."""
-    import pytest
-
     from bigquery_postgres_events_etl_spark.cache import cached_dataframe_plans
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(0, 40)], ["doc_a", "doc_b"])

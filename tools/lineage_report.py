@@ -25,7 +25,7 @@ ITERATIVE = {
     "text_bpe_train_merges": "documents(text) once for word counts; merge loop touches the vocab table only",
     "similarity_mmr_topk": "embeddings(vec_id,embedding,label); greedy rounds over the bounded candidate frame",
     "dedup_dup_clusters": "documents via LSH pairs; label-propagation rounds over the pair graph",
-    "dedup_cluster_star": "same as dedup_dup_clusters (large-star/small-star rounds)",
+    "dedup_cluster_star": "same as dedup_dup_clusters (the same label-propagation rounds, no cluster-size window)",
     "ml_logreg_train": "events(user_id,event_type) → per-user features; one aggregated scan per GD step",
     "ml_perceptron_train": "events(user_id,event_type) → per-user integer features; one aggregated scan per epoch, (k+2)-value scalar row to the driver",
     "pipeline_kcenter_coreset": "embeddings(vec_id,embedding); per greedy round one argmax aggregation + one dmin-update map against the 1-row new center, state checkpointed",
